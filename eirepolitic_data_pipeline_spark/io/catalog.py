@@ -29,13 +29,16 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 
 from . import atomic
 from dataclasses import dataclass
-from typing import Optional
+from typing import Callable, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def _path_digest(path: str) -> str:
@@ -61,6 +64,36 @@ def is_path_not_found(e: Exception) -> bool:
     get_cond = getattr(e, "getCondition", None) or \
         getattr(e, "getErrorClass", None)
     return get_cond is not None and get_cond() == "PATH_NOT_FOUND"
+
+
+#: how long ``observed`` waits for an observation's metrics
+OBSERVATION_TIMEOUT_S = 600.0
+
+
+def observed(observation: Observation) -> dict:
+    """The metrics of an Observation whose action has ALREADY finished.
+
+    Spark fills an observation from its listener bus, shortly after the
+    action returns; ``Observation.get`` waits for that with no bound, so
+    an observation no action carried (a plan that pruned it, a dropped
+    listener event) would hang the caller. This waits at most
+    ``OBSERVATION_TIMEOUT_S`` and then fails loudly. (A Spark Connect
+    observation has no JVM handle; its metrics arrive with the action's
+    result.)"""
+    jo = getattr(observation, "_jo", None)
+    if jo is not None:
+        future = jo.future()
+        deadline = time.monotonic() + OBSERVATION_TIMEOUT_S
+        pause = 0.001
+        while not future.isCompleted():
+            if time.monotonic() > deadline:
+                raise CatalogError(
+                    f"observed metrics not reported within "
+                    f"{OBSERVATION_TIMEOUT_S:.0f} s of the action that "
+                    "carried them")
+            time.sleep(pause)
+            pause = min(2 * pause, 0.01)
+    return observation.get
 
 
 @dataclass
@@ -226,7 +259,8 @@ class BatchCatalog:
     def write_table(self, df: DataFrame, table: str, batch_id: Optional[str],
                     status: str = "ok", overwrite: bool = False,
                     partition_by: tuple = (), bucket_by: tuple = (),
-                    num_buckets: int = 0, merge_pk: tuple = ()):
+                    num_buckets: int = 0, merge_pk: tuple = (),
+                    check: Optional[Callable[[], None]] = None):
         """Candidate write — always lands in a batch dir.
 
         A production-bound write without a batch id is refused, mirroring the
@@ -243,6 +277,11 @@ class BatchCatalog:
         partitioning). The bucketing is recorded in the manifest so
         ``read_table`` can re-attach it in any later session — parquet
         files alone don't carry it.
+
+        ``check`` runs after the files land and before the table enters
+        the manifest (the write's own observed metrics are readable by
+        then); if it raises, the landed files are removed and the error
+        propagates, so the batch never records the table.
         """
         if not batch_id:
             raise CatalogError(
@@ -259,7 +298,14 @@ class BatchCatalog:
         self._refuse_if_promoted(batch_id)
         path = self.batch_path(batch_id, table)
         atomic.heal_interrupted_swap(path)
-        if overwrite and os.path.isdir(path):
+        # The row count is observed IN the write job, not counted after it:
+        # counting the plan executes it a second time, and counting the
+        # committed files costs a schema-inference job plus a count job.
+        rows = Observation()
+        df = df.observe(rows, F.count(F.lit(1)).alias("rows"))
+        swap = overwrite and os.path.isdir(path)
+        target = path
+        if swap:
             # Atomic-swap overwrite: the incoming plan may READ the current
             # table dir (accumulating merge writers do), and an in-place
             # overwrite that fails mid-write destroys the only copy of every
@@ -269,9 +315,9 @@ class BatchCatalog:
             # writer's next touch. (On a rename-less object store this step
             # would be a manifest/pointer update instead, exactly like
             # promote()'s pointer write.)
-            tmp = atomic.incoming_path(path)
-            self._write_files(df, tmp, partition_by, bucket_by, num_buckets)
-            atomic.swap_in(path)
+            target = atomic.incoming_path(path)
+            self._write_files(df, target, partition_by, bucket_by,
+                              num_buckets)
         elif bucket_by:
             if os.path.isdir(path):  # saveAsTable checks table, not path
                 raise CatalogError(
@@ -280,12 +326,17 @@ class BatchCatalog:
         else:
             mode = "overwrite" if overwrite else "errorifexists"
             self._writer(df, mode, partition_by).parquet(path)
-        # Count from the COMMITTED parquet footers, not a pre-write
-        # df.count(): counting the plan executes it a second time (2x cost,
-        # and a non-deterministic enrichment stage could make the manifest
-        # disagree with the rows actually written). The footer count is a
-        # metadata read.
-        row_count = df.sparkSession.read.parquet(path).count()
+        try:
+            row_count = int(observed(rows)["rows"])
+            if check is not None:
+                check()
+        except BaseException:
+            # nothing between the landed files and record_table may leave
+            # them behind: a retry into this batch would hit them
+            shutil.rmtree(target, ignore_errors=True)
+            raise
+        if swap:
+            atomic.swap_in(path)
         self.record_table(batch_id, table, row_count, status,
                           replace=overwrite, partition_by=partition_by,
                           bucket_by=bucket_by, num_buckets=num_buckets,
@@ -346,8 +397,13 @@ class BatchCatalog:
         return table in self._load_manifest(batch_id).get("tables", {})
 
     def read_table(self, spark: SparkSession, table: str,
-                   batch_id: Optional[str] = None) -> DataFrame:
+                   batch_id: Optional[str] = None,
+                   schema: Optional[StructType] = None) -> DataFrame:
         """Read a table; production reads resolve through the pointer.
+
+        ``schema`` is the table's known schema (the registry's, or the
+        frame that was written): given it, the read infers nothing, and
+        inference costs a Spark job per read. Columns are matched by name.
 
         Partition-value type inference is disabled for the read (and the
         previous session value restored immediately — schema is fixed at
@@ -372,22 +428,27 @@ class BatchCatalog:
         prev = spark.conf.get(conf_key, "true")
         try:
             spark.conf.set(conf_key, "false")
+            # the plain read also checks the path exists (PATH_NOT_FOUND),
+            # which the bucketed re-attach's CREATE TABLE would not
+            reader = spark.read.schema(schema) if schema else spark.read
+            df = reader.parquet(path)
             if entry.get("bucket_by") and entry.get("num_buckets", 0) > 0:
-                return self._read_bucketed(spark, path, entry)
-            return spark.read.parquet(path)
+                return self._read_bucketed(spark, path, entry, df.schema)
+            return df
         finally:
             spark.conf.set(conf_key, prev)
 
     @staticmethod
-    def _read_bucketed(spark: SparkSession, path: str, entry: dict) -> DataFrame:
+    def _read_bucketed(spark: SparkSession, path: str, entry: dict,
+                       schema: StructType) -> DataFrame:
         """Re-attach a bucketed parquet dir to the session catalog under a
         deterministic name and read through it (delegating the DDL to
-        io.bucketing.register_bucketed; the schema comes from the parquet
-        footers so schema evolution between batches needs no bookkeeping)."""
+        io.bucketing.register_bucketed; the DDL is the schema the plain
+        read resolved — the caller's, else the parquet footers', so schema
+        evolution between batches needs no bookkeeping)."""
         from .bucketing import register_bucketed
         name = "__catalog_read_" + _path_digest(path)
-        ddl = spark.read.parquet(path)._jdf.schema().toDDL()
-        register_bucketed(spark, name, path, ddl,
+        register_bucketed(spark, name, path, schema.toDDL(),
                           entry["bucket_by"], entry["num_buckets"])
         return spark.table(name)
 

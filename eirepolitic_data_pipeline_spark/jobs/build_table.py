@@ -7,9 +7,11 @@ engine's catalog/registry/builders:
         --raw-root /data/raw --warehouse /data/warehouse [--promote]
 
 One invocation builds ONE declared table end-to-end: resolve inputs (raw
-payload files for silver, catalog reads for gold), run the builder, run
-the declared-PK DQ gate, conform to the registry schema, and land the
-result in the immutable candidate batch via the write-policy merge.
+payload files for silver, catalog reads for gold), run the builder,
+conform to the registry schema, and land the result in the immutable
+candidate batch via the write-policy merge. The declared-PK DQ gate rides
+on that write: its metrics are observed in the merge's key window and
+judged before the table enters the batch manifest.
 ``--mode test`` caps the raw input rows (reference P11 semantics);
 promotion stays explicit (``--promote``), mirroring the reference's
 ``--publish-latest`` gate.
@@ -40,13 +42,15 @@ from datetime import date
 from typing import Any, Callable, Optional, Sequence
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from ..io.catalog import BatchCatalog, CatalogError, is_path_not_found
+from ..io.catalog import (BatchCatalog, CatalogError, is_path_not_found,
+                          observed)
 from ..io.writers import MergeWriter
 from ..plans.default_tables import DEFAULT_TABLES_CONFIG
-from ..plans.quality import DQSuite
+from ..plans.quality import DQSuite, write_gate_results
 from ..plans.registry import TableRegistry
 from ..tables import (
     gold_constituency_activity_yearly,
@@ -213,34 +217,32 @@ def _read_raw(spark: SparkSession, raw_root: str, stem: str,
 
 
 def _read_input_or_none(spark: SparkSession, catalog: BatchCatalog,
-                        name: str, batch_id: str) -> Optional[DataFrame]:
+                        name: str, batch_id: str,
+                        schema: Optional[StructType] = None
+                        ) -> Optional[DataFrame]:
     """Gold-input read with candidate-first resolution; returns None ONLY
-    for genuine absence (no manifest entry in the candidate batch AND no
-    production copy). Any other failure — corrupt files, I/O errors on a
-    table that exists — propagates: substituting an empty stub there
-    would silently blank the mart's columns. The candidate check reads
-    the batch manifest (batch_has_table), never the filesystem, so it
-    cannot disturb a concurrent writer's atomic swap."""
+    for genuine absence: neither the candidate batch's manifest nor the
+    production manifest records the table, so nothing is read. Manifests,
+    never the filesystem, decide — so the check cannot disturb a
+    concurrent writer's atomic swap. Any read failure of a RECORDED table
+    — corrupt files, I/O errors, a vanished data dir — propagates:
+    substituting an empty stub there would silently blank the mart's
+    columns while DQ passes. ``schema`` (the registry's) spares the read
+    its schema-inference job."""
     bid = batch_id if catalog.batch_has_table(batch_id, name) else None
+    if bid is None:
+        bid = catalog.production_batch_id()
+        if bid is None or not catalog.batch_has_table(bid, name):
+            return None
     try:
-        return _stringified(catalog.read_table(spark, name, batch_id=bid))
-    except CatalogError:
-        return None        # no production pointer yet
+        return _stringified(catalog.read_table(spark, name, batch_id=bid,
+                                               schema=schema))
     except AnalysisException as e:
         if is_path_not_found(e):
-            # PATH_NOT_FOUND alone is NOT proof of absence (same contract
-            # as MergeWriter): if the resolved batch's MANIFEST records
-            # the table, its data dir vanished out from under the catalog
-            # and substituting an empty stub would silently blank the
-            # mart's columns while DQ passes.
-            resolved = bid or catalog.production_batch_id()
-            if resolved is not None and catalog.batch_has_table(
-                    resolved, name):
-                raise CatalogError(
-                    f"manifest for batch {resolved!r} records input "
-                    f"{name!r} but its data directory is missing — "
-                    "refusing to treat corruption as absence") from e
-            return None    # pointer exists, table absent from that batch
+            raise CatalogError(
+                f"manifest for batch {bid!r} records input {name!r} but "
+                "its data directory is missing — refusing to treat "
+                "corruption as absence") from e
         raise
 
 
@@ -268,7 +270,9 @@ def build_table(spark: SparkSession, catalog: BatchCatalog,
                 allow_shrink: bool = False) -> BuildResult:
     """Build one table into the candidate batch. Raises CatalogError for
     unsupported tables and ValueError for bad modes; DQ failure aborts
-    BEFORE any write (the reference's dq_status=fail short-circuit).
+    before the table enters the batch manifest (the reference's
+    dq_status=fail short-circuit): the gate's metrics ride on the write,
+    and a failing gate removes the landed files and raises DQGateError.
 
     ``promote`` refuses to move the batch-global production pointer onto a
     batch whose manifest is MISSING tables the current production batch
@@ -303,7 +307,8 @@ def build_table(spark: SparkSession, catalog: BatchCatalog,
             # batches are full immutable snapshots (one batch per refresh
             # run, promoted once at the end), so gold layers must see the
             # silver tables the same run just produced
-            df = _read_input_or_none(spark, catalog, name, batch_id)
+            df = _read_input_or_none(spark, catalog, name, batch_id,
+                                     registry[name].schema)
             if df is not None:
                 inputs.append(df)
                 continue
@@ -326,14 +331,17 @@ def build_table(spark: SparkSession, catalog: BatchCatalog,
 
     tdef = registry[table]
     pk = list(tdef.policy.primary_key)
-    suite = DQSuite().min_rows(0 if mode == "test" else 1)
-    if pk:
-        suite = suite.unique(pk).non_blank(pk[0])
-    dq = suite.run(out)
-    if not DQSuite.passed(dq):
-        raise DQGateError(
-            f"{table}: DQ gate failed before write: "
-            + "; ".join(str(c) for c in dq if not c.passed), dq)
+    min_rows = 0 if mode == "test" else 1
+    gate = Observation()
+    dq: list = []
+
+    def check_gate():
+        dq[:] = write_gate_results(observed(gate), pk, min_rows)
+        if not DQSuite.passed(dq):
+            raise DQGateError(
+                f"{table}: DQ gate failed; table left out of batch "
+                f"{batch_id!r}: "
+                + "; ".join(str(c) for c in dq if not c.passed), list(dq))
 
     conformed = tdef.conform(out)
     writer = MergeWriter(catalog=catalog, spark=spark)
@@ -359,10 +367,11 @@ def build_table(spark: SparkSession, catalog: BatchCatalog,
                      if table in GOLD_BUILDERS else set())
     writer.write(conformed, table, tdef.policy, batch_id=batch_id,
                  status="test" if mode == "test" else "ok",
+                 schema=tdef.schema, gate=gate, check=check_gate,
                  **bucket_kw)
-    # the committed row count was already computed from the parquet
-    # footers by write_table and recorded in the manifest — counting the
-    # returned frame again would launch a redundant full-table job
+    # the committed row count was observed in the write job and recorded
+    # in the manifest — counting the returned frame again would launch a
+    # redundant full-table job
     n = int(catalog.table_entry(table, batch_id=batch_id)["row_count"])
     if table in GOLD_BUILDERS:
         # the gold builders .cache() their dimension-bounded metric/lookup

@@ -45,7 +45,7 @@ CONTROL_TABLES = ("control_pipeline_runs", "control_table_manifests",
 class RefreshRunResult:
     refresh_type: str
     batch_id: str
-    built: dict[str, int] = field(default_factory=dict)   # table → rows
+    built: dict[str, int] = field(default_factory=dict)   # table → committed rows
     failed: dict[str, str] = field(default_factory=dict)  # table → error
     promoted: bool = False
 
@@ -114,7 +114,7 @@ def run_refresh(spark: SparkSession, catalog: BatchCatalog,
             result.failed[table] = f"{type(e).__name__}: {e}"
             status, error, out_rows = "failed", str(e)[:500], 0
             if isinstance(e, DQGateError):
-                # the gate failed BEFORE the build returned, but the check
+                # the gate kept the table out of the batch, but the check
                 # results ride on the exception — record them, or the DQ
                 # telemetry table only ever holds passing rows
                 for c in e.dq:
@@ -156,8 +156,12 @@ def run_refresh(spark: SparkSession, catalog: BatchCatalog,
         df = spark.createDataFrame(
             [tuple(r.get(c, "") for c in tdef.column_names) for r in rows],
             schema)
-        writer.write(tdef.conform(df), name, tdef.policy, batch_id=batch_id)
-        result.built[name] = len(rows)
+        writer.write(tdef.conform(df), name, tdef.policy, batch_id=batch_id,
+                     schema=tdef.schema)
+        # the committed table's size (append tables hold every run's rows),
+        # as for the built tables — not this run's share of it
+        result.built[name] = int(
+            catalog.table_entry(name, batch_id=batch_id)["row_count"])
 
     if promote and build_mode == "test":
         # the reference CLI auto-disables publishing for mode=test

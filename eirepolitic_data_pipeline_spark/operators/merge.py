@@ -25,7 +25,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 _PRIORITY = "__src_priority"
@@ -54,8 +54,9 @@ class WritePolicy:
             raise ValueError("upsert policy requires a primary key")
 
 
-def _keep_first_by_priority(df: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """One row per key; lower priority value wins (0 = incoming).
+def _rank(df: DataFrame, keys: Sequence[str]) -> DataFrame:
+    """``df`` with ``_RN``: the row's rank within its key, lower priority
+    value first (0 = incoming).
 
     Ties WITHIN a priority class (duplicate keys inside one incoming
     batch) are broken by a total order over every remaining column —
@@ -71,39 +72,69 @@ def _keep_first_by_priority(df: DataFrame, keys: Sequence[str]) -> DataFrame:
                 if f.name not in keyset
                 and "map<" not in f.dataType.simpleString()]
     w = Window.partitionBy(*keys).orderBy(F.col(_PRIORITY).asc(), *tiebreak)
-    return (
-        df.withColumn(_RN, F.row_number().over(w))
-        .filter(F.col(_RN) == 1)
-        .drop(_RN)
-    )
+    return df.withColumn(_RN, F.row_number().over(w))
+
+
+def _observe_incoming(df: DataFrame, keys: Sequence[str],
+                      gate: Observation) -> DataFrame:
+    """Attach build_table's DQ-gate metrics (plans/quality.py
+    ``write_gate_metrics``) to ``df``, counted over its incoming
+    (priority-0) rows; ``_RN`` is present when ``keys`` is non-empty."""
+    # imported here: plans/ imports this module (registry → WritePolicy)
+    from ..plans.quality import write_gate_metrics
+    return df.observe(gate, *write_gate_metrics(
+        keys, F.col(_PRIORITY) == 0, F.col(_RN)))
+
+
+def _keep_first_by_priority(df: DataFrame, keys: Sequence[str],
+                            gate: Optional[Observation] = None) -> DataFrame:
+    """One row per key; lower priority value wins (0 = incoming). With
+    ``gate``, the key window also observes the incoming-batch metrics
+    (``_observe_incoming``) — the window already ranks every incoming row
+    by key, so the DQ gate's uniqueness count costs no pass of its own."""
+    ranked = _rank(df, keys)
+    if gate is not None:
+        ranked = _observe_incoming(ranked, keys, gate)
+    return ranked.filter(F.col(_RN) == 1).drop(_RN)
 
 
 def merge_for_policy(existing: Optional[DataFrame], incoming: DataFrame,
-                     policy: WritePolicy) -> DataFrame:
+                     policy: WritePolicy,
+                     gate: Optional[Observation] = None) -> DataFrame:
     """Merge an incoming batch into retained history per the write policy.
 
     ``existing`` may be None (first write). Column sets may differ between
     runs — unionByName with allowMissingColumns mirrors the reference's
     concat semantics (missing → null).
+
+    ``gate`` (optional) observes the incoming batch's DQ metrics in the
+    merge's own primary-key window (``_observe_incoming``); it is filled
+    by the first action over the result, i.e. the write. Policies that run
+    no such window (append, keyless) rank the incoming rows only for the
+    observation.
     """
+    pk = list(policy.primary_key)
+    inc = incoming.withColumn(_PRIORITY, F.lit(0))
+    if gate is not None and (policy.mode == "append" or not pk):
+        inc = _observe_incoming(_rank(inc, pk) if pk else inc, pk,
+                                gate).drop(_RN)
+        gate = None
     if policy.mode in ("snapshot_replace", "rebuild") or existing is None:
-        out = incoming
+        out = inc
         if policy.mode == "append":
             # existing is None (first write): append NEVER dedupes — later
             # appends keep every row, so deduping only the first batch
             # would make table contents depend on which batch a duplicate
             # arrived in (an append policy's primary_key documents the
             # grain; it is not a uniqueness enforcement)
-            return out
-        if policy.primary_key:
-            out = _keep_first_by_priority(
-                out.withColumn(_PRIORITY, F.lit(0)), policy.primary_key)
+            return out.drop(_PRIORITY)
+        if pk:
+            out = _keep_first_by_priority(out, pk, gate)
         if policy.business_key:
             out = _keep_first_by_priority(
                 out.withColumn(_PRIORITY, F.lit(0)), policy.business_key)
         return out.drop(_PRIORITY)
 
-    inc = incoming.withColumn(_PRIORITY, F.lit(0))
     ex = existing.withColumn(_PRIORITY, F.lit(1))
     unioned = ex.unionByName(inc, allowMissingColumns=True)
 
@@ -111,14 +142,15 @@ def merge_for_policy(existing: Optional[DataFrame], incoming: DataFrame,
         return unioned.drop(_PRIORITY)
 
     # upsert: PK dedupe (incoming wins), then business-key dedupe.
-    out = _keep_first_by_priority(unioned, policy.primary_key)
+    out = _keep_first_by_priority(unioned, pk, gate)
     if policy.business_key:
         out = _keep_first_by_priority(out, policy.business_key)
     return out.drop(_PRIORITY)
 
 
 def merge_upsert_antijoin(existing: DataFrame, incoming: DataFrame,
-                          policy: WritePolicy) -> DataFrame:
+                          policy: WritePolicy,
+                          gate: Optional[Observation] = None) -> DataFrame:
     """Upsert merge in the anti-join shape: ``existing ⟕̸ incoming ∪
     incoming`` — the form that never re-shuffles the fact-sized history.
 
@@ -126,12 +158,15 @@ def merge_upsert_antijoin(existing: DataFrame, incoming: DataFrame,
     three preconditions, which the MergeWriter checks before choosing it:
 
     - ``existing`` is PK-UNIQUE (it is: every prior merge output is);
-    - the PK columns are NON-NULL (enforced by the DQ gate before every
-      build write; a null PK would group in the window form but never
-      match the anti-join);
+    - the PK columns are NON-NULL (the MergeWriter probes the delta; a
+      null PK would group in the window form but never match the
+      anti-join);
     - the policy has no ``business_key`` (the second dedupe would need a
       second anti-join on a different key, which the history's bucketing
       cannot serve shuffle-free anyway).
+
+    ``gate`` observes the incoming metrics on the delta's dedupe window,
+    as in ``merge_for_policy``.
 
     Why it exists: the window form shuffles the ENTIRE union — history
     included — on every refresh. When the history is persisted BUCKETED on
@@ -154,7 +189,7 @@ def merge_upsert_antijoin(existing: DataFrame, incoming: DataFrame,
             "merge_upsert_antijoin requires a non-empty primary_key; "
             "use merge_for_policy for keyless policies")
     inc = _keep_first_by_priority(
-        incoming.withColumn(_PRIORITY, F.lit(0)), pk).drop(_PRIORITY)
+        incoming.withColumn(_PRIORITY, F.lit(0)), pk, gate).drop(_PRIORITY)
     # anti-join against the RAW incoming keys (duplicates are harmless to
     # an anti-join) so this branch carries no window — the plan's only
     # Exchanges are delta-sized, and the history side joins straight off

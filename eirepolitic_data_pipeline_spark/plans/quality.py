@@ -16,6 +16,26 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
+# Check names are the key of control_data_quality_results rows; DQSuite
+# and the write gate (write_gate_results) both spell them from here.
+def min_rows_check(n: int) -> str:
+    return f"row_count>={n}"
+
+
+def unique_check(cols: Sequence[str]) -> str:
+    return f"unique({','.join(cols)})"
+
+
+def blank_check(col: str) -> str:
+    return f"{col}_blank_count==0"
+
+
+def is_blank(col: str) -> Column:
+    """Blank-vs-null convention: a null or empty/whitespace value counts as
+    missing (reference `_nonblank`)."""
+    return F.trim(F.coalesce(F.col(col).cast("string"), F.lit(""))) == ""
+
+
 @dataclass(frozen=True)
 class CheckResult:
     name: str
@@ -33,7 +53,7 @@ class DQSuite:
     # -- builders ------------------------------------------------------------
     def min_rows(self, n: int) -> "DQSuite":
         self._checks.append((
-            f"row_count>={n}", F.count(F.lit(1)).alias("v"),
+            min_rows_check(n), F.count(F.lit(1)).alias("v"),
             lambda v: v >= n))
         return self
 
@@ -45,22 +65,20 @@ class DQSuite:
         return self
 
     def non_blank(self, col: str) -> "DQSuite":
-        """Blank-vs-null convention: empty/whitespace string counts as
-        missing (reference `_nonblank`)."""
-        blank = F.trim(F.coalesce(F.col(col).cast("string"), F.lit(""))) == ""
+        """Null, empty and whitespace values count as missing (``is_blank``)."""
         self._checks.append((
-            f"{col}_blank_count==0",
-            F.sum(F.when(blank, 1).otherwise(0)).alias("v"),
+            blank_check(col),
+            F.sum(F.when(is_blank(col), 1).otherwise(0)).alias("v"),
             lambda v: (v or 0) == 0))
         return self
 
     def unique(self, cols: Sequence[str]) -> "DQSuite":
-        key = F.concat_ws("\u0001", *[F.coalesce(F.col(c).cast("string"), F.lit("\u0000"))
-                              for c in cols])
-        name = f"unique({','.join(cols)})"
+        """Rows past the first of their key, the key compared on its typed
+        columns (nulls equal to each other, as a key window groups them) —
+        the count the write gate observes (``write_gate_metrics``)."""
         self._checks.append((
-            name,
-            (F.count(F.lit(1)) - F.countDistinct(key)).alias("v"),
+            unique_check(cols),
+            (F.count(F.lit(1)) - F.countDistinct(F.struct(*cols))).alias("v"),
             lambda v: (v or 0) == 0))
         return self
 
@@ -106,6 +124,42 @@ class DQSuite:
     @staticmethod
     def passed(results: list[CheckResult]) -> bool:
         return all(r.passed for r in results)
+
+
+_GATE_ROWS = "incoming_rows"
+_GATE_DUPLICATE_KEYS = "duplicate_key_rows"
+_GATE_BLANK_KEYS = "blank_leading_key_rows"
+
+
+def write_gate_metrics(primary_key: Sequence[str], incoming: Column,
+                       rank: Column) -> list[Column]:
+    """The aggregates a merge observes for build_table's DQ gate
+    (operators/merge.py), counted over the ``incoming`` rows of a frame
+    that ``rank``s each row within its primary key: rows, rows ranked
+    past the first of their key, rows whose leading key ``is_blank``.
+    Counts, not sums, so an empty batch reports 0 rather than null."""
+    metrics = [F.count(F.when(incoming, 1)).alias(_GATE_ROWS)]
+    if primary_key:
+        metrics += [
+            F.count(F.when(incoming & (rank > 1), 1))
+            .alias(_GATE_DUPLICATE_KEYS),
+            F.count(F.when(incoming & is_blank(primary_key[0]), 1))
+            .alias(_GATE_BLANK_KEYS)]
+    return metrics
+
+
+def write_gate_results(metrics: dict, primary_key: Sequence[str],
+                       min_rows: int) -> list[CheckResult]:
+    """build_table's DQ gate — ``min_rows(n)``, ``unique(pk)``,
+    ``non_blank(pk[0])`` — judged from the observed
+    ``write_gate_metrics``, so the gate costs no pass of its own."""
+    rows = metrics[_GATE_ROWS]
+    out = [CheckResult(min_rows_check(min_rows), rows >= min_rows, rows)]
+    if primary_key:
+        dup, blank = metrics[_GATE_DUPLICATE_KEYS], metrics[_GATE_BLANK_KEYS]
+        out += [CheckResult(unique_check(primary_key), dup == 0, dup),
+                CheckResult(blank_check(primary_key[0]), blank == 0, blank)]
+    return out
 
 
 def fk_orphan_counts(child: DataFrame, parents: dict[str, DataFrame],

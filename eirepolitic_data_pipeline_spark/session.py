@@ -73,6 +73,10 @@ def get_spark(app_name: str = "eirepolitic_data_pipeline_spark",
         # slow 5-10x. Standard Spark-operations fix: bigger cache + flushing.
         .config("spark.driver.extraJavaOptions",
                 "-XX:ReservedCodeCacheSize=512m -XX:+UseCodeCacheFlushing")
+        # Spark's default of 100 generated classes is fewer than one weekly
+        # merge uses, so nothing compiled would be reused: one merge of five
+        # tables made ~270 Janino compiles at 100 entries, 6 at 2000.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
     )
     # Only force a master when none is configured (tests / local bench).
     if not os.environ.get("SPARK_MASTER") and "SPARK_CONNECT_MODE_ENABLED" not in os.environ:

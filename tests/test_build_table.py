@@ -215,3 +215,78 @@ def test_promote_refuses_shrinking_batch(spark, tmp_path, raw_root):
     build_table(spark, catalog, registry, "silver_member_offices",
                 batch_id="b2", promote=True, allow_shrink=True, **kw)
     assert catalog.production_batch_id() == "b2"
+
+
+def _repeated_member_raw(tmp_path):
+    """A raw members page that lists member TD001 twice."""
+    page = _members_page()
+    page["results"].append(page["results"][0])
+    root = tmp_path / "raw_dup"
+    root.mkdir()
+    (root / "members.jsonl").write_text(json.dumps(page) + "\n")
+    return str(root)
+
+
+def test_dq_gate_failure_keeps_table_out_of_batch(spark, tmp_path,
+                                                  monkeypatch):
+    """A real gate failure through build_table: the gate's metrics ride on
+    the write, so the files land first — a failing gate must remove them
+    and leave no manifest entry, and run_refresh must record the failing
+    check and refuse to promote. silver_members dedupes its own output,
+    so the builder's dedupe is switched off to let the repeated member
+    reach the gate."""
+    import os
+
+    from eirepolitic_data_pipeline_spark.jobs.build_table import DQGateError
+    from eirepolitic_data_pipeline_spark.jobs.run_refresh import run_refresh
+    from eirepolitic_data_pipeline_spark.tables import silver
+
+    monkeypatch.setattr(silver, "dedupe_total_order", lambda df, keys: df)
+    raw = _repeated_member_raw(tmp_path)
+    registry = TableRegistry.from_dict(DEFAULT_TABLES_CONFIG)
+    catalog = BatchCatalog(root=str(tmp_path / "wh"))
+    with pytest.raises(DQGateError) as err:
+        build_table(spark, catalog, registry, "silver_members",
+                    batch_id="g1", raw_root=raw, mode="full",
+                    snapshot_date=SNAP, today=TODAY)
+    checks = {c.name: (c.passed, c.observed) for c in err.value.dq}
+    assert checks == {"row_count>=1": (True, 3),
+                      "unique(member_code)": (False, 1),
+                      "member_code_blank_count==0": (True, 0)}
+    assert not catalog.batch_has_table("g1", "silver_members")
+    assert not os.path.exists(catalog.batch_path("g1", "silver_members"))
+
+    with pytest.raises(CatalogError, match="unpromoted"):
+        run_refresh(spark, catalog, registry, "weekly",
+                    as_of=date(2026, 8, 13), batch_id="g2", raw_root=raw,
+                    tables=["silver_members",
+                            "control_data_quality_results"])
+    assert catalog.production_batch_id() is None
+    assert not catalog.batch_has_table("g2", "silver_members")
+    dq = {r["check_name"]: (r["status"], r["metric_value"])
+          for r in catalog.read_table(
+              spark, "control_data_quality_results", batch_id="g2")
+          .collect()}
+    assert dq == {"row_count>=1": ("pass", "3"),
+                  "unique(member_code)": ("fail", "1"),
+                  "member_code_blank_count==0": ("pass", "0")}
+
+
+def test_dq_gate_fails_empty_build(spark, tmp_path):
+    """An empty members page builds zero rows: the shipped builder fails
+    the row-count check, observed as 0 rather than null."""
+    from eirepolitic_data_pipeline_spark.jobs.build_table import DQGateError
+
+    root = tmp_path / "raw_empty"
+    root.mkdir()
+    (root / "members.jsonl").write_text(json.dumps({"results": []}) + "\n")
+    registry = TableRegistry.from_dict(DEFAULT_TABLES_CONFIG)
+    catalog = BatchCatalog(root=str(tmp_path / "wh"))
+    with pytest.raises(DQGateError) as err:
+        build_table(spark, catalog, registry, "silver_members",
+                    batch_id="e1", raw_root=str(root), mode="full",
+                    snapshot_date=SNAP, today=TODAY)
+    assert [(c.name, c.passed, c.observed) for c in err.value.dq] == [
+        ("row_count>=1", False, 0), ("unique(member_code)", True, 0),
+        ("member_code_blank_count==0", True, 0)]
+    assert catalog.batch_tables("e1") == []

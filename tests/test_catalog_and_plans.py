@@ -141,6 +141,40 @@ def test_dq_suite_single_pass(spark):
     assert by_name["score_in_range[0.0,10.0]"].observed == 2
 
 
+def test_dq_unique_compares_typed_keys(spark):
+    """unique(pk) counts rows past the first of their typed key, nulls
+    equal to each other — as the write gate's key window does. Keys whose
+    string parts would join to the same string are distinct."""
+    df = spark.createDataFrame(
+        [("a\u0001b", "c"), ("a", "b\u0001c"), (None, "x"), (None, "x")],
+        "k1 string, k2 string")
+    (res,) = DQSuite().unique(["k1", "k2"]).run(df)
+    assert (res.name, res.observed) == ("unique(k1,k2)", 1)
+
+
+def test_failed_observation_removes_landed_files(spark, catalog,
+                                                 monkeypatch):
+    """If the write's observed metrics cannot be read, the landed files
+    are removed with the table left out of the manifest, so a retry into
+    the same batch succeeds."""
+    import os
+
+    from eirepolitic_data_pipeline_spark.io import catalog as catalog_mod
+
+    def lost(observation):
+        raise CatalogError("observed metrics not reported")
+
+    df = spark.createDataFrame([(1,), (2,)], "id int")
+    monkeypatch.setattr(catalog_mod, "observed", lost)
+    with pytest.raises(CatalogError, match="not reported"):
+        catalog.write_table(df, "t1", batch_id="b1")
+    assert not os.path.exists(catalog.batch_path("b1", "t1"))
+    assert not catalog.batch_has_table("b1", "t1")
+    monkeypatch.undo()
+    catalog.write_table(df, "t1", batch_id="b1")
+    assert catalog.table_entry("t1", batch_id="b1")["row_count"] == 2
+
+
 def test_contract_and_fk_and_comparison_checks(spark):
     df = spark.createDataFrame([("a", 1), ("b", 2)], "pk string, v int")
     results = contract_checks(df, ["pk", "v"], ["pk"], min_rows=2)

@@ -105,3 +105,39 @@ def test_unknown_mode_rejected():
 def test_upsert_requires_pk():
     with pytest.raises(ValueError):
         WritePolicy(mode="upsert")
+
+
+@pytest.mark.parametrize("mode, with_history", [
+    ("snapshot_replace", True), ("rebuild", False), ("upsert", False),
+    ("upsert", True), ("append", True), ("upsert-antijoin", True)])
+def test_gate_observes_incoming_rows_only(spark, mode, with_history):
+    """The merge's gate observation counts the INCOMING batch only —
+    history rows never add to the row, duplicate-key or blank-key counts
+    — whichever policy (and merge form) runs. Duplicates are rows ranked
+    past the first of their typed key."""
+    from pyspark.sql import Observation
+
+    from eirepolitic_data_pipeline_spark.operators.merge import (
+        merge_upsert_antijoin)
+
+    schema = "id long, code string, val string"
+    existing = spark.createDataFrame(
+        [(1, "a", "old"), (1, "a", "older"), (9, " ", "old")], schema) \
+        if with_history else None
+    incoming = spark.createDataFrame(
+        [(1, "a", "x"), (1, "a", "y"), (2, "", "z"), (3, None, "w")], schema)
+    gate = Observation()
+    if mode == "upsert-antijoin":
+        out = merge_upsert_antijoin(
+            existing, incoming, WritePolicy(mode="upsert",
+                                            primary_key=["code", "id"]),
+            gate)
+    else:
+        out = merge_for_policy(
+            existing, incoming, WritePolicy(mode=mode,
+                                            primary_key=["code", "id"]),
+            gate)
+    out.collect()
+    assert gate.get == {"incoming_rows": 4, "duplicate_key_rows": 1,
+                        "blank_leading_key_rows": 2}
+

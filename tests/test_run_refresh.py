@@ -114,3 +114,28 @@ def test_run_refresh_persists_fact_tables_bucketed(spark, tmp_path, raw_root):  
     assert m2["silver_member_votes"]["bucket_by"] == ["member_vote_id"]
     votes = catalog.read_table(spark, "silver_member_votes")
     assert votes.count() == votes.select("member_vote_id").distinct().count()
+
+
+def test_built_reports_committed_control_table_sizes(spark, tmp_path,
+                                                     raw_root):  # noqa: F811
+    """``built`` reports what each table holds after the run. The two
+    append-policy control tables keep every run's rows, so after two
+    weekly runs over N tables they hold 2N run rows and 2x the DQ rows."""
+    registry = TableRegistry.from_dict(DEFAULT_TABLES_CONFIG)
+    catalog = BatchCatalog(root=str(tmp_path / "wh"))
+    tables = ["silver_members", "silver_member_votes",
+              "control_pipeline_runs", "control_table_manifests",
+              "control_data_quality_results"]
+    n = 2                                   # non-control tables
+    for week, batch_id in enumerate(("w1", "w2"), start=1):
+        res = run_refresh(spark, catalog, registry, "weekly", as_of=AS_OF,
+                          batch_id=batch_id, raw_root=raw_root,
+                          tables=tables)
+        assert not res.failed and res.promoted
+        assert res.built["control_pipeline_runs"] == week * n
+        assert res.built["control_data_quality_results"] == week * 3 * n
+        assert res.built["control_table_manifests"] == n
+        for name in ("control_pipeline_runs",
+                     "control_data_quality_results"):
+            assert res.built[name] == catalog.read_table(
+                spark, name, batch_id=batch_id).count()
