@@ -45,15 +45,10 @@ def soundfile_mod():
 
 
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
-JPEG_MAGIC = b"\xff\xd8\xff"
 
 
 def is_png(b: bytes) -> bool:
     return b[:8] == PNG_MAGIC
-
-
-def is_jpeg(b: bytes) -> bool:
-    return b[:3] == JPEG_MAGIC
 
 
 def is_wav(b: bytes) -> bool:

@@ -54,6 +54,20 @@ def _utc_now() -> str:
     return datetime.now(timezone.utc).isoformat(timespec="seconds")
 
 
+def _dq_rows(checks, run_id: str, table: str, started: str) -> list[dict]:
+    """``control_data_quality_results`` rows for one table's gate checks
+    — the same rows whether the table was built or its gate failed."""
+    return [{
+        "dq_result_id": "dq:" + stable_hash_py([run_id, table, c.name], 24),
+        "run_id": run_id, "table_name": table,
+        "check_name": c.name,
+        "status": "pass" if c.passed else "fail",
+        "metric_value": str(c.observed),
+        "threshold": "", "message": c.detail or "",
+        "created_at_utc": started,
+    } for c in checks]
+
+
 def run_refresh(spark: SparkSession, catalog: BatchCatalog,
                 registry: TableRegistry, refresh_type: str, *,
                 as_of: date, batch_id: str, raw_root: str = "",
@@ -86,17 +100,7 @@ def run_refresh(spark: SparkSession, catalog: BatchCatalog,
                 snapshot_date=snapshot_date)
             result.built[table] = res.row_count
             status, error, out_rows = "success", "", res.row_count
-            for c in res.dq:
-                dq_rows.append({
-                    "dq_result_id": "dq:" + stable_hash_py(
-                        [run_id, table, c.name], 24),
-                    "run_id": run_id, "table_name": table,
-                    "check_name": c.name,
-                    "status": "pass" if c.passed else "fail",
-                    "metric_value": str(c.observed),
-                    "threshold": "", "message": c.detail or "",
-                    "created_at_utc": started,
-                })
+            dq_rows += _dq_rows(res.dq, run_id, table, started)
             tdef = registry[table]
             manifest_rows.append({
                 "table_name": table, "latest_run_id": run_id,
@@ -117,17 +121,7 @@ def run_refresh(spark: SparkSession, catalog: BatchCatalog,
                 # the gate kept the table out of the batch, but the check
                 # results ride on the exception — record them, or the DQ
                 # telemetry table only ever holds passing rows
-                for c in e.dq:
-                    dq_rows.append({
-                        "dq_result_id": "dq:" + stable_hash_py(
-                            [run_id, table, c.name], 24),
-                        "run_id": run_id, "table_name": table,
-                        "check_name": c.name,
-                        "status": "pass" if c.passed else "fail",
-                        "metric_value": str(c.observed),
-                        "threshold": "", "message": c.detail or "",
-                        "created_at_utc": started,
-                    })
+                dq_rows += _dq_rows(e.dq, run_id, table, started)
         run_rows.append({
             "run_id": run_id, "workflow_run_id": workflow_run_id,
             "table_name": table, "mode": inputs.mode,

@@ -6,8 +6,9 @@ refresh — correct, and O(history) every run. For append-only fact logs the
 additive metrics (counts, sums) are ALGEBRAIC: the persisted aggregate plus
 the delta batch's aggregate IS the new aggregate, so a refresh costs
 O(delta + affected groups) regardless of history size. Distinct counts are
-not additive — pair this with ``operators.sketches`` (mergeable HLL) for
-those; non-algebraic metrics (medians, top-k with evictions) still need the
+not additive — pair this with mergeable HLL sketches (Spark's
+``hll_sketch_agg`` / ``hll_union_agg``, as q59 does) for those;
+non-algebraic metrics (medians, top-k with evictions) still need the
 recompute path.
 
 Contract: facts are APPEND-ONLY between refreshes (the engine's upsert

@@ -19,6 +19,8 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .vectors import IVFPQModel
+
 
 def _finite2(rows: list[list[float]]) -> bool:
     """True when every value of a 2-level model is finite — the
@@ -551,89 +553,49 @@ def _ivf_compressed_serve(dq_frame: DataFrame, queries: DataFrame, k: int,
                          vectors, k, id_col, vec_col)
 
 
-def knn_ivf_adc(codes: DataFrame, codebooks: list[list[list[float]]],
-                queries: DataFrame, k: int,
-                centroids: list[list[float]], nprobe: int = 2,
+def knn_ivf_adc(codes: DataFrame, model: IVFPQModel,
+                queries: DataFrame, k: int, nprobe: int = 2,
                 m: Optional[int] = None,
                 vectors: Optional[DataFrame] = None,
                 id_col: str = "vec_id", vec_col: str = "embedding",
                 query_id_col: str = "vec_id") -> DataFrame:
-    """FAISS-shape IVFPQ, fully literal (r9): the trained coarse
-    quantizer (``kmeans_fit`` centroids) partitions a PRODUCT-QUANTIZED
-    corpus — ``knn_ivf_pq``'s composition with the real PQ codec
-    (``pq_encode`` codes + ``pq_decode`` reconstructions) in place of
-    the scalar int8 stand-in. Corpus cells are keyed on the DECODED
-    vectors (self-consistent with the scoring at the codec's precision,
-    computed by the Arrow assignment kernel — map-only), each query
-    probes its ``nprobe`` nearest centroids by raw distance, candidates
-    score inside the probed cells on the reconstructions (asymmetric
-    distance computation), the top-``m`` survive, and the exact
-    full-precision re-rank emits the top-``k``. Probing every cell
-    degenerates to ``knn_pq_adc`` with the same ``m`` (test-pinned, the
+    """FAISS-shape IVFPQ serving over an encoded corpus: the trained
+    coarse quantizer partitions a PRODUCT-QUANTIZED corpus —
+    ``knn_ivf_pq``'s composition with the real PQ codec in place of the
+    scalar int8 stand-in. The stored ``cell`` is the index key; each
+    query probes its ``nprobe`` nearest centroids by raw distance,
+    candidates score inside the probed cells on the reconstructions
+    (asymmetric distance computation), the top-``m`` survive, and the
+    exact full-precision re-rank emits the top-``k``.
+
+    The reconstruction follows the model's codec: ``pq_decode(codes)``
+    for a flat model, ``centroid[cell] + pq_decode(codes)`` for a
+    residual one. For a flat model, probing every cell degenerates to
+    ``knn_pq_adc`` with the same ``m`` (test-pinned, the
     ``knn_ivf_pq``/``knn_quantized_rerank`` relationship).
 
-    Storage story at 100 TB: the serving scan reads (vec_id, codes) — m
-    small ints per row — plus two bounded broadcast models (coarse
-    centroids k·dim, subspace codebooks m·k·dim/m); per-query compute
-    tracks probed-cell population. CONTRACT: ``codes`` must be
-    ``pq_encode``'s verbatim schema built with these ``codebooks``
-    (``pq_decode``'s contract), and ``vectors`` must cover every id in
-    ``codes``."""
-    from .vectors import pq_decode
-
-    m = _resolve_m(k, m)
-    dq_frame = centroid_cells_frame(
-        codes.select("vec_id",
-                     pq_decode("codes", codebooks).alias("__dqv")),
-        centroids, id_col="vec_id", vec_col="__dqv", cell_col="__cell")
-    return _ivf_compressed_serve(dq_frame, queries, k, centroids, nprobe,
-                                 m, vectors, id_col, vec_col,
-                                 query_id_col)
-
-
-def knn_ivf_adc_residual(codes: DataFrame,
-                         codebooks: list[list[list[float]]],
-                         queries: DataFrame, k: int,
-                         centroids: list[list[float]], nprobe: int = 2,
-                         m: Optional[int] = None,
-                         vectors: Optional[DataFrame] = None,
-                         id_col: str = "vec_id",
-                         vec_col: str = "embedding",
-                         query_id_col: str = "vec_id") -> DataFrame:
-    """Serving for the RESIDUAL-encoded IVFPQ (``ivf_pq_fit_residual``
-    + ``ivf_pq_encode`` — the actual FAISS recipe): reconstruction is
-    ``centroid[cell] + pq_decode(codes)``, so the stored ``cell``
-    column is consumed directly as the index key (it IS part of the
-    encoding — unlike ``knn_ivf_adc``, whose flat codes are re-binned
-    over their reconstructions per serve). The rest is the shared IVF
-    serving core: each query probes its ``nprobe`` nearest centroids
-    by raw distance, candidates score inside probed cells on the
-    reconstructions (asymmetric distance computation), top-``m``
-    survive, exact full-precision re-rank emits top-``k``.
-
-    Why this wins at the same storage: residual codebooks cover a far
-    tighter distribution than raw-vector ones, so the m small ints per
-    row reconstruct closer to the original — better stage-1 candidate
-    quality for identical scan bytes. CONTRACT: ``codes`` must be
-    ``ivf_pq_encode``'s verbatim ``(vec_id, codes, cell)`` schema
-    built with THESE codebooks and centroids; the reconstruction adds
-    ``centroid[cell]`` via ``element_at``, which throws under ANSI on
-    a cell outside the model (loud on a model/codes mismatch, the
-    ``pq_decode`` rule). Works unchanged over a parquet round-trip of
-    the codes frame — ``(vec_id, codes, cell)`` is exactly the
-    persisted-index layout, and filtering it to the probe union before
-    this call is the partition-pruned at-rest serve."""
+    Storage story at 100 TB: the serving scan reads (vec_id, codes,
+    cell) — m small ints per row — plus the bounded broadcast model;
+    per-query compute tracks probed-cell population. CONTRACT: ``codes``
+    is ``ivf_pq_encode``'s ``(vec_id, codes, cell)`` built with THIS
+    model (a parquet round-trip of it, filtered to the probe union, is
+    the partition-pruned at-rest serve — ``knn_ivf_pq_index``); a code
+    or cell outside the model throws under ANSI in ``element_at`` (loud
+    on a model/codes mismatch, the ``pq_decode`` rule), and ``vectors``
+    must cover every id in ``codes``."""
     from .vectors import _lit_array2, pq_decode
 
     m = _resolve_m(k, m)
-    recon = F.zip_with(
-        F.element_at(_lit_array2(centroids), F.col("cell") + 1),
-        pq_decode("codes", codebooks),
-        lambda c, r: c + r)
+    recon = pq_decode("codes", model.codebooks)
+    if model.residual:
+        recon = F.zip_with(
+            F.element_at(_lit_array2(model.centroids),
+                         F.col("cell").cast("int") + 1),
+            recon, lambda c, r: c + r)
     dq_frame = codes.select("vec_id", recon.alias("__dqv"),
                             F.col("cell").cast("string").alias("__cell"))
-    return _ivf_compressed_serve(dq_frame, queries, k, centroids, nprobe,
-                                 m, vectors, id_col, vec_col,
+    return _ivf_compressed_serve(dq_frame, queries, k, model.centroids,
+                                 nprobe, m, vectors, id_col, vec_col,
                                  query_id_col)
 
 
@@ -1417,48 +1379,30 @@ def ann_recall(vectors: DataFrame, queries: DataFrame, k: int,
     )
 
 
-def write_ivf_pq_index(codes: DataFrame,
-                       codebooks: list[list[list[float]]],
-                       centroids: list[list[float]], path: str,
-                       mode: str = "overwrite",
-                       files_per_cell: int = 1) -> None:
-    """Persist the IVF-PQ serving index AT REST: the ``(vec_id, codes)``
-    table with each row's trained coarse cell, written as parquet
-    PARTITIONED BY ``cell`` — the layout a 100 TB deployment actually
-    serves from, where ``knn_ivf_pq_index`` turns each query batch's
-    probe set into a partition filter and the scan READS ONLY THE
-    PROBED CELLS' FILES (Spark partition pruning; the in-memory
-    operators instead compute cells per pass, the right shape for
-    ad-hoc corpora but a re-bucketing cost per query batch at rest).
+def write_ivf_pq_index(df: DataFrame, model: IVFPQModel, path: str,
+                       mode: str = "overwrite", files_per_cell: int = 1,
+                       vec_col: str = "embedding",
+                       id_col: str = "vec_id") -> None:
+    """Persist the IVF-PQ serving index AT REST: ``ivf_pq_encode``'s
+    ``(vec_id, codes, cell)`` rows of the full-precision vectors in
+    ``df``, written as parquet PARTITIONED BY ``cell`` — the layout a
+    100 TB deployment actually serves from, where ``knn_ivf_pq_index``
+    turns each query batch's probe set into a partition filter and the
+    scan READS ONLY THE PROBED CELLS' FILES (Spark partition pruning;
+    the in-memory ``knn_ivf_adc`` instead serves an encoded frame per
+    pass, the right shape for ad-hoc corpora).
 
-    Build shape (r10): the cell is a PURE FUNCTION of (codes, models) —
-    reconstruction is a codeword gather and the cell its nearest-
-    centroid argmin — so ONE fused Arrow kernel emits ``(vec_id, codes,
-    cell)`` in a single map-only pass chained onto whatever plan
-    ``codes`` is (usually the lazy ``pq_encode`` kernel: scan → encode
-    → cell → partitioned write, one corpus read total). The r9 shape —
-    a ``centroid_cells_frame`` pass over the ``pq_decode`` expressions
-    JOINED back to a persisted copy of the codes — paid a corpus-sized
-    persist, a second kernel pass, and a build shuffle for the same
-    bytes; at 100 TB those were the build's dominant costs. Parity:
-    the gather reproduces ``pq_decode``'s exact codeword doubles and
-    ``_nearest_blocks`` is ``centroid_cells``' pinned argmin contract
-    (dimension-ordered accumulation, first-minimum ties), so the cells
-    are identical (test-pinned against the decode+assign recipe).
-
-    Rows the codec cannot key (NULL / wrong-arity / NULL-element code
-    arrays) drop from the index, the ``centroid_cells_frame`` contract;
-    a codes/model MISMATCH — codebook count != the code arrays' length,
-    or centroids of a different dimension than the reconstructions —
-    raises loudly instead of silently writing an empty index. The table
-    written is EXACTLY ``(vec_id, codes)`` partitioned by ``cell`` —
-    any other input column is dropped (``centroid_cells_frame``'s
-    rationale: Catalyst cannot prune inside a mapInPandas schema, so
-    carrying payload columns would Arrow-serialize them through the
-    kernel for nothing); join payloads back by ``vec_id`` at read time. Storage
-    per row is the m small ints plus the partition directory key; the
-    two bounded models (codebooks, centroids) are the caller's to ship
-    — they are NOT embedded in the files.
+    Build shape: ONE map-only encode kernel pass chained onto whatever
+    plan ``df`` is (scan → encode → cell → partitioned write, one corpus
+    read total), for either codec — the model says which. Rows the codec
+    cannot key (NULL / wrong-dimension / NULL-element vectors) drop from
+    the index, the ``centroid_cells_frame`` contract. The table written
+    is EXACTLY ``(vec_id, codes)`` partitioned by ``cell`` — any other
+    input column is dropped (Catalyst cannot prune inside a mapInPandas
+    schema, so carrying payload columns would Arrow-serialize them
+    through the kernel for nothing); join payloads back by ``vec_id`` at
+    read time. The model is the caller's to ship — it is NOT embedded in
+    the files.
 
     File layout: the write repartitions on the cell key first, so each
     cell directory holds AT MOST ``files_per_cell`` files per build —
@@ -1467,73 +1411,18 @@ def write_ivf_pq_index(codes: DataFrame,
     bench scale; at 1000 executors the commit and every later scan's
     file-listing pay it forever). Raise ``files_per_cell`` when single
     cells outgrow a comfortable file/task size: the value is an UPPER
-    BOUND / best-effort spread, not a guarantee (r10 ADVICE) — a salt
-    keys each hot cell across up to that many writer partitions, but
-    hash partitioning into the capped task count can co-locate
-    distinct salt groups, and AQE may legally coalesce a small build
-    below the bound. The bound direction is the safe one: fewer,
-    larger files, never a W·k explosion. The 1M stress writes k=16
-    cells of ~62k rows each through the default."""
-    import numpy as np
-
-    from .vectors import (_nearest_blocks, _validate_codebooks,
-                          well_formed_pred)
+    BOUND / best-effort spread, not a guarantee — a salt keys each hot
+    cell across up to that many writer partitions, but hash
+    partitioning into the capped task count can co-locate distinct salt
+    groups, and AQE may legally coalesce a small build below the bound.
+    The bound direction is the safe one: fewer, larger files, never a
+    W·k explosion. The 1M stress writes k=16 cells of ~62k rows each
+    through the default."""
+    from .vectors import ivf_pq_encode
 
     if files_per_cell < 1:
         raise ValueError("files_per_cell must be >= 1")
-    m, _, sub = _validate_codebooks(codebooks)
-    dim = m * sub
-    if not centroids or not centroids[0]:
-        raise ValueError("centroids must be a non-empty list of "
-                         "non-empty vectors (kmeans_fit's output)")
-    if len(centroids[0]) != dim:
-        raise ValueError(
-            f"centroid dimension {len(centroids[0])} != the codebooks' "
-            f"reconstruction dimension {dim} — the coarse quantizer and "
-            "the PQ model must be trained on the same space")
-    Bs = [np.asarray(cb, dtype="float64") for cb in codebooks]
-    C = np.asarray(centroids, dtype="float64")
-    servable = codes.filter(well_formed_pred("codes", m))
-    id_type = servable.schema["vec_id"].dataType.simpleString()
-
-    def kernel(batches):
-        import pandas as pd
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cm = np.stack(pdf["codes"].to_numpy()).astype("int64")
-            # out-of-range codes fail the gather loudly — the
-            # pq_decode/element_at model-mismatch contract
-            if cm.min() < 0 or cm.max() >= Bs[0].shape[0]:
-                raise ValueError(
-                    "write_ivf_pq_index: code value outside the "
-                    "codebook range — codes were built with different "
-                    "codebooks (pq_decode's contract)")
-            V = np.concatenate([Bs[j][cm[:, j]] for j in range(m)],
-                               axis=1)
-            best, _ = _nearest_blocks(V, C)
-            yield pd.DataFrame({"vec_id": pdf["vec_id"],
-                                "codes": pdf["codes"],
-                                "cell": best.astype("int32")})
-
-    coded = (servable.select("vec_id", "codes")
-             .mapInPandas(
-                 kernel,
-                 schema=f"vec_id {id_type}, codes array<int>, cell int"))
-    _write_cell_partitioned(coded, len(centroids), path, mode,
-                            files_per_cell)
-
-
-def _write_cell_partitioned(coded: DataFrame, n_cells: int, path: str,
-                            mode: str, files_per_cell: int) -> None:
-    """The shared cell-partitioned index write (flat + residual): a
-    (vec_id, codes, cell) frame lands as parquet partitioned by cell
-    with a BOUNDED file count — at most ``files_per_cell`` files per
-    cell per build (an upper bound: salt-group co-location in the
-    capped task count or AQE coalescing can land fewer; see
-    ``write_ivf_pq_index``'s layout note)."""
-    if files_per_cell < 1:
-        raise ValueError("files_per_cell must be >= 1")
+    coded = ivf_pq_encode(df, model, vec_col=vec_col, id_col=id_col)
     if files_per_cell == 1:
         # keys-only repartition: one file per cell per build regardless
         # of how AQE coalesces the write tasks (dynamic partitioning
@@ -1548,7 +1437,7 @@ def _write_cell_partitioned(coded: DataFrame, n_cells: int, path: str,
         # by the session's shuffle width so a large-k index cannot
         # demand k x files_per_cell tasks
         from ..session import shuffle_partitions
-        n_parts = min(n_cells * files_per_cell,
+        n_parts = min(len(model.centroids) * files_per_cell,
                       max(shuffle_partitions(coded.sparkSession),
                           files_per_cell))
         salt = F.pmod(F.xxhash64(F.col("vec_id").cast("string")),
@@ -1558,7 +1447,7 @@ def _write_cell_partitioned(coded: DataFrame, n_cells: int, path: str,
 
 
 #: Ceiling on the driver-side query-batch collect of the persisted
-#: serving paths (``_pin_query_batch``). The serving contract has
+#: serving paths (``_guarded_collect``). The serving contract has
 #: always been "queries are a sample-sized frame" (every sibling
 #: broadcasts them and the probe union is collected at construction);
 #: until r11 the contract was prose only, so a mis-sized frame OOM'd
@@ -1610,31 +1499,13 @@ def _guarded_collect(q_proj: DataFrame, max_query_rows: int) -> list:
     return rows
 
 
-def _pin_query_batch(queries: DataFrame, vec_col: str, query_id_col: str,
-                     max_query_rows: int, with_rows: bool = False):
-    """Collect the query batch ONCE and pin it back as a local relation
-    — with the serving contract ENFORCED: at most ``max_query_rows``
-    rows may cross to the driver (``_guarded_collect``: a count guard,
-    then one collect — no row crosses when the check FAILS on a 100 TB
-    frame, and contract-respecting callers see identical rows)."""
-    q_proj = queries.select(F.col(query_id_col), F.col(vec_col))
-    q_rows = _guarded_collect(q_proj, max_query_rows)
-    from ..session import local_frame
-    pinned = local_frame(queries.sparkSession, q_rows, q_proj.schema)
-    # ``with_rows`` also hands back the collected rows so callers that
-    # need a row-level fold (drift's n_queries) reuse this collect
-    # instead of running another aggregate job (r11 optimization round)
-    return (pinned, q_rows) if with_rows else pinned
-
-
 def _pruned_probe_scan(index: DataFrame, queries: DataFrame,
                        centroids: list[list[float]], nprobe: int,
                        vec_col: str, query_id_col: str,
                        max_query_rows: int = DEFAULT_MAX_QUERY_ROWS,
                        with_rows: bool = False):
-    """The shared probe-union partition pruning of the persisted
-    serving paths (flat + residual): returns ``(pinned_queries,
-    pruned_index)``.
+    """The probe-union partition pruning of the persisted online serve
+    and the drift report: returns ``(pinned_queries, pruned_index)``.
 
     Materialize the query batch ONCE (r9 review): the probe union is
     collected at construction time while the serve stages re-evaluate
@@ -1674,17 +1545,13 @@ def _pruned_probe_scan(index: DataFrame, queries: DataFrame,
         probe_cells = [int(c) for c in probe_cells]
     pruned = index.filter(F.col("cell").isin(probe_cells))
     # ``with_rows`` hands back the collected rows too, so a caller that
-    # needs a row-level fold (the drift report's n_queries) or the
-    # pinned batch itself reuses THIS collect instead of running its own
-    # _pin_query_batch first (r12: the drift report previously pinned
-    # twice — 2 extra driver jobs per pass, 2 cluster barriers at scale)
+    # needs a row-level fold (the drift report's n_queries) reuses THIS
+    # collect instead of pinning the batch a second time
     return (queries, pruned, rows) if with_rows else (queries, pruned)
 
 
-def knn_ivf_pq_index(index: DataFrame,
-                     codebooks: list[list[list[float]]],
-                     queries: DataFrame, k: int,
-                     centroids: list[list[float]], nprobe: int = 2,
+def knn_ivf_pq_index(index: DataFrame, model: IVFPQModel,
+                     queries: DataFrame, k: int, nprobe: int = 2,
                      m: Optional[int] = None,
                      vectors: Optional[DataFrame] = None,
                      id_col: str = "vec_id", vec_col: str = "embedding",
@@ -1695,129 +1562,22 @@ def knn_ivf_pq_index(index: DataFrame,
     partition pruning: the union of every query's ``nprobe`` probe
     cells is collected driver-side (queries are a sample-sized frame —
     the serving contract, enforced by ``max_query_rows``; every
-    sibling already broadcasts
-    them) and pushed into the scan as ``cell IN (...)``, so parquet
-    reads ONLY the probed partitions — at 100 TB the difference between
-    scanning nprobe/k_coarse of the index and scanning all of it.
-    Within the pruned scan, per-query candidate restriction, ADC
-    scoring, top-``m``, and the exact re-rank are ``knn_ivf_adc``'s
-    exact stages (same results as the in-memory composition for the
-    same models — test-pinned). A query whose vector the quantizer
-    cannot key probes nothing and returns no rows."""
+    sibling already broadcasts them) and pushed into the scan as
+    ``cell IN (...)``, so parquet reads ONLY the probed partitions — at
+    100 TB the difference between scanning nprobe/k_coarse of the index
+    and scanning all of it. Within the pruned scan, per-query candidate
+    restriction, ADC scoring (in the model's codec), top-``m``, and the
+    exact re-rank are ``knn_ivf_adc``'s exact stages (same results as
+    the in-memory composition for the same model — test-pinned). A
+    query whose vector the quantizer cannot key probes nothing and
+    returns no rows."""
     m = _resolve_m(k, m)
-    queries, pruned = _pruned_probe_scan(index, queries, centroids,
+    queries, pruned = _pruned_probe_scan(index, queries, model.centroids,
                                          nprobe, vec_col, query_id_col,
                                          max_query_rows)
-    return _serve_pruned(pruned, codebooks, queries, k, centroids,
-                         nprobe, m, vectors, id_col, vec_col,
-                         query_id_col, residual=False)
-
-
-def _serve_pruned(pruned: DataFrame, codebooks: list[list[list[float]]],
-                  queries: DataFrame, k: int,
-                  centroids: list[list[float]], nprobe: int, m: int,
-                  vectors: Optional[DataFrame], id_col: str,
-                  vec_col: str, query_id_col: str,
-                  residual: bool) -> DataFrame:
-    """The post-prune serving body shared by ``knn_ivf_pq_index``,
-    ``knn_ivf_rpq_index`` and the drift report (which pre-prunes once
-    and reuses the same pinned batch for serve, truth and n_queries):
-    decode the pruned scan per its layout and run the shared IVF
-    serving core. ``m`` must already be resolved."""
-    if residual:
-        codes = pruned.select("vec_id", "codes",
-                              F.col("cell").cast("int").alias("cell"))
-        return knn_ivf_adc_residual(codes, codebooks, queries, k,
-                                    centroids, nprobe=nprobe, m=m,
-                                    vectors=vectors, id_col=id_col,
-                                    vec_col=vec_col,
-                                    query_id_col=query_id_col)
-    from .vectors import pq_decode
-
-    dq_frame = pruned.select(
-        "vec_id",
-        pq_decode("codes", codebooks).alias("__dqv"),
-        F.col("cell").cast("string").alias("__cell"))
-    return _ivf_compressed_serve(dq_frame, queries, k, centroids, nprobe,
-                                 m, vectors, id_col, vec_col,
-                                 query_id_col)
-
-
-def write_ivf_rpq_index(df: DataFrame,
-                        codebooks: list[list[list[float]]],
-                        centroids: list[list[float]], path: str,
-                        mode: str = "overwrite",
-                        files_per_cell: int = 1,
-                        vec_col: str = "embedding",
-                        id_col: str = "vec_id") -> None:
-    """Persist the RESIDUAL-encoding IVFPQ index at rest: one fused
-    ``ivf_pq_encode`` kernel pass over the full-precision vectors
-    (cell assignment + residual subtraction + subspace encoding —
-    scan → encode → partitioned write, one corpus read) into the same
-    cell-partitioned parquet layout as ``write_ivf_pq_index``. The
-    input asymmetry vs the flat write is the design: a residual code
-    is only defined together with its cell, so the build starts from
-    VECTORS, not from a codes frame (there is no standalone residual
-    codes plan to hand in). Same file-count contract
-    (``files_per_cell`` per cell per build), same dropped-unservables
-    contract, same bounded models shipped by the caller."""
-    from .vectors import ivf_pq_encode
-
-    coded = ivf_pq_encode(df, codebooks, centroids, vec_col=vec_col,
-                          id_col=id_col)
-    _write_cell_partitioned(coded, len(centroids), path, mode,
-                            files_per_cell)
-
-
-def refresh_ivf_rpq_index(delta: DataFrame,
-                          codebooks: list[list[list[float]]],
-                          centroids: list[list[float]], path: str,
-                          vec_col: str = "embedding",
-                          id_col: str = "vec_id") -> None:
-    """Append-only maintenance for a ``write_ivf_rpq_index`` table —
-    ``refresh_ivf_pq_index``'s residual twin, with the same frozen-
-    model contract: encode ONLY the delta with the existing model pair
-    and append into cell partitions (byte-equivalent to a full rebuild
-    with the same models — encode is row-wise in the frozen models —
-    cost tracks |delta|). The same caveat applies doubly here: the
-    cell is PART of the residual encoding, so a model refit strictly
-    requires a full re-encode — watch ``ivf_pq_index_drift``
-    (``residual=True``) and rebuild when it says so."""
-    write_ivf_rpq_index(delta, codebooks, centroids, path, mode="append",
-                        vec_col=vec_col, id_col=id_col)
-
-
-def knn_ivf_rpq_index(index: DataFrame,
-                      codebooks: list[list[list[float]]],
-                      queries: DataFrame, k: int,
-                      centroids: list[list[float]], nprobe: int = 2,
-                      m: Optional[int] = None,
-                      vectors: Optional[DataFrame] = None,
-                      id_col: str = "vec_id",
-                      vec_col: str = "embedding",
-                      query_id_col: str = "vec_id",
-                      max_query_rows: int = DEFAULT_MAX_QUERY_ROWS
-                      ) -> DataFrame:
-    """Serve top-k from a PERSISTED residual index
-    (``write_ivf_rpq_index``) with partition pruning — the residual
-    twin of ``knn_ivf_pq_index``: the probe union prunes the scan to
-    the probed cells' files, and within it the stages are
-    ``knn_ivf_adc_residual``'s exact chain (reconstruction =
-    centroid[cell] + decoded residual, same results as the in-memory
-    path for the same models — test-pinned). The stored cell is both
-    the partition key AND part of the encoding, so the pruned scan
-    reads exactly the rows whose reconstructions live near the
-    queries — the at-rest shape residual IVFPQ was designed for."""
-    m = _resolve_m(k, m)
-    queries, pruned = _pruned_probe_scan(index, queries, centroids,
-                                         nprobe, vec_col, query_id_col,
-                                         max_query_rows)
-    # the decode adds centroid[cell] via element_at — _serve_pruned
-    # normalizes the read-back partition dtype (int by default, string
-    # with inference off) to the numeric index the reconstruction needs
-    return _serve_pruned(pruned, codebooks, queries, k, centroids,
-                         nprobe, m, vectors, id_col, vec_col,
-                         query_id_col, residual=True)
+    return knn_ivf_adc(pruned, model, queries, k, nprobe=nprobe, m=m,
+                       vectors=vectors, id_col=id_col, vec_col=vec_col,
+                       query_id_col=query_id_col)
 
 
 def _exact_rerank_shuffle(cand: DataFrame, q: DataFrame,
@@ -1898,15 +1658,14 @@ def _exact_rerank_shuffle(cand: DataFrame, q: DataFrame,
 
 
 def _batch_stage1_kernel(index: DataFrame, qp: DataFrame, m: int,
-                         codebooks: list[list[list[float]]],
-                         centroids: Optional[list[list[float]]]
-                         ) -> DataFrame:
-    """Stage 1 of the batch serving paths as a COGROUPED numpy kernel:
-    per probed cell, decode the cell's codes (codebook gather — the
-    ``write_ivf_pq_index`` build kernel's pinned ``pq_decode`` parity;
-    plus ``centroid[cell] +`` for the residual layout when
-    ``centroids`` is passed), score every (query-in-cell x row-in-cell)
-    pair, and emit each query's top-``m`` within the cell. Arrow ships
+                         model: IVFPQModel) -> DataFrame:
+    """Stage 1 of the batch serve as a COGROUPED numpy kernel: per
+    probed cell, decode the cell's codes (codebook gather — the
+    ``ivf_pq_encode`` kernel's pinned ``pq_decode`` parity; plus
+    ``centroid[cell] +`` for a residual model, elementwise-identical to
+    ``knn_ivf_adc``'s ``zip_with`` decode), score every (query-in-cell
+    x row-in-cell) pair, and emit each query's top-``m`` within the
+    cell. Arrow ships
     the m-small-int codes through the cogroup shuffle, NOT the decoded
     doubles — the decode stays inside the task.
 
@@ -1928,10 +1687,10 @@ def _batch_stage1_kernel(index: DataFrame, qp: DataFrame, m: int,
     serves score sample-sized frames where plan simplicity wins."""
     import numpy as np
 
-    Bs = [np.asarray(cb, dtype="float64") for cb in codebooks]
+    Bs = [np.asarray(cb, dtype="float64") for cb in model.codebooks]
     msub = len(Bs)
-    C = (np.asarray(centroids, dtype="float64")
-         if centroids is not None else None)
+    C = (np.asarray(model.centroids, dtype="float64")
+         if model.residual else None)
     qid_t = qp.schema["query_id"].dataType.simpleString()
     nid_t = index.schema["vec_id"].dataType.simpleString()
 
@@ -1998,24 +1757,54 @@ def _batch_stage1_kernel(index: DataFrame, qp: DataFrame, m: int,
                                       "cosine double"))
 
 
-def _ivf_batch_serve(index: DataFrame, queries: DataFrame, k: int,
-                     centroids: list[list[float]], nprobe: int, m: int,
-                     vectors: Optional[DataFrame],
-                     codebooks: list[list[list[float]]], residual: bool,
-                     id_col: str, vec_col: str,
-                     query_id_col: str) -> DataFrame:
-    """The BATCH serving core shared by the two ``*_index_batch``
-    operators: probe the queries through the Arrow kernel
-    (``probe_cells_frame`` — exploded by probe cell, no driver collect,
-    no per-row interpreted fold), cogroup-score each probed cell in the
-    stage-1 numpy kernel (``_batch_stage1_kernel`` — top-``m`` per
-    query WITHIN each cell), cut to the global per-query top-``m``
-    across cells (nq·nprobe·m rows, a bounded window), and shuffle
-    exact re-rank. (query_id, neighbor_id) pairs are unique by
-    construction — each index row has ONE stored cell and the probe set
-    is pairwise distinct — so no dedup shuffle is needed (``knn_lsh``'s
-    argument)."""
-    qp = (probe_cells_frame(queries, centroids, nprobe,
+def knn_ivf_pq_index_batch(index: DataFrame, model: IVFPQModel,
+                           queries: DataFrame, k: int, nprobe: int = 2,
+                           m: Optional[int] = None,
+                           vectors: Optional[DataFrame] = None,
+                           id_col: str = "vec_id",
+                           vec_col: str = "embedding",
+                           query_id_col: str = "vec_id") -> DataFrame:
+    """BATCH serving from a persisted ``write_ivf_pq_index`` table —
+    the other half of the serving story ``max_query_rows`` enforces:
+    ``knn_ivf_pq_index`` is the ONLINE shape (a sample-sized query
+    batch collected driver-side, its probe union pushed into the scan
+    as a partition filter — read nprobe/k_coarse of the index), while
+    this is the OFFLINE shape for query frames of ANY size — batch
+    inference, corpus self-join analytics, recall sweeps: no driver
+    collect anywhere, probes computed distributed by the Arrow kernel
+    (``probe_cells_frame``, exploded by probe cell), candidates
+    generated by a cell cogroup (each task handles one cell's
+    candidates), and the exact re-rank shuffle-joined instead of
+    broadcast. Reading the whole index instead of pruning partitions is
+    the right trade exactly when the batch is large — a million
+    queries' probe union covers every cell anyway, and one full scan
+    amortized over the batch beats per-query pruned reads.
+
+    "Reading the whole index" is the worst case, not the plan: a
+    broadcast semi-join of the probe union on the cell key plans
+    DYNAMIC PARTITION PRUNING on the index scan
+    (``cell IN dynamicpruning#...`` — plan-pinned), so a batch whose
+    probe union covers few cells still reads only those cells' files
+    at runtime, with no driver round trip — the batch path degrades
+    gracefully INTO the online path's IO shape as the batch shrinks.
+    The global top-``m`` across cells also runs as a partial
+    ``WindowGroupLimit`` before its exchange (rank-limit pushdown), so
+    each task forwards at most m rows per query. (query_id,
+    neighbor_id) pairs are unique by construction — each index row has
+    ONE stored cell and the probe set is pairwise distinct — so no
+    dedup shuffle is needed (``knn_lsh``'s argument).
+
+    Same results as ``knn_ivf_pq_index`` for the same inputs, for
+    either codec (test-pinned): the stored cell is consumed directly,
+    and stage 1 runs as a cogrouped numpy kernel that is FLOAT-IDENTICAL
+    to the family's ``cosine_col``/window stages
+    (``_batch_stage1_kernel`` — codes decode inside the task, so the
+    cogroup shuffle moves m small ints per row, not dim doubles).
+    CONTRACT: ``index`` is ``write_ivf_pq_index``'s ``(vec_id, codes,
+    cell)`` read back, built with THIS model; ``vectors`` must cover
+    every id in it (inner-join re-rank)."""
+    m = _resolve_m(k, m)
+    qp = (probe_cells_frame(queries, model.centroids, nprobe,
                             id_col=query_id_col, vec_col=vec_col)
           .select(F.col(query_id_col).alias("query_id"),
                   F.col(vec_col).alias("qv"), "__cell"))
@@ -2032,8 +1821,7 @@ def _ivf_batch_serve(index: DataFrame, queries: DataFrame, k: int,
     idx = idx.join(F.broadcast(probe_union), "__cell", "left_semi")
     w_m = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id"))
-    cand = (_batch_stage1_kernel(idx, qp, m, codebooks,
-                                 centroids if residual else None)
+    cand = (_batch_stage1_kernel(idx, qp, m, model)
             .withColumn("rank", F.row_number().over(w_m).cast("int"))
             .filter(F.col("rank") <= m))
     if vectors is None:
@@ -2045,117 +1833,38 @@ def _ivf_batch_serve(index: DataFrame, queries: DataFrame, k: int,
                                  q, vectors, k, id_col, vec_col)
 
 
-def knn_ivf_pq_index_batch(index: DataFrame,
-                           codebooks: list[list[list[float]]],
-                           queries: DataFrame, k: int,
-                           centroids: list[list[float]],
-                           nprobe: int = 2, m: Optional[int] = None,
-                           vectors: Optional[DataFrame] = None,
-                           id_col: str = "vec_id",
-                           vec_col: str = "embedding",
-                           query_id_col: str = "vec_id") -> DataFrame:
-    """BATCH serving from a persisted ``write_ivf_pq_index`` table —
-    the other half of the serving story ``max_query_rows`` enforces
-    (r11): ``knn_ivf_pq_index`` is the ONLINE shape (a sample-sized
-    query batch collected driver-side, its probe union pushed into the
-    scan as a partition filter — read nprobe/k_coarse of the index),
-    while this is the OFFLINE shape for query frames of ANY size —
-    batch inference, corpus self-join analytics, recall sweeps: no
-    driver collect anywhere, probes computed distributed by the Arrow
-    kernel, candidates generated by a cell equi-join (each task handles
-    one cell's candidates), and the exact re-rank shuffle-joined
-    instead of broadcast. Reading the whole index instead of pruning
-    partitions is the right trade exactly when the batch is large — a
-    million queries' probe union covers every cell anyway, and one full
-    scan amortized over the batch beats per-query pruned reads.
-
-    "Reading the whole index" is the worst case, not the plan: the
-    cell equi-join plans DYNAMIC PARTITION PRUNING on the index scan
-    (``cell IN dynamicpruning#...`` — plan-pinned), so a batch whose
-    probe union covers few cells still reads only those cells' files
-    at runtime, with no driver round trip — the batch path degrades
-    gracefully INTO the online path's IO shape as the batch shrinks.
-    The stage-1 top-``m`` also runs as a partial ``WindowGroupLimit``
-    before its exchange (rank-limit pushdown), so each task forwards
-    at most m rows per query, not its whole candidate set.
-
-    Same results as ``knn_ivf_pq_index`` for the same inputs
-    (test-pinned): the stored cell is consumed directly, and stage 1
-    runs as a cogrouped numpy kernel that is FLOAT-IDENTICAL to the
-    family's ``cosine_col``/window stages (``_batch_stage1_kernel`` —
-    codes decode inside the task, so the cogroup shuffle moves m small
-    ints per row, not dim doubles). CONTRACT: ``index`` is
-    ``write_ivf_pq_index``'s ``(vec_id, codes, cell)`` read back;
-    ``vectors`` must cover every id in it (inner-join re-rank)."""
-    m = _resolve_m(k, m)
-    return _ivf_batch_serve(index, queries, k, centroids, nprobe, m,
-                            vectors, codebooks, False, id_col, vec_col,
-                            query_id_col)
-
-
-def knn_ivf_rpq_index_batch(index: DataFrame,
-                            codebooks: list[list[list[float]]],
-                            queries: DataFrame, k: int,
-                            centroids: list[list[float]],
-                            nprobe: int = 2, m: Optional[int] = None,
-                            vectors: Optional[DataFrame] = None,
-                            id_col: str = "vec_id",
-                            vec_col: str = "embedding",
-                            query_id_col: str = "vec_id") -> DataFrame:
-    """BATCH serving from a persisted RESIDUAL index
-    (``write_ivf_rpq_index``) — ``knn_ivf_pq_index_batch``'s residual
-    twin: reconstruction = ``centroid[cell] + pq_decode(codes)`` (the
-    stored cell is part of the encoding), then the shared batch core —
-    kernel-probed queries, cogrouped stage-1 kernel (the centroid add
-    happens inside it, elementwise-identical to the ``zip_with``
-    decode), ADC top-``m``, shuffle exact re-rank. Same results as
-    ``knn_ivf_rpq_index`` for the same inputs (test-pinned). See the
-    flat twin for when to choose batch over the online
-    partition-pruned path."""
-    m = _resolve_m(k, m)
-    return _ivf_batch_serve(index, queries, k, centroids, nprobe, m,
-                            vectors, codebooks, True, id_col, vec_col,
-                            query_id_col)
-
-
-def refresh_ivf_pq_index(delta: DataFrame,
-                         codebooks: list[list[list[float]]],
-                         centroids: list[list[float]], path: str,
+def refresh_ivf_pq_index(delta: DataFrame, model: IVFPQModel, path: str,
                          vec_col: str = "embedding",
                          id_col: str = "vec_id") -> None:
     """Incremental maintenance for a ``write_ivf_pq_index`` table:
     encode ONLY the delta's full-precision vectors with the EXISTING
-    model pair and APPEND the coded rows into their cell partitions —
-    no rebuild, no read of the resident index. Because both the PQ
-    encode and the cell assignment are row-wise functions of the FIXED
-    (codebooks, centroids) models, appending an encoded delta is
-    byte-equivalent to rebuilding the index over base ∪ delta with the
-    same models (test-pinned) — ``mode("append")`` adds files inside
-    existing ``cell=`` directories and creates new ones as needed,
-    never touching resident files (concurrent serving keeps reading a
-    consistent index; a serve racing the append simply misses the
-    still-landing delta rows, the same read-committed story any
-    append-only parquet layout has).
+    model and APPEND the coded rows into their cell partitions — no
+    rebuild, no read of the resident index. Because the encode and the
+    cell are row-wise functions of the FIXED model (either codec),
+    appending an encoded delta is byte-equivalent to rebuilding the
+    index over base ∪ delta with the same model (test-pinned) —
+    ``mode("append")`` adds files inside existing ``cell=`` directories
+    and creates new ones as needed, never touching resident files
+    (concurrent serving keeps reading a consistent index; a serve
+    racing the append simply misses the still-landing delta rows, the
+    same read-committed story any append-only parquet layout has).
 
     What this does NOT do — and why ``ivf_pq_index_drift`` exists: the
-    MODELS never move. As deltas accumulate, the corpus distribution
+    MODEL never moves. As deltas accumulate, the corpus distribution
     can drift away from the quantizers it was trained on (cells skew,
     reconstruction error grows, recall sags), which an append-only
     index cannot see from the write path. Run the drift report on a
     held-out query sample after refresh cycles; when it recommends a
-    refit, rebuild with ``ivf_pq_fit`` + ``write_ivf_pq_index``
-    (mode="overwrite") — the same candidate/promote discipline as
-    ``jobs/incremental_refresh.py``'s rollup maintenance.
+    refit, refit and rebuild with ``write_ivf_pq_index``
+    (mode="overwrite"). A residual model's refit always needs that full
+    re-encode: its cell is part of every stored code.
 
-    Scale shape: one map-only pass over the delta (the ``pq_encode``
-    Arrow kernel fused with the assignment kernel's cells) and one
-    build shuffle into the partitioned write — cost tracks |delta|,
-    never |index|. Rows the codec cannot key (NULL / wrong-dimension /
+    Scale shape: one map-only encode pass over the delta and one build
+    shuffle into the partitioned write — cost tracks |delta|, never
+    |index|. Rows the codec cannot key (NULL / wrong-dimension /
     NULL-element) drop, ``write_ivf_pq_index``'s exact contract."""
-    from .vectors import pq_encode
-
-    codes = pq_encode(delta, codebooks, vec_col=vec_col, id_col=id_col)
-    write_ivf_pq_index(codes, codebooks, centroids, path, mode="append")
+    write_ivf_pq_index(delta, model, path, mode="append", vec_col=vec_col,
+                       id_col=id_col)
 
 
 def compact_ivf_pq_index(spark, path: str,
@@ -2173,38 +1882,33 @@ def compact_ivf_pq_index(spark, path: str,
     mix of a partially-deleted one). Returns the compactor's
     ``{files_before, files_after, bytes, partitions}`` telemetry.
 
-    Layout parity (r11): the residual index (``write_ivf_rpq_index``)
-    shares the flat layout exactly — same ``(vec_id, codes)`` columns,
-    same ``cell=`` partition dirs — so this one compactor bounds BOTH
-    families' refresh-cycle file accumulation (test-pinned over a
-    thrice-refreshed residual index, serving rows and probe pruning
-    asserted unchanged).
+    Both codecs write the same ``(vec_id, codes)`` columns under the
+    same ``cell=`` partition dirs, so this one compactor serves either
+    (test-pinned per codec over a thrice-refreshed index, serving rows
+    and probe pruning asserted unchanged).
 
     Lifecycle: ``write_ivf_pq_index`` (build) → ``refresh_ivf_pq_index``
     (append deltas) → this (bound the file count) →
     ``ivf_pq_index_drift`` (watch recall) → refit + rebuild when the
-    flag says so — and identically for the ``_rpq_`` family."""
+    flag says so."""
     from ..io.maintenance import compact_dataset
 
     return compact_dataset(spark, path,
                            target_file_bytes=target_file_bytes)
 
 
-def ivf_pq_index_drift(index: DataFrame,
-                       codebooks: list[list[list[float]]],
-                       centroids: list[list[float]],
+def ivf_pq_index_drift(index: DataFrame, model: IVFPQModel,
                        vectors: DataFrame, queries: DataFrame, k: int = 5,
                        nprobe: int = 2, m: Optional[int] = None,
                        recall_floor: float = 0.8,
                        id_col: str = "vec_id",
                        vec_col: str = "embedding",
                        query_id_col: str = "vec_id",
-                       residual: bool = False,
                        max_query_rows: int = DEFAULT_MAX_QUERY_ROWS
                        ) -> DataFrame:
     """Model-drift telemetry for an append-maintained IVF-PQ index: ONE
     aggregated row comparing what the persisted index actually serves
-    (``knn_ivf_pq_index`` with the CURRENT models, partition-pruned)
+    (``knn_ivf_pq_index`` with the CURRENT model, partition-pruned)
     against brute-force truth over the full-precision corpus on a
     held-out query sample. Output: ``(n_queries, n_servable, mean_recall,
     min_recall, refit_recommended)`` — ``refit_recommended`` when the
@@ -2244,15 +1948,11 @@ def ivf_pq_index_drift(index: DataFrame,
     # pass, two extra cluster-wide barriers at scale.
     m_res = _resolve_m(k, m)
     queries, pruned, pinned_rows = _pruned_probe_scan(
-        index, queries, centroids, nprobe, vec_col, query_id_col,
+        index, queries, model.centroids, nprobe, vec_col, query_id_col,
         max_query_rows, with_rows=True)
-    # ``residual=True`` watches a write_ivf_rpq_index table instead —
-    # same report, the serving path under test swaps to the residual
-    # pruned scan (the one whose frozen models are COSTLIER to refit,
-    # since every stored code re-encodes with the new cell)
-    served = (_serve_pruned(pruned, codebooks, queries, k, centroids,
-                            nprobe, m_res, vectors, id_col, vec_col,
-                            query_id_col, residual=residual)
+    served = (knn_ivf_adc(pruned, model, queries, k, nprobe=nprobe,
+                          m=m_res, vectors=vectors, id_col=id_col,
+                          vec_col=vec_col, query_id_col=query_id_col)
               .select("query_id", "neighbor_id",
                       F.lit(1).alias("__hit")))
     # the truth side keeps only queries the quantizer can KEY
@@ -2262,7 +1962,7 @@ def ivf_pq_index_drift(index: DataFrame,
     # n_servable — drift and unservability are different signals
     from .vectors import well_formed_pred
     servable = queries.filter(
-        well_formed_pred(vec_col, len(centroids[0])))
+        well_formed_pred(vec_col, len(model.centroids[0])))
     truth = knn_bruteforce(vectors, servable, k, id_col=id_col,
                            vec_col=vec_col, query_id_col=query_id_col)
     # n_queries = COUNT(DISTINCT id) over the PINNED batch — the rows

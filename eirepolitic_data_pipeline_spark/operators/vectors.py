@@ -13,7 +13,12 @@ plumbing a 100 TB embedding/ANN pipeline needs around its indexes.
   product quantization: m independent deterministic subspace codebooks
   (one fused kernel pass per Lloyd round for ALL subspaces), m-byte
   codes per vector, and reconstruction-by-concatenation, serving
-  through ``operators.similarity.knn_pq_adc`` / ``knn_ivf_adc``.
+  through ``operators.similarity.knn_pq_adc``.
+- ``ivf_pq_fit`` / ``ivf_pq_fit_residual`` / ``ivf_pq_encode`` — the
+  IVF-PQ model (``IVFPQModel``: coarse centroids, subspace codebooks,
+  and whether the codebooks quantize residuals) and its one encoded
+  layout ``(vec_id, codes, cell)``, served by
+  ``operators.similarity.knn_ivf_adc`` and the persisted-index family.
 
 All are expressed over Catalyst array higher-order functions (zip_with /
 transform / aggregate) for their literal semantic twins, with Arrow
@@ -29,6 +34,7 @@ to executors as a broadcast.
 from __future__ import annotations
 
 import math
+from dataclasses import dataclass
 from typing import Optional
 
 from pyspark.sql import Column, DataFrame
@@ -534,45 +540,86 @@ def pq_fit(df: DataFrame, m: int = 4, k: int = 16, iters: int = 1,
     return books
 
 
-def ivf_pq_fit(df: DataFrame, k_coarse: int = 8, m: int = 4,
-               k_sub: int = 16, iters: int = 1,
-               vec_col: str = "embedding", id_col: str = "vec_id",
-               round_dp: int = 6
-               ) -> tuple[list[list[float]], list[list[list[float]]]]:
-    """Train the IVFPQ model PAIR — the coarse quantizer's ``k_coarse``
-    centroids and the ``m`` subspace codebooks of ``k_sub`` codewords —
-    in ONE corpus scan per Lloyd round: one shared seed collection (the
-    max(k_coarse, k_sub) lowest-id vectors; each model takes its top-k
-    slice, exactly what the separate fits would seed with) and one
-    fused kernel pass emitting BOTH models' per-(cluster, pos) partial
-    sums. Returns ``(centroids, codebooks)``, bit-identical to
-    ``(kmeans_fit(df, k_coarse, iters), pq_fit(df, m, k_sub, iters))``
-    — test-pinned — because the coarse and subspace updates never
-    interact: same assignments, same rounded means, same
-    empty-cluster-keeps-previous rule.
+@dataclass(frozen=True)
+class IVFPQModel:
+    """A trained IVF-PQ model (Jégou et al. 2011): the coarse quantizer's
+    ``centroids`` (k_coarse x dim), the ``m`` subspace ``codebooks``
+    (k_sub codewords of dim/m each), and the codec — ``residual``
+    codebooks quantize ``x - centroids[cell(x)]`` (``ivf_pq_fit_residual``,
+    FAISS's IVFPQ), flat ones quantize ``x`` itself (``ivf_pq_fit``).
+    Every later step of the lifecycle takes this one value and reads the
+    codec from it: ``ivf_pq_encode``, ``knn_ivf_adc``,
+    ``write_ivf_pq_index`` / ``refresh_ivf_pq_index``,
+    ``knn_ivf_pq_index`` / ``knn_ivf_pq_index_batch`` and
+    ``ivf_pq_index_drift`` — so codes can only be served by the codec
+    that made them.
 
-    Why one pass matters: an IVFPQ deployment always needs both models,
-    and the separate fits cost (2 seed TakeOrdereds + 2 kernel scans)
-    per round — at 100 TB, two extra reads of the corpus per round for
-    byte-identical output. This is also the honest-refit shave for the
-    composed serving certification (q86)."""
+    Construction checks the pair is one model: well-formed codebooks
+    (``_validate_codebooks``) and centroids in the codebooks'
+    reconstruction dimension; a mismatch raises ValueError."""
+    centroids: list[list[float]]
+    codebooks: list[list[list[float]]]
+    residual: bool = False
+
+    def __post_init__(self):
+        m, _, sub = _validate_codebooks(self.codebooks)
+        if not self.centroids or not self.centroids[0]:
+            raise ValueError("centroids must be a non-empty list of "
+                             "non-empty vectors (kmeans_fit's output)")
+        if len(self.centroids[0]) != m * sub:
+            raise ValueError(
+                f"centroid dimension {len(self.centroids[0])} != the "
+                f"codebooks' reconstruction dimension {m * sub} — the "
+                "coarse quantizer and the PQ model must be trained on the "
+                "same space")
+
+
+def _ivf_pq_seeds(vecs: DataFrame, k_coarse: int, m: int, k_sub: int,
+                  op_name: str):
+    """The shared seed collection of both IVF-PQ fits: the
+    max(k_coarse, k_sub) lowest-id vectors (each model takes its top-k
+    slice, exactly what the separate fits would seed with) and the
+    subspace width. Raises on the fits' shape contracts."""
     if k_coarse < 1 or k_sub < 1:
         raise ValueError("k_coarse and k_sub must be >= 1")
     if m < 1:
         raise ValueError("m must be >= 1")
-    vecs = _well_formed_vectors(df, vec_col, id_col)
     seeds = _seed_vectors(vecs, max(k_coarse, k_sub))
     dim = len(seeds[0])
     if dim % m:
         raise ValueError(
-            f"ivf_pq_fit: dimension {dim} is not divisible by m={m} "
+            f"{op_name}: dimension {dim} is not divisible by m={m} "
             "subspaces — product quantization requires equal-width "
             "subspaces")
-    sub = dim // m
+    return seeds, dim // m
+
+
+def ivf_pq_fit(df: DataFrame, k_coarse: int = 8, m: int = 4,
+               k_sub: int = 16, iters: int = 1,
+               vec_col: str = "embedding", id_col: str = "vec_id",
+               round_dp: int = 6) -> IVFPQModel:
+    """Train the flat IVF-PQ model — the coarse quantizer's ``k_coarse``
+    centroids and the ``m`` subspace codebooks of ``k_sub`` codewords
+    over the RAW vectors — in ONE corpus scan per Lloyd round: one
+    shared seed collection and one fused kernel pass emitting BOTH
+    models' per-(cluster, pos) partial sums. The model's centroids and
+    codebooks are bit-identical to ``kmeans_fit(df, k_coarse, iters)``
+    and ``pq_fit(df, m, k_sub, iters)`` — test-pinned — because the
+    coarse and subspace updates never interact: same assignments, same
+    rounded means, same empty-cluster-keeps-previous rule.
+
+    Why one pass matters: an IVFPQ deployment always needs both models,
+    and the separate fits cost (2 seed TakeOrdereds + 2 kernel scans)
+    per round — at 100 TB, two extra reads of the corpus per round for
+    byte-identical output."""
+    vecs = _well_formed_vectors(df, vec_col, id_col)
+    seeds, sub = _ivf_pq_seeds(vecs, k_coarse, m, k_sub, "ivf_pq_fit")
     cents = [list(s) for s in seeds[:k_coarse]]
     books = [[s[j * sub:(j + 1) * sub] for s in seeds[:k_sub]]
              for j in range(m)]
-    return _fused_lloyd(vecs, cents, books, iters, round_dp, "ivf_pq_fit")
+    cents, books = _fused_lloyd(vecs, cents, books, iters, round_dp,
+                                "ivf_pq_fit")
+    return IVFPQModel(cents, books)
 
 
 def _residual_frame(vecs: DataFrame,
@@ -606,26 +653,22 @@ def ivf_pq_fit_residual(df: DataFrame, k_coarse: int = 8, m: int = 4,
                         k_sub: int = 16, iters: int = 1,
                         vec_col: str = "embedding",
                         id_col: str = "vec_id", round_dp: int = 6
-                        ) -> tuple[list[list[float]],
-                                   list[list[list[float]]]]:
-    """Train the RESIDUAL-encoding IVFPQ model pair — the actual FAISS
-    IVFPQ recipe (Jégou et al. 2011 §III): fit the coarse quantizer on
-    the raw vectors (``kmeans_fit``'s exact rounded-Lloyd contract),
-    then fit the ``m`` subspace codebooks on the RESIDUALS
-    ``x - centroid(cell(x))`` instead of the raw vectors. Returns
-    ``(centroids, codebooks)`` for ``ivf_pq_encode`` /
-    ``knn_ivf_adc_residual``.
+                        ) -> IVFPQModel:
+    """Train the RESIDUAL IVF-PQ model — the actual FAISS IVFPQ recipe
+    (Jégou et al. 2011 §III): fit the coarse quantizer on the raw
+    vectors (``kmeans_fit``'s exact rounded-Lloyd contract), then fit
+    the ``m`` subspace codebooks on the RESIDUALS
+    ``x - centroid(cell(x))`` instead of the raw vectors. Returns an
+    ``IVFPQModel`` with ``residual=True``.
 
     Why residuals: the coarse centroids absorb the corpus's large-scale
     structure, so the residual distribution is far tighter than the raw
     one — the same m x k_sub codebook budget spends its codewords on a
     smaller cell of space, cutting reconstruction error at identical
-    code size (``ivf_pq_fit``'s flat variant quantizes raw vectors and
-    is the cheaper-to-derive stand-in; this is the real thing). The
-    cost: the cell becomes PART of the encoding — decode needs the
-    cell to add its centroid back, so codes travel as
-    ``(vec_id, codes, cell)`` (exactly the persisted index layout) and
-    a row can never be re-binned without re-encoding.
+    code size (``ivf_pq_fit``'s flat codec quantizes raw vectors and is
+    the cheaper-to-derive stand-in). The cost: a row's code is only
+    defined together with its cell, so a row can never be re-binned
+    without re-encoding.
 
     Sequencing is inherent, not an implementation shortcut: residuals
     are undefined until the coarse model is final, so training is
@@ -636,29 +679,19 @@ def ivf_pq_fit_residual(df: DataFrame, k_coarse: int = 8, m: int = 4,
     ``pq_fit``'s pinned recipe seeded by the k_sub LOWEST-ID residual
     vectors — the DuckDB oracle (q89) re-derives the whole chain.
 
-    One shared seed collection (r11 optimization round): the residual
-    seeds ARE the residuals of the k_sub lowest-id RAW vectors (the
-    residual kernel is 1:1 on vec_id), and both the raw seeds and the
-    coarse model are already on the driver — so the subspace seed
-    vectors are computed locally (``_nearest_blocks``' pinned argmin +
-    exact float64 subtraction, the kernel's own recipe) instead of
-    re-scanning the residual frame for a second seed TakeOrdered. At
-    100 TB that was one full extra corpus pass (scan + assignment
-    kernel) for byte-identical seeds."""
+    One shared seed collection: the residual seeds ARE the residuals of
+    the k_sub lowest-id RAW vectors (the residual kernel is 1:1 on
+    vec_id), and both the raw seeds and the coarse model are already on
+    the driver — so the subspace seed vectors are computed locally
+    (``_nearest_blocks``' pinned argmin + exact float64 subtraction, the
+    kernel's own recipe) instead of re-scanning the residual frame for a
+    second seed TakeOrdered. At 100 TB that is one full corpus pass
+    (scan + assignment kernel) saved for byte-identical seeds."""
     import numpy as np
 
-    if k_sub < 1:
-        raise ValueError("k must be >= 1")
-    if m < 1:
-        raise ValueError("m must be >= 1")
     vecs = _well_formed_vectors(df, vec_col, id_col)
-    seeds = _seed_vectors(vecs, max(k_coarse, k_sub))
-    dim = len(seeds[0])
-    if dim % m:
-        raise ValueError(
-            f"pq_fit: dimension {dim} is not divisible by m={m} subspaces"
-            " — product quantization requires equal-width subspaces")
-    sub = dim // m
+    seeds, sub = _ivf_pq_seeds(vecs, k_coarse, m, k_sub,
+                               "ivf_pq_fit_residual")
     cents = _lloyd(vecs, [list(s) for s in seeds[:k_coarse]], iters,
                    round_dp)
     S = np.asarray(seeds[:k_sub], dtype="float64")
@@ -670,40 +703,39 @@ def ivf_pq_fit_residual(df: DataFrame, k_coarse: int = 8, m: int = 4,
     res = _residual_frame(vecs, cents)
     _, books = _fused_lloyd(res, None, books, iters, round_dp,
                             "ivf_pq_fit_residual")
-    return cents, books
+    return IVFPQModel(cents, books, residual=True)
 
 
-def ivf_pq_encode(df: DataFrame, codebooks: list[list[list[float]]],
-                  centroids: list[list[float]],
+def ivf_pq_encode(df: DataFrame, model: IVFPQModel,
                   vec_col: str = "embedding",
                   id_col: str = "vec_id") -> DataFrame:
-    """Residual-IVFPQ encoding for a whole frame in ONE fused Arrow
-    kernel pass: assign each vector's coarse cell (``_nearest_blocks``'
-    pinned argmin over the raw vector), subtract that centroid, and
-    PQ-encode the residual per subspace. Returns exactly
-    ``(vec_id, codes array<int>, cell int)`` — the persisted-index
-    layout with the cell that IS part of the residual encoding (decode
-    = centroid[cell] + codeword concatenation;
-    ``knn_ivf_adc_residual``'s contract). Rows the codec cannot key
-    (NULL / wrong-dimension / NULL-element) are DROPPED, the
-    ``centroid_cells_frame`` contract. At 100 TB this is the one pass
-    that rewrites the wide embedding table into the serving table —
-    same scan cost as the flat ``pq_encode`` + cells pair, better
-    reconstructions per stored byte."""
+    """IVF-PQ encoding for a whole frame in ONE Arrow kernel pass,
+    returning exactly ``(vec_id, codes array<int>, cell int)`` — the one
+    encoded layout of both codecs, and the persisted index's columns.
+
+    - ``model.residual``: assign each vector's coarse cell
+      (``_nearest_blocks``' pinned argmin over the raw vector), subtract
+      that centroid, and PQ-encode the residual per subspace. The cell
+      is part of the encoding: decode = centroid[cell] + codewords.
+    - flat: PQ-encode the raw vector per subspace (``pq_encode``'s
+      codes), then key the row to the nearest centroid of its
+      RECONSTRUCTION (the codeword gather reproduces ``pq_decode``'s
+      exact doubles, so the cell equals ``centroid_cells`` over the
+      decoded vector — test-pinned). The cell is self-consistent with
+      serving, which scores the reconstructions.
+
+    Rows the codec cannot key (NULL / wrong-dimension / NULL-element)
+    are DROPPED, the ``centroid_cells_frame`` contract. At 100 TB this
+    is the one pass that rewrites the wide embedding table into the
+    serving table."""
     import numpy as np
 
-    m, _, sub = _validate_codebooks(codebooks)
+    m = len(model.codebooks)
+    sub = len(model.codebooks[0][0])
     dim = m * sub
-    if not centroids or not centroids[0]:
-        raise ValueError("centroids must be a non-empty list of "
-                         "non-empty vectors (kmeans_fit's output)")
-    if len(centroids[0]) != dim:
-        raise ValueError(
-            f"centroid dimension {len(centroids[0])} != the codebooks' "
-            f"reconstruction dimension {dim} — the coarse quantizer and "
-            "the residual PQ model must be trained on the same space")
-    Bs = [np.asarray(cb, dtype="float64") for cb in codebooks]
-    C = np.asarray(centroids, dtype="float64")
+    residual = model.residual
+    Bs = [np.asarray(cb, dtype="float64") for cb in model.codebooks]
+    C = np.asarray(model.centroids, dtype="float64")
     vecs = (df.filter(well_formed_pred(vec_col, dim))
             .select(F.col(id_col).alias("vec_id"),
                     F.col(vec_col).cast("array<double>").alias("__v")))
@@ -715,13 +747,18 @@ def ivf_pq_encode(df: DataFrame, codebooks: list[list[list[float]]],
             if len(pdf) == 0:
                 continue
             V = _stack_batch(pdf, dim)
-            cell, _ = _nearest_blocks(V, C)
-            R = V - C[cell]
+            if residual:
+                cell, _ = _nearest_blocks(V, C)
+                V = V - C[cell]
             codes = np.empty((len(pdf), m), dtype="int32")
             for j in range(m):
-                best, _ = _nearest_blocks(R[:, j * sub:(j + 1) * sub],
+                best, _ = _nearest_blocks(V[:, j * sub:(j + 1) * sub],
                                           Bs[j])
                 codes[:, j] = best
+            if not residual:
+                recon = np.concatenate([Bs[j][codes[:, j]]
+                                        for j in range(m)], axis=1)
+                cell, _ = _nearest_blocks(recon, C)
             yield pd.DataFrame({"vec_id": pdf["vec_id"],
                                 "codes": list(codes),
                                 "cell": cell.astype("int32")})

@@ -88,19 +88,6 @@ def get_spark(app_name: str = "eirepolitic_data_pipeline_spark",
     return spark
 
 
-def load_tables(spark: SparkSession, sf_dir: str,
-                tables: tuple[str, ...] = ("region", "nation", "customer", "supplier",
-                                           "part", "orders", "lineitem", "events",
-                                           "documents", "embeddings")) -> dict:
-    """Load the test star schema as DataFrames and register temp views."""
-    out = {}
-    for t in tables:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet"))
-        df.createOrReplaceTempView(t)
-        out[t] = df
-    return out
-
-
 def local_frame(spark: SparkSession, rows, schema,
                 rows_per_slice: int = 25_000):
     """``createDataFrame`` for a SMALL driver-side row list without the

@@ -20,8 +20,13 @@ the ``availableNow`` analog used by the tests)."""
 
 from __future__ import annotations
 
+from typing import TYPE_CHECKING
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+if TYPE_CHECKING:
+    from ..operators.vectors import IVFPQModel
 
 
 def tumbling_event_counts(events: DataFrame, window: str = "1 hour",
@@ -214,18 +219,16 @@ def streaming_merge_sink(events: DataFrame, writer, table: str, policy,
     return w.start()
 
 
-def streaming_index_refresh_sink(vectors: DataFrame,
-                                 codebooks: list,
-                                 centroids: list, path: str, *,
-                                 residual: bool = False,
+def streaming_index_refresh_sink(vectors: DataFrame, model: IVFPQModel,
+                                 path: str, *,
                                  id_col: str = "vec_id",
                                  vec_col: str = "embedding",
                                  checkpoint_dir: str | None = None,
                                  processing_interval: str | None = None):
     """Continuous vector ingestion into a persisted IVF-PQ serving
-    index: each micro-batch encodes with the FROZEN model pair and
-    appends into cell partitions — ``refresh_ivf_pq_index`` (or the
-    residual twin) driven by Structured Streaming instead of cron, the
+    index: each micro-batch encodes with the FROZEN ``IVFPQModel`` (either
+    codec) and appends into cell partitions — ``refresh_ivf_pq_index``
+    driven by Structured Streaming instead of cron, the
     streaming leg of the index lifecycle (build → refresh → compact →
     drift-watch → refit). Serving keeps reading a consistent index
     throughout: the append adds files inside ``cell=`` dirs and a serve
@@ -253,9 +256,7 @@ def streaming_index_refresh_sink(vectors: DataFrame,
     (the tests' and backfills' shape)."""
     import os
 
-    from ..operators.similarity import (refresh_ivf_pq_index,
-                                        refresh_ivf_rpq_index)
-    refresh = refresh_ivf_rpq_index if residual else refresh_ivf_pq_index
+    from ..operators.similarity import refresh_ivf_pq_index
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
@@ -264,8 +265,8 @@ def streaming_index_refresh_sink(vectors: DataFrame,
         marker = os.path.join(marker_dir, str(epoch_id))
         if os.path.exists(marker):
             return  # replayed epoch, already fully applied
-        refresh(batch_df, codebooks, centroids, path,
-                vec_col=vec_col, id_col=id_col)
+        refresh_ivf_pq_index(batch_df, model, path, vec_col=vec_col,
+                             id_col=id_col)
         os.makedirs(marker_dir, exist_ok=True)
         with open(marker, "w") as f:
             f.write("applied")
@@ -274,8 +275,8 @@ def streaming_index_refresh_sink(vectors: DataFrame,
         # batch/backfill shape: apply once, no marker (the caller owns
         # idempotence when there is no checkpoint to replay from)
         if not vectors.isEmpty():
-            refresh(vectors, codebooks, centroids, path,
-                    vec_col=vec_col, id_col=id_col)
+            refresh_ivf_pq_index(vectors, model, path, vec_col=vec_col,
+                                 id_col=id_col)
         return None
     w = vectors.writeStream.foreachBatch(apply_batch)
     if processing_interval is None:

@@ -49,8 +49,8 @@ from . import quality  # noqa: F401,E402
 # registered, ~47 fall outside every round. Rank the workload so the
 # window always covers the queries that NEED a fresh driver-green row:
 #   front — q91-q101 (new round 11, never driver-certified: the
-#           residual drift report, ivf_pq_index_drift
-#           residual=True over a written rpq index, the two
+#           residual drift report, ivf_pq_index_drift over
+#           a written residual index, the two
 #           distributed BATCH serving paths, and the PCA family —
 #           oracle-certified covariance + incremental-moments
 #           covariance, rows-only projection, the PCA-reduced
@@ -70,7 +70,7 @@ from . import quality  # noqa: F401,E402
 #           untouched since, each cheap, all overdue past the 4-round
 #           rule; then the similarity.py changed-file block
 #           q26/q27/q37/q65/q78/q80-q86 (their functions are
-#           byte-unchanged but the file gained _pin_query_batch and
+#           byte-unchanged but the file gained the query-batch pin and
 #           threaded signatures — the changed-file rule keeps them
 #           inside); then one sentinel per implementation family whose
 #           builder module (datapipe.py gained q91) changed this
@@ -98,9 +98,9 @@ from . import quality  # noqa: F401,E402
 #           and MUST rotate back inside in round 12).
 # Rotate this list each round as certifications land and code changes.
 _CERT_PRIORITY = [
-    # (1a) the persisted-index family: post-prune serve refactor
-    # (_serve_pruned), the drift single-pin, AND the pair kernel all
-    # land here — the highest-risk block of the round
+    # (1a) the persisted-index family: one IVFPQModel lifecycle (both
+    # codecs behind the same entry points), the drift single-pin, AND
+    # the pair kernel all land here — the highest-risk block
     "q87_knn_ivf_pq_index",
     "q88_index_drift_report",
     "q89_knn_ivf_rpq",

@@ -1127,7 +1127,7 @@ def q58_stratified_sample(spark, sf_dir):
     FROM events
     GROUP BY 1
     """,
-    survey_ref="beyond-ref: mergeable HLL sketch rollups (operators/sketches.py)",
+    survey_ref="beyond-ref: mergeable HLL sketch rollups (Spark's DataSketches hll_sketch_agg / hll_union_agg / hll_sketch_estimate)",
 )
 def q59_hll_sketch_rollup(spark, sf_dir):
     """The incremental distinct-count path end-to-end: the event log is
@@ -1138,14 +1138,23 @@ def q59_hll_sketch_rollup(spark, sf_dir):
     within the lg_k=12 error budget of the exact distinct computed from
     the full log. This is the refresh-cycle contract: history is never
     rescanned, only sketch bytes merge."""
-    from ..operators.sketches import hll_estimate, hll_merge, hll_rollup
     ev = t(spark, sf_dir, "events").select("event_id", "event_type",
                                            "user_id")
-    parts = [hll_rollup(ev.filter(F.pmod(F.col("event_id"), F.lit(3)) == i),
-                        ["event_type"], "user_id")
+    # lg_k=12: ~1.6% relative error, 4 KiB per group
+    parts = [ev.filter(F.pmod(F.col("event_id"), F.lit(3)) == i)
+             .groupBy("event_type")
+             .agg(F.hll_sketch_agg("user_id", F.lit(12))
+                  .alias("distinct_sketch"))
              for i in range(3)]
     stacked = parts[0].unionByName(parts[1]).unionByName(parts[2])
-    est = hll_estimate(hll_merge(stacked, ["event_type"]))
+    # allowDifferentLgConfigK: sketches of different precisions merge
+    # at the coarser one
+    est = (stacked.groupBy("event_type")
+           .agg(F.hll_union_agg(F.col("distinct_sketch"), F.lit(True))
+                .alias("distinct_sketch"))
+           .withColumn("approx_distinct",
+                       F.hll_sketch_estimate("distinct_sketch"))
+           .drop("distinct_sketch"))
     exact = ev.groupBy("event_type").agg(
         F.countDistinct("user_id").alias("exact_users"))
     return (est.join(exact, "event_type")
@@ -3389,36 +3398,36 @@ def _ivf_adc_chain_sql(m_sub: int = 4, kc: int = 8,
 @register(
     "q86_knn_ivf_adc",
     _ivf_adc_oracle_sql(),
-    survey_ref="beyond-ref: FAISS-shape IVFPQ, fully literal (operators/similarity.py:knn_ivf_adc — trained coarse cells over pq_decode reconstructions, nprobe probing, ADC scoring, exact re-rank)",
+    survey_ref="beyond-ref: FAISS-shape IVFPQ, fully literal (operators/similarity.py:knn_ivf_adc — trained coarse cells keyed on pq_decode reconstructions by ivf_pq_encode, nprobe probing, ADC scoring, exact re-rank)",
     memoize=False,  # kmeans_fit + pq_fit COLLECT their models at
     # construction (q73's rule) — memoizing the plan would cache the fits
 )
 def q86_knn_ivf_adc(spark, sf_dir):
     """The name 'IVF-PQ' made fully literal (r9): trained coarse
-    quantizer (``kmeans_fit`` k=8) + REAL product quantization
-    (``pq_fit`` m=4 subspace codebooks, ``pq_encode`` codes) + ADC
-    scoring + exact re-rank, as ONE oracle-certified chain
-    (``knn_ivf_adc``). q84 certified the composition with the int8
-    stand-in codec; q85 certified the PQ codec + exhaustive ADC; this
-    row certifies their union — index cells argmin'd over the PQ
-    reconstructions by the Arrow kernel, nprobe=3 probing by raw query
-    distance, compressed scoring inside probed cells, top-m=10, exact
-    top-k=5. The serving scan a 1000-executor cluster runs here reads
-    m=4 small ints per corpus row plus two bounded broadcast models —
-    the narrowest serving path in the family."""
+    quantizer (k=8) + REAL product quantization (m=4 subspace
+    codebooks) + ADC scoring + exact re-rank, as ONE oracle-certified
+    chain (``ivf_pq_fit`` → ``ivf_pq_encode`` → ``knn_ivf_adc``). q84
+    certified the composition with the int8 stand-in codec; q85
+    certified the PQ codec + exhaustive ADC; this row certifies their
+    union — index cells argmin'd over the PQ reconstructions by the
+    encode kernel, nprobe=3 probing by raw query distance, compressed
+    scoring inside probed cells, top-m=10, exact top-k=5. The serving
+    scan a 1000-executor cluster runs here reads m=4 small ints and a
+    cell per corpus row plus the bounded broadcast model — the
+    narrowest serving path in the family."""
     from ..operators.similarity import knn_ivf_adc
-    from ..operators.vectors import ivf_pq_fit, pq_encode
+    from ..operators.vectors import ivf_pq_encode, ivf_pq_fit
     emb = (_no_null_elements(spread(t(spark, sf_dir, "embeddings"), KERNEL_SLICE_BYTES))
            .filter(F.col("embedding").isNotNull()
                    & (F.size("embedding") > 0)))
     # the fused trainer: bit-identical to the separate
     # kmeans_fit(k=8) + pq_fit(m=4, k=8) pair (test-pinned), in ONE
     # seed collection + ONE kernel pass per Lloyd round (r9)
-    cents, books = ivf_pq_fit(emb, k_coarse=8, m=4, k_sub=8, iters=1)
-    codes = pq_encode(emb, books)
+    model = ivf_pq_fit(emb, k_coarse=8, m=4, k_sub=8, iters=1)
+    codes = ivf_pq_encode(emb, model)
     queries = emb.filter(F.col("vec_id") < 20)
-    out = knn_ivf_adc(codes, books, queries, k=5, m=10, centroids=cents,
-                      nprobe=3, vectors=emb)
+    out = knn_ivf_adc(codes, model, queries, k=5, m=10, nprobe=3,
+                      vectors=emb)
     return out.select("query_id", "neighbor_id",
                       F.round("cosine", 6).alias("cosine"), "rank")
 
@@ -3439,7 +3448,7 @@ def _index_tmp_path(tag: str, sf_dir: str) -> str:
     process per scale dir in the system temp). Each query keeps its
     OWN root (``tag``): a shared path rewritten by a sibling builder
     between one query's construction and action would change its rows
-    — the files reopen the two-time-point window ``_pin_query_batch``
+    — the files reopen the two-time-point window ``_pruned_probe_scan``
     closes for queries."""
     import atexit
     import os as _os
@@ -3463,8 +3472,8 @@ def _index_tmp_path(tag: str, sf_dir: str) -> str:
 )
 def q87_knn_ivf_pq_index(spark, sf_dir):
     """The AT-REST serving path certified end to end (r10, the r9
-    verdict's #3 ask): train the model pair (``ivf_pq_fit``), encode
-    the corpus (``pq_encode``), WRITE the partitioned index
+    verdict's #3 ask): train the model (``ivf_pq_fit``), encode the
+    corpus and WRITE the partitioned index in one pass
     (``write_ivf_pq_index`` — parquet partitioned by coarse cell), read
     it back cold, and serve top-k through ``knn_ivf_pq_index`` — the
     probe union pushed down as a ``cell IN (...)`` PARTITION filter, so
@@ -3478,18 +3487,17 @@ def q87_knn_ivf_pq_index(spark, sf_dir):
     re-bucketing per batch."""
     from ..operators.similarity import (knn_ivf_pq_index,
                                         write_ivf_pq_index)
-    from ..operators.vectors import ivf_pq_fit, pq_encode
+    from ..operators.vectors import ivf_pq_fit
     emb = (_no_null_elements(spread(t(spark, sf_dir, "embeddings"), KERNEL_SLICE_BYTES))
            .filter(F.col("embedding").isNotNull()
                    & (F.size("embedding") > 0)))
-    cents, books = ivf_pq_fit(emb, k_coarse=8, m=4, k_sub=8, iters=1)
-    codes = pq_encode(emb, books)
+    model = ivf_pq_fit(emb, k_coarse=8, m=4, k_sub=8, iters=1)
     path = _index_tmp_path("q87", sf_dir)
-    write_ivf_pq_index(codes, books, cents, path)
+    write_ivf_pq_index(emb, model, path)
     index = spark.read.parquet(path)
     queries = emb.filter(F.col("vec_id") < 20)
-    out = knn_ivf_pq_index(index, books, queries, k=5, m=10,
-                           centroids=cents, nprobe=2, vectors=emb)
+    out = knn_ivf_pq_index(index, model, queries, k=5, m=10, nprobe=2,
+                           vectors=emb)
     return out.select("query_id", "neighbor_id",
                       F.round("cosine", 6).alias("cosine"), "rank")
 
@@ -3578,17 +3586,16 @@ def q88_index_drift_report(spark, sf_dir):
     driver-certified contract, not just a pytest pin."""
     from ..operators.similarity import (ivf_pq_index_drift,
                                         write_ivf_pq_index)
-    from ..operators.vectors import ivf_pq_fit, pq_encode
+    from ..operators.vectors import ivf_pq_fit
     emb = (_no_null_elements(spread(t(spark, sf_dir, "embeddings"), KERNEL_SLICE_BYTES))
            .filter(F.col("embedding").isNotNull()
                    & (F.size("embedding") > 0)))
-    cents, books = ivf_pq_fit(emb, k_coarse=8, m=4, k_sub=8, iters=1)
-    codes = pq_encode(emb, books)
+    model = ivf_pq_fit(emb, k_coarse=8, m=4, k_sub=8, iters=1)
     path = _index_tmp_path("q88", sf_dir)
-    write_ivf_pq_index(codes, books, cents, path)
+    write_ivf_pq_index(emb, model, path)
     queries = emb.filter(F.col("vec_id") < 20)
-    rep = ivf_pq_index_drift(spark.read.parquet(path), books, cents,
-                             emb, queries, k=5, nprobe=2, m=10,
+    rep = ivf_pq_index_drift(spark.read.parquet(path), model, emb,
+                             queries, k=5, nprobe=2, m=10,
                              recall_floor=0.8)
     return rep.select(
         "n_queries", "n_servable", "mean_recall", "min_recall",
@@ -3740,7 +3747,7 @@ def _ivf_rpq_chain_sql(m_sub: int = 4, kc: int = 8,
 @register(
     "q89_knn_ivf_rpq",
     _ivf_rpq_oracle_sql(),
-    survey_ref="beyond-ref: residual-encoding IVFPQ, the actual FAISS recipe (operators/vectors.py:ivf_pq_fit_residual/ivf_pq_encode; operators/similarity.py:knn_ivf_adc_residual — codebooks trained on residuals, cell part of the encoding, reconstruction = centroid + decoded residual)",
+    survey_ref="beyond-ref: residual-encoding IVFPQ, the actual FAISS recipe (operators/vectors.py:ivf_pq_fit_residual/ivf_pq_encode; operators/similarity.py:knn_ivf_adc over a residual model — codebooks trained on residuals, cell part of the encoding, reconstruction = centroid + decoded residual)",
     memoize=False,  # the fits COLLECT their models and the encode is
     # the serving input — memoizing would cache the whole training
 )
@@ -3753,21 +3760,20 @@ def q89_knn_ivf_rpq(spark, sf_dir):
     ``(vec_id, codes, cell)`` (``ivf_pq_encode`` — the cell is PART of
     the encoding), and serving that reconstructs ``centroid[cell] +
     decode(codes)`` before the family's shared probe/ADC/re-rank
-    stages (``knn_ivf_adc_residual``). Same stored bytes as q86,
+    stages (``knn_ivf_adc`` over the residual model). Same stored bytes as q86,
     strictly lower reconstruction error (test-pinned corpus-wide on
     the fixture) — the oracle re-derives the full chain including the
     residual codec via ``_pq_codec_sql``'s ``src`` seam."""
-    from ..operators.similarity import knn_ivf_adc_residual
+    from ..operators.similarity import knn_ivf_adc
     from ..operators.vectors import ivf_pq_encode, ivf_pq_fit_residual
     emb = (_no_null_elements(spread(t(spark, sf_dir, "embeddings"), KERNEL_SLICE_BYTES))
            .filter(F.col("embedding").isNotNull()
                    & (F.size("embedding") > 0)))
-    cents, books = ivf_pq_fit_residual(emb, k_coarse=8, m=4, k_sub=8,
-                                       iters=1)
-    codes = ivf_pq_encode(emb, books, cents)
+    model = ivf_pq_fit_residual(emb, k_coarse=8, m=4, k_sub=8, iters=1)
+    codes = ivf_pq_encode(emb, model)
     queries = emb.filter(F.col("vec_id") < 20)
-    out = knn_ivf_adc_residual(codes, books, queries, k=5, m=10,
-                               centroids=cents, nprobe=3, vectors=emb)
+    out = knn_ivf_adc(codes, model, queries, k=5, m=10, nprobe=3,
+                      vectors=emb)
     return out.select("query_id", "neighbor_id",
                       F.round("cosine", 6).alias("cosine"), "rank")
 
@@ -3775,16 +3781,16 @@ def q89_knn_ivf_rpq(spark, sf_dir):
 @register(
     "q90_knn_ivf_rpq_index",
     _ivf_rpq_oracle_sql(nprobe=2),
-    survey_ref="beyond-ref: persisted residual-IVFPQ serving (operators/similarity.py:write_ivf_rpq_index + knn_ivf_rpq_index — the residual encode kernel's (vec_id, codes, cell) written partitioned by cell, probe union pushed down as a typed partition filter)",
+    survey_ref="beyond-ref: persisted residual-IVFPQ serving (operators/similarity.py:write_ivf_pq_index + knn_ivf_pq_index over a residual model — the residual encode kernel's (vec_id, codes, cell) written partitioned by cell, probe union pushed down as a typed partition filter)",
     memoize=False,  # trains, encodes, and WRITES the index at
     # construction — memoizing would cache the whole build (q87's rule)
 )
 def q90_knn_ivf_rpq_index(spark, sf_dir):
     """The residual index AT REST certified end to end (r10): train the
-    residual model pair (``ivf_pq_fit_residual``), WRITE the
+    residual model (``ivf_pq_fit_residual``), WRITE the
     cell-partitioned index in one fused encode pass
-    (``write_ivf_rpq_index``), read it back cold, and serve through
-    ``knn_ivf_rpq_index`` — probe union as a partition filter,
+    (``write_ivf_pq_index``), read it back cold, and serve through
+    ``knn_ivf_pq_index`` — probe union as a partition filter,
     reconstruction = centroid[cell] + decoded residual. The oracle is
     q89's full residual CTE chain at nprobe=2: the persisted path must
     return the in-memory composition's EXACT rows. Together with q87
@@ -3792,20 +3798,18 @@ def q90_knn_ivf_rpq_index(spark, sf_dir):
     what a quality-sensitive 100 TB deployment actually runs (same
     stored bytes as the flat index, strictly lower reconstruction
     error — test-pinned)."""
-    from ..operators.similarity import (knn_ivf_rpq_index,
-                                        write_ivf_rpq_index)
+    from ..operators.similarity import (knn_ivf_pq_index,
+                                        write_ivf_pq_index)
     from ..operators.vectors import ivf_pq_fit_residual
     emb = (_no_null_elements(spread(t(spark, sf_dir, "embeddings"), KERNEL_SLICE_BYTES))
            .filter(F.col("embedding").isNotNull()
                    & (F.size("embedding") > 0)))
-    cents, books = ivf_pq_fit_residual(emb, k_coarse=8, m=4, k_sub=8,
-                                       iters=1)
+    model = ivf_pq_fit_residual(emb, k_coarse=8, m=4, k_sub=8, iters=1)
     path = _index_tmp_path("q90", sf_dir)
-    write_ivf_rpq_index(emb, books, cents, path)
+    write_ivf_pq_index(emb, model, path)
     queries = emb.filter(F.col("vec_id") < 20)
-    out = knn_ivf_rpq_index(spark.read.parquet(path), books, queries,
-                            k=5, m=10, centroids=cents, nprobe=2,
-                            vectors=emb)
+    out = knn_ivf_pq_index(spark.read.parquet(path), model, queries,
+                           k=5, m=10, nprobe=2, vectors=emb)
     return out.select("query_id", "neighbor_id",
                       F.round("cosine", 6).alias("cosine"), "rank")
 
@@ -3824,7 +3828,7 @@ def _ivf_rpq_drift_oracle_sql(m_sub: int = 4, kc: int = 8,
 @register(
     "q91_rpq_index_drift",
     _ivf_rpq_drift_oracle_sql(),
-    survey_ref="beyond-ref: residual-index drift telemetry (operators/similarity.py:ivf_pq_index_drift residual=True — the refit signal for the index family whose models are COSTLIEST to refit, since every stored code re-encodes with its new cell)",
+    survey_ref="beyond-ref: residual-index drift telemetry (operators/similarity.py:ivf_pq_index_drift over a residual model — the refit signal for the index family whose models are COSTLIEST to refit, since every stored code re-encodes with its new cell)",
     memoize=False,  # trains, encodes, writes the residual index, and
     # the report runs Spark actions at construction (probe + truth
     # pinning) — memoizing would cache the whole maintenance cycle
@@ -3832,31 +3836,30 @@ def _ivf_rpq_drift_oracle_sql(m_sub: int = 4, kc: int = 8,
 def q91_rpq_index_drift(spark, sf_dir):
     """The RESIDUAL refit feedback loop certified end to end (r11, the
     r10 verdict's #2 ask): build the persisted residual index exactly
-    as q90 (``ivf_pq_fit_residual`` + ``write_ivf_rpq_index``), then
-    run ``ivf_pq_index_drift(residual=True)`` — serving through
-    ``knn_ivf_rpq_index``'s partition-pruned scan with the CURRENT
-    models against brute-force truth on the 20-query held-out sample —
-    and emit the operator's one-row report. This is the signal that
-    matters MOST in the family: ``refresh_ivf_rpq_index`` freezes a
-    model pair whose refit forces a full corpus re-encode (the cell is
+    as q90 (``ivf_pq_fit_residual`` + ``write_ivf_pq_index``), then
+    run ``ivf_pq_index_drift`` — serving through ``knn_ivf_pq_index``'s
+    partition-pruned scan with the CURRENT residual model against
+    brute-force truth on the 20-query held-out sample — and emit the
+    operator's one-row report. This is the signal that matters MOST in
+    the family: ``refresh_ivf_pq_index`` freezes a residual model
+    whose refit forces a full corpus re-encode (the cell is
     part of the encoding), so the decision to refit should be driven
     by measured served recall, not guesswork. The oracle is q88's
     report fold swapped onto q89's residual CTE chain at nprobe=2 —
     both already driver-certified, now certified as one contract."""
     from ..operators.similarity import (ivf_pq_index_drift,
-                                        write_ivf_rpq_index)
+                                        write_ivf_pq_index)
     from ..operators.vectors import ivf_pq_fit_residual
     emb = (_no_null_elements(spread(t(spark, sf_dir, "embeddings"), KERNEL_SLICE_BYTES))
            .filter(F.col("embedding").isNotNull()
                    & (F.size("embedding") > 0)))
-    cents, books = ivf_pq_fit_residual(emb, k_coarse=8, m=4, k_sub=8,
-                                       iters=1)
+    model = ivf_pq_fit_residual(emb, k_coarse=8, m=4, k_sub=8, iters=1)
     path = _index_tmp_path("q91", sf_dir)
-    write_ivf_rpq_index(emb, books, cents, path)
+    write_ivf_pq_index(emb, model, path)
     queries = emb.filter(F.col("vec_id") < 20)
-    rep = ivf_pq_index_drift(spark.read.parquet(path), books, cents,
-                             emb, queries, k=5, nprobe=2, m=10,
-                             recall_floor=0.8, residual=True)
+    rep = ivf_pq_index_drift(spark.read.parquet(path), model, emb,
+                             queries, k=5, nprobe=2, m=10,
+                             recall_floor=0.8)
     return rep.select(
         "n_queries", "n_servable", "mean_recall", "min_recall",
         F.col("refit_recommended").cast("int")
@@ -3888,18 +3891,17 @@ def q92_knn_ivf_pq_batch(spark, sf_dir):
     over the whole batch instead of per-query pruned reads."""
     from ..operators.similarity import (knn_ivf_pq_index_batch,
                                         write_ivf_pq_index)
-    from ..operators.vectors import ivf_pq_fit, pq_encode
+    from ..operators.vectors import ivf_pq_fit
     emb = (_no_null_elements(spread(t(spark, sf_dir, "embeddings"), KERNEL_SLICE_BYTES))
            .filter(F.col("embedding").isNotNull()
                    & (F.size("embedding") > 0)))
-    cents, books = ivf_pq_fit(emb, k_coarse=8, m=4, k_sub=8, iters=1)
-    codes = pq_encode(emb, books)
+    model = ivf_pq_fit(emb, k_coarse=8, m=4, k_sub=8, iters=1)
     path = _index_tmp_path("q92", sf_dir)
-    write_ivf_pq_index(codes, books, cents, path)
+    write_ivf_pq_index(emb, model, path)
     queries = emb.filter(F.col("vec_id") < 200)
-    out = knn_ivf_pq_index_batch(spark.read.parquet(path), books,
-                                 queries, k=5, m=10, centroids=cents,
-                                 nprobe=2, vectors=emb)
+    out = knn_ivf_pq_index_batch(spark.read.parquet(path), model,
+                                 queries, k=5, m=10, nprobe=2,
+                                 vectors=emb)
     return out.select("query_id", "neighbor_id",
                       F.round("cosine", 6).alias("cosine"), "rank")
 
@@ -3907,7 +3909,7 @@ def q92_knn_ivf_pq_batch(spark, sf_dir):
 @register(
     "q93_knn_ivf_rpq_batch",
     _ivf_rpq_oracle_sql(nprobe=2, q_pred="vec_id < 200"),
-    survey_ref="beyond-ref: distributed BATCH serving from the persisted residual index (operators/similarity.py:knn_ivf_rpq_index_batch — reconstruction = centroid[cell] + decoded residual inside the same kernel-probed, shuffle-reranked batch core)",
+    survey_ref="beyond-ref: distributed BATCH serving from the persisted residual index (operators/similarity.py:knn_ivf_pq_index_batch over a residual model — reconstruction = centroid[cell] + decoded residual inside the same kernel-probed, shuffle-reranked batch core)",
     memoize=False,  # trains, encodes, and WRITES the index at
     # construction — memoizing would cache the whole build (q87's rule)
 )
@@ -3921,20 +3923,19 @@ def q93_knn_ivf_rpq_batch(spark, sf_dir):
     offline shape for BOTH at-rest layouts; with q87/q90 (online) and
     q88/q91 (drift), every serving and maintenance surface of the
     persisted index family is driver-certified."""
-    from ..operators.similarity import (knn_ivf_rpq_index_batch,
-                                        write_ivf_rpq_index)
+    from ..operators.similarity import (knn_ivf_pq_index_batch,
+                                        write_ivf_pq_index)
     from ..operators.vectors import ivf_pq_fit_residual
     emb = (_no_null_elements(spread(t(spark, sf_dir, "embeddings"), KERNEL_SLICE_BYTES))
            .filter(F.col("embedding").isNotNull()
                    & (F.size("embedding") > 0)))
-    cents, books = ivf_pq_fit_residual(emb, k_coarse=8, m=4, k_sub=8,
-                                       iters=1)
+    model = ivf_pq_fit_residual(emb, k_coarse=8, m=4, k_sub=8, iters=1)
     path = _index_tmp_path("q93", sf_dir)
-    write_ivf_rpq_index(emb, books, cents, path)
+    write_ivf_pq_index(emb, model, path)
     queries = emb.filter(F.col("vec_id") < 200)
-    out = knn_ivf_rpq_index_batch(spark.read.parquet(path), books,
-                                  queries, k=5, m=10, centroids=cents,
-                                  nprobe=2, vectors=emb)
+    out = knn_ivf_pq_index_batch(spark.read.parquet(path), model,
+                                 queries, k=5, m=10, nprobe=2,
+                                 vectors=emb)
     return out.select("query_id", "neighbor_id",
                       F.round("cosine", 6).alias("cosine"), "rank")
 

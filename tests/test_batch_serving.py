@@ -3,9 +3,9 @@
 - ``probe_cells_frame`` (the Arrow probe kernel) is row-identical to
   exploding the literal ``centroid_probe_ranks`` expression — probe
   sets, order, string keys, and unservable-row drops all match;
-- ``knn_ivf_pq_index_batch`` / ``knn_ivf_rpq_index_batch`` return
-  EXACTLY what the online partition-pruned paths serve for the same
-  inputs — but with no driver-side collect anywhere, so a query frame
+- ``knn_ivf_pq_index_batch`` returns EXACTLY what the online
+  partition-pruned path serves for the same inputs, for either codec —
+  but with no driver-side collect anywhere, so a query frame
   of any size (including past ``max_query_rows``) is served
   distributed instead of refused;
 - ``vectors=None`` single-stage compressed serving works and skips the
@@ -44,14 +44,14 @@ def _emb(spark):
 def models(spark):
     from eirepolitic_data_pipeline_spark.operators.vectors import ivf_pq_fit
     emb = _emb(spark)
-    cents, books = ivf_pq_fit(emb, k_coarse=4, m=4, k_sub=8, iters=1)
-    return emb, cents, books
+    return emb, ivf_pq_fit(emb, k_coarse=4, m=4, k_sub=8, iters=1)
 
 
 def test_probe_kernel_matches_literal_expression(spark, models):
     from eirepolitic_data_pipeline_spark.operators.similarity import (
         centroid_probe_ranks, probe_cells_frame)
-    emb, cents, books = models
+    emb, model = models
+    cents = model.centroids
     dim = len(cents[0])
     # servable rows + every unservable shape the predicate excludes
     queries = (emb.select("vec_id", "embedding")
@@ -92,50 +92,29 @@ def test_probe_kernel_matches_literal_expression(spark, models):
     assert by_id_kernel == by_id_lit
 
 
-def test_flat_batch_matches_online_path(spark, models, tmp_path):
+@pytest.mark.parametrize("fit", ["ivf_pq_fit", "ivf_pq_fit_residual"],
+                         ids=["flat", "residual"])
+def test_batch_matches_online_path(spark, tmp_path, fit):
+    from eirepolitic_data_pipeline_spark.operators import vectors
     from eirepolitic_data_pipeline_spark.operators.similarity import (
         knn_ivf_pq_index, knn_ivf_pq_index_batch, write_ivf_pq_index)
-    from eirepolitic_data_pipeline_spark.operators.vectors import pq_encode
-    emb, cents, books = models
-    path = str(tmp_path / "idx_batch_flat")
-    write_ivf_pq_index(pq_encode(emb, books), books, cents, path)
+    emb = _emb(spark)
+    model = getattr(vectors, fit)(emb, k_coarse=4, m=4, k_sub=8, iters=1)
+    path = str(tmp_path / "idx_batch")
+    write_ivf_pq_index(emb, model, path)
     index = spark.read.parquet(path)
     queries = emb.filter(F.col("vec_id") < 25)
-    kw = dict(k=5, m=10, centroids=cents, nprobe=2, vectors=emb)
+    kw = dict(k=5, m=10, nprobe=2, vectors=emb)
     # EXACT float equality: the batch stage-1 kernel claims bit-parity
     # with the expression path (dimension-ordered accumulation), so the
     # re-ranked cosines must be identical doubles, not just close
     online = sorted(
         (r["query_id"], r["neighbor_id"], r["cosine"], r["rank"])
-        for r in knn_ivf_pq_index(index, books, queries, **kw).collect())
+        for r in knn_ivf_pq_index(index, model, queries, **kw).collect())
     batch = sorted(
         (r["query_id"], r["neighbor_id"], r["cosine"], r["rank"])
-        for r in knn_ivf_pq_index_batch(index, books, queries,
+        for r in knn_ivf_pq_index_batch(index, model, queries,
                                         **kw).collect())
-    assert batch == online and len(batch) > 0
-
-
-def test_residual_batch_matches_online_path(spark, models, tmp_path):
-    from eirepolitic_data_pipeline_spark.operators.similarity import (
-        knn_ivf_rpq_index, knn_ivf_rpq_index_batch, write_ivf_rpq_index)
-    from eirepolitic_data_pipeline_spark.operators.vectors import (
-        ivf_pq_fit_residual)
-    emb, _, _ = models
-    cents, books = ivf_pq_fit_residual(emb, k_coarse=4, m=4, k_sub=8,
-                                       iters=1)
-    path = str(tmp_path / "idx_batch_rpq")
-    write_ivf_rpq_index(emb, books, cents, path)
-    index = spark.read.parquet(path)
-    queries = emb.filter(F.col("vec_id") < 25)
-    kw = dict(k=5, m=10, centroids=cents, nprobe=2, vectors=emb)
-    online = sorted(
-        (r["query_id"], r["neighbor_id"], r["cosine"], r["rank"])
-        for r in knn_ivf_rpq_index(index, books, queries,
-                                   **kw).collect())
-    batch = sorted(
-        (r["query_id"], r["neighbor_id"], r["cosine"], r["rank"])
-        for r in knn_ivf_rpq_index_batch(index, books, queries,
-                                         **kw).collect())
     assert batch == online and len(batch) > 0
 
 
@@ -147,16 +126,15 @@ def test_batch_serves_past_the_online_contract_limit(spark, models,
     limit, k rows per servable query."""
     from eirepolitic_data_pipeline_spark.operators.similarity import (
         knn_ivf_pq_index, knn_ivf_pq_index_batch, write_ivf_pq_index)
-    from eirepolitic_data_pipeline_spark.operators.vectors import pq_encode
-    emb, cents, books = models
+    emb, model = models
     path = str(tmp_path / "idx_batch_all")
-    write_ivf_pq_index(pq_encode(emb, books), books, cents, path)
+    write_ivf_pq_index(emb, model, path)
     index = spark.read.parquet(path)
     n = emb.count()
-    kw = dict(k=3, m=10, centroids=cents, nprobe=2, vectors=emb)
+    kw = dict(k=3, m=10, nprobe=2, vectors=emb)
     with pytest.raises(ValueError, match="max_query_rows"):
-        knn_ivf_pq_index(index, books, emb, max_query_rows=n - 1, **kw)
-    out = knn_ivf_pq_index_batch(index, books, emb, **kw)
+        knn_ivf_pq_index(index, model, emb, max_query_rows=n - 1, **kw)
+    out = knn_ivf_pq_index_batch(index, model, emb, **kw)
     per_q = out.groupBy("query_id").count().collect()
     assert len(per_q) == n and all(r["count"] == 3 for r in per_q)
 
@@ -168,21 +146,20 @@ def test_batch_single_stage_without_vectors(spark, models, tmp_path):
     exposes the kernel floats)."""
     from eirepolitic_data_pipeline_spark.operators.similarity import (
         knn_ivf_pq_index, knn_ivf_pq_index_batch, write_ivf_pq_index)
-    from eirepolitic_data_pipeline_spark.operators.vectors import pq_encode
-    emb, cents, books = models
+    emb, model = models
     path = str(tmp_path / "idx_batch_ss")
-    write_ivf_pq_index(pq_encode(emb, books), books, cents, path)
+    write_ivf_pq_index(emb, model, path)
     index = spark.read.parquet(path)
     queries = emb.filter(F.col("vec_id") < 10)
-    kw = dict(k=5, m=10, centroids=cents, nprobe=2)
-    out = knn_ivf_pq_index_batch(index, books, queries, **kw)
+    kw = dict(k=5, m=10, nprobe=2)
+    out = knn_ivf_pq_index_batch(index, model, queries, **kw)
     rows = out.collect()
     assert {r["query_id"] for r in rows} == set(range(10))
     assert all(r["rank"] <= 5 for r in rows)
     assert out.columns == ["query_id", "neighbor_id", "cosine", "rank"]
     online = sorted(
         (r["query_id"], r["neighbor_id"], r["cosine"], r["rank"])
-        for r in knn_ivf_pq_index(index, books, queries,
+        for r in knn_ivf_pq_index(index, model, queries,
                                   **kw).collect())
     assert sorted((r["query_id"], r["neighbor_id"], r["cosine"],
                    r["rank"]) for r in rows) == online
@@ -198,14 +175,12 @@ def test_batch_plan_prunes_dynamically_and_limits_ranks(spark, models,
     rows per query, not its whole candidate set)."""
     from eirepolitic_data_pipeline_spark.operators.similarity import (
         knn_ivf_pq_index_batch, write_ivf_pq_index)
-    from eirepolitic_data_pipeline_spark.operators.vectors import pq_encode
-    emb, cents, books = models
+    emb, model = models
     path = str(tmp_path / "idx_batch_plan")
-    write_ivf_pq_index(pq_encode(emb, books), books, cents, path)
-    out = knn_ivf_pq_index_batch(spark.read.parquet(path), books,
+    write_ivf_pq_index(emb, model, path)
+    out = knn_ivf_pq_index_batch(spark.read.parquet(path), model,
                                  emb.filter(F.col("vec_id") < 25), k=5,
-                                 m=10, centroids=cents, nprobe=2,
-                                 vectors=emb)
+                                 m=10, nprobe=2, vectors=emb)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "dynamicpruning" in plan, plan
     assert "WindowGroupLimit" in plan, plan

@@ -587,50 +587,6 @@ def test_min_label_components_chain_and_isolates(spark):
     assert out == {1: 1, 2: 1, 3: 1, 4: 4, 5: 5, 6: 5}
 
 
-def test_hll_sketch_rollup_merges_across_batches(spark, tmp_path):
-    """Incremental distinct counts: per-batch sketches union to the same
-    estimate as sketching the full union — history never rescanned —
-    including through a parquet round-trip of the sketch bytes."""
-    from eirepolitic_data_pipeline_spark.operators.sketches import (
-        hll_estimate, hll_merge, hll_rollup)
-    from pyspark.sql import functions as F
-
-    full = spark.range(5000).select(
-        (F.col("id") % 3).alias("year"),
-        (F.col("id") % 997).cast("string").alias("member"))
-    b1, b2 = full.filter("id % 2 = 0"), full.filter("id % 2 = 1")
-
-    s1 = hll_rollup(b1, ["year"], "member")
-    s2 = hll_rollup(b2, ["year"], "member")
-    # persist batch sketches as a later refresh would, then merge
-    s1.write.parquet(str(tmp_path / "s1"))
-    s2.write.parquet(str(tmp_path / "s2"))
-    stacked = spark.read.parquet(str(tmp_path / "s1")).unionByName(
-        spark.read.parquet(str(tmp_path / "s2")))
-    merged = hll_estimate(hll_merge(stacked, ["year"]))
-    got = {r["year"]: r["approx_distinct"] for r in merged.collect()}
-
-    direct = {r["year"]: r["approx_distinct"] for r in hll_estimate(
-        hll_rollup(full, ["year"], "member")).collect()}
-    exact = {r["year"]: r["n"] for r in full.groupBy("year").agg(
-        F.countDistinct("member").alias("n")).collect()}
-    assert got == direct                       # merge == one-shot sketch
-    for y, n in exact.items():                 # ~1.6% rsd at lg_k=12
-        assert abs(got[y] - n) / n < 0.05
-
-
-def test_hll_merge_tolerates_mixed_precision(spark):
-    from eirepolitic_data_pipeline_spark.operators.sketches import (
-        hll_estimate, hll_merge, hll_rollup)
-    from pyspark.sql import functions as F
-    df = spark.range(1000).select(
-        F.lit(1).alias("g"), F.col("id").cast("string").alias("v"))
-    coarse = hll_rollup(df.filter("id < 500"), ["g"], "v", lg_k=10)
-    fine = hll_rollup(df.filter("id >= 500"), ["g"], "v", lg_k=14)
-    est = hll_estimate(hll_merge(coarse.unionByName(fine), ["g"])).collect()[0]
-    assert abs(est["approx_distinct"] - 1000) / 1000 < 0.08
-
-
 def test_incremental_additive_equals_full_recompute(spark):
     from eirepolitic_data_pipeline_spark.operators.incremental import (
         incremental_additive)

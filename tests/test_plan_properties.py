@@ -253,7 +253,7 @@ def test_quantized_rerank_broadcasts_candidates(spark):
 
 
 def test_pq_encode_and_cells_frame_are_map_only(spark):
-    """The two Arrow index-build kernels claim map-only plans — at 100 TB
+    """The Arrow index-build kernels claim map-only plans — at 100 TB
     they are the single pass that rewrites the wide embedding table into
     the compressed/bucketed serving table, and ANY Exchange there would
     shuffle the full corpus for nothing."""
@@ -264,7 +264,7 @@ def test_pq_encode_and_cells_frame_are_map_only(spark):
     from eirepolitic_data_pipeline_spark.operators.similarity import (
         centroid_cells_frame)
     from eirepolitic_data_pipeline_spark.operators.vectors import (
-        kmeans_fit, pq_encode, pq_fit)
+        IVFPQModel, ivf_pq_encode, kmeans_fit, pq_encode, pq_fit)
     emb = (spark.read.parquet(os.path.join(SF_SMOKE, "embeddings.parquet"))
            .filter(F.col("embedding").isNotNull()
                    & (F.size("embedding") > 0)
@@ -274,6 +274,11 @@ def test_pq_encode_and_cells_frame_are_map_only(spark):
     assert "Exchange" not in plan, "pq_encode gained a shuffle"
     assert "Join" not in plan, "pq_encode gained a join"
     cents = kmeans_fit(emb, k=4, iters=1)
+    for residual in (False, True):
+        plan = _plan(ivf_pq_encode(emb, IVFPQModel(cents, books,
+                                                   residual=residual)))
+        assert "Exchange" not in plan, "ivf_pq_encode gained a shuffle"
+        assert "Join" not in plan, "ivf_pq_encode gained a join"
     plan = _plan(centroid_cells_frame(emb, cents))
     assert "Exchange" not in plan, "centroid_cells_frame gained a shuffle"
     assert "Join" not in plan, "centroid_cells_frame gained a join"
@@ -305,14 +310,15 @@ def test_persisted_index_scan_prunes_to_probe_set(spark, tmp_path):
     from eirepolitic_data_pipeline_spark.operators.similarity import (
         centroid_probe_ranks, knn_ivf_pq_index, write_ivf_pq_index)
     from eirepolitic_data_pipeline_spark.operators.vectors import (
-        ivf_pq_fit, pq_encode)
+        ivf_pq_fit)
     emb = (spark.read.parquet(os.path.join(SF_SMOKE, "embeddings.parquet"))
            .filter(F.col("embedding").isNotNull()
                    & (F.size("embedding") > 0)
                    & ~F.exists("embedding", lambda x: x.isNull())))
-    cents, books = ivf_pq_fit(emb, k_coarse=4, m=4, k_sub=8, iters=1)
+    model = ivf_pq_fit(emb, k_coarse=4, m=4, k_sub=8, iters=1)
+    cents = model.centroids
     path = str(tmp_path / "idx_prune_metric")
-    write_ivf_pq_index(pq_encode(emb, books), books, cents, path)
+    write_ivf_pq_index(emb, model, path)
     index = spark.read.parquet(path)
     n_cells = index.select("cell").distinct().count()
     # one query, nprobe=1: the probe set must be STRICTLY smaller than
@@ -324,8 +330,8 @@ def test_persisted_index_scan_prunes_to_probe_set(spark, tmp_path):
                                        nprobe=1)).alias("c")).distinct()
     n_probe = probe.count()
     assert 0 < n_probe < n_cells, (n_probe, n_cells)
-    out = knn_ivf_pq_index(index, books, queries, k=3, m=6,
-                           centroids=cents, nprobe=1, vectors=emb)
+    out = knn_ivf_pq_index(index, model, queries, k=3, m=6, nprobe=1,
+                           vectors=emb)
     out.collect()  # metrics are populated by execution
 
     def scans(node, acc):

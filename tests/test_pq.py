@@ -7,6 +7,9 @@
   verbatim codeword of its codebook, NULL codes decode to NULL;
 - knn_pq_adc: exact at m = |corpus| (re-rank covers everything), recall
   monotone in the candidate budget, guard rails.
+
+The persisted IVF-PQ index (write → serve, partition pruning) runs for
+both codecs in tests/test_index_maintenance.py.
 """
 
 from __future__ import annotations
@@ -141,66 +144,27 @@ def test_knn_ivf_adc_all_probes_equals_knn_pq_adc(spark):
     from eirepolitic_data_pipeline_spark.operators.similarity import (
         knn_ivf_adc, knn_pq_adc)
     from eirepolitic_data_pipeline_spark.operators.vectors import (
-        kmeans_fit, pq_encode, pq_fit)
+        IVFPQModel, ivf_pq_encode, kmeans_fit, pq_fit)
     emb = _emb(spark)
-    cents = kmeans_fit(emb, k=4, iters=1)
     books = pq_fit(emb, m=4, k=8, iters=1)
-    codes = pq_encode(emb, books)
+    model = IVFPQModel(kmeans_fit(emb, k=4, iters=1), books)
+    codes = ivf_pq_encode(emb, model)
     queries = emb.filter(F.col("vec_id") < 5)
     got = sorted((r["query_id"], r["neighbor_id"], r["rank"])
-                 for r in knn_ivf_adc(codes, books, queries, k=5, m=10,
-                                      centroids=cents, nprobe=4,
-                                      vectors=emb).collect())
+                 for r in knn_ivf_adc(codes, model, queries, k=5, m=10,
+                                      nprobe=4, vectors=emb).collect())
     want = sorted((r["query_id"], r["neighbor_id"], r["rank"])
                   for r in knn_pq_adc(codes, books, queries, k=5, m=10,
                                       vectors=emb).collect())
     assert got == want and len(got) > 0
     # the nprobe=1 cut returns at most k rows per query and m < k raises
     with pytest.raises(ValueError, match="m"):
-        knn_ivf_adc(codes, books, queries, k=5, m=3, centroids=cents)
-    out = knn_ivf_adc(codes, books, queries, k=3, centroids=cents,
-                      nprobe=1).collect()
+        knn_ivf_adc(codes, model, queries, k=5, m=3)
+    out = knn_ivf_adc(codes, model, queries, k=3, nprobe=1).collect()
     per_q = {}
     for r in out:
         per_q.setdefault(r["query_id"], []).append(r["neighbor_id"])
     assert per_q and all(len(v) <= 3 for v in per_q.values())
-
-
-def test_persisted_ivf_pq_index_prunes_and_matches(spark, tmp_path):
-    """write_ivf_pq_index + knn_ivf_pq_index: the persisted, partitioned
-    index serves the SAME results as the in-memory composition for the
-    same models, and the serving scan is partition-PRUNED to the probed
-    cells (the at-rest layout's whole point at 100 TB)."""
-    from eirepolitic_data_pipeline_spark.operators.similarity import (
-        knn_ivf_adc, knn_ivf_pq_index, write_ivf_pq_index)
-    from eirepolitic_data_pipeline_spark.operators.vectors import (
-        kmeans_fit, pq_encode, pq_fit)
-    emb = _emb(spark)
-    cents = kmeans_fit(emb, k=4, iters=1)
-    books = pq_fit(emb, m=4, k=8, iters=1)
-    codes = pq_encode(emb, books)
-    path = str(tmp_path / "ivf_pq_index")
-    write_ivf_pq_index(codes, books, cents, path)
-    index = spark.read.parquet(path)
-    # every row landed in a real cell partition; codes round-trip intact
-    assert index.filter(F.col("cell").isNull()).count() == 0
-    assert index.count() == codes.count()
-    queries = emb.filter(F.col("vec_id") < 5)
-    kw = dict(k=5, m=10, centroids=cents, nprobe=2, vectors=emb)
-    served = sorted((r["query_id"], r["neighbor_id"], r["rank"])
-                    for r in knn_ivf_pq_index(index, books, queries,
-                                              **kw).collect())
-    inmem = sorted((r["query_id"], r["neighbor_id"], r["rank"])
-                   for r in knn_ivf_adc(codes, books, queries,
-                                        **kw).collect())
-    assert served == inmem and len(served) > 0
-    # the scan must carry the probe set as a PARTITION filter
-    plan = knn_ivf_pq_index(index, books, queries, **kw) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    import re
-    pf = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-    assert any(re.search(r"PartitionFilters: \[.*cell", ln) for ln in pf), pf
 
 
 def test_pq_empty_codebooks_raise(spark):
@@ -228,10 +192,11 @@ def test_ivf_pq_fit_matches_separate_fits(spark):
         ivf_pq_fit, kmeans_fit, pq_fit)
     emb = _emb(spark)
     for k_coarse, m, k_sub, iters in ((4, 4, 8, 1), (8, 2, 4, 2)):
-        cents, books = ivf_pq_fit(emb, k_coarse=k_coarse, m=m,
-                                  k_sub=k_sub, iters=iters)
-        assert cents == kmeans_fit(emb, k=k_coarse, iters=iters)
-        assert books == pq_fit(emb, m=m, k=k_sub, iters=iters)
+        model = ivf_pq_fit(emb, k_coarse=k_coarse, m=m, k_sub=k_sub,
+                           iters=iters)
+        assert not model.residual
+        assert model.centroids == kmeans_fit(emb, k=k_coarse, iters=iters)
+        assert model.codebooks == pq_fit(emb, m=m, k=k_sub, iters=iters)
     with pytest.raises(ValueError, match="divisible"):
         ivf_pq_fit(emb, m=63)
     with pytest.raises(ValueError, match=">= 1"):

@@ -3,15 +3,19 @@
 - ``ivf_pq_fit_residual`` trains the coarse quantizer on raw vectors
   and the subspace codebooks on the residuals (deterministic, pinned
   to the same rounded-Lloyd contracts as the flat fits);
-- ``ivf_pq_encode`` fuses cell assignment + residual subtraction +
-  subspace encoding into one kernel pass, parity-pinned to the literal
-  composition (centroid_cells + zip_with subtract + pq_codes);
-- ``knn_ivf_adc_residual`` serves from (vec_id, codes, cell) with
-  reconstruction = centroid[cell] + decode(codes), degenerating to
-  exact brute force at full probe/candidate budget;
+- ``ivf_pq_encode`` of a residual model fuses cell assignment +
+  residual subtraction + subspace encoding into one kernel pass,
+  parity-pinned to the literal composition (centroid_cells + zip_with
+  subtract + pq_codes);
+- ``knn_ivf_adc`` over a residual model serves from (vec_id, codes,
+  cell) with reconstruction = centroid[cell] + decode(codes),
+  degenerating to exact brute force at full probe/candidate budget;
 - the residual codebooks reconstruct strictly closer than the flat
   ones at identical code size (the whole point — deterministic on the
   fixture, both fits are pinned).
+
+The persisted lifecycle and compaction run for both codecs in
+tests/test_index_maintenance.py.
 """
 
 from __future__ import annotations
@@ -47,22 +51,23 @@ def models(spark):
     from eirepolitic_data_pipeline_spark.operators.vectors import (
         ivf_pq_fit_residual)
     emb = _emb(spark)
-    cents, books = ivf_pq_fit_residual(emb, k_coarse=4, m=4, k_sub=8,
-                                       iters=1)
-    return emb, cents, books
+    return emb, ivf_pq_fit_residual(emb, k_coarse=4, m=4, k_sub=8,
+                                    iters=1)
 
 
 def test_fit_residual_shape_determinism_and_contracts(spark, models):
     from eirepolitic_data_pipeline_spark.operators.vectors import (
         ivf_pq_fit_residual, kmeans_fit, pq_fit)
-    emb, cents, books = models
+    emb, model = models
+    cents, books = model.centroids, model.codebooks
+    assert model.residual
     dim = len(emb.select("embedding").first()[0])
     assert len(cents) == 4 and all(len(c) == dim for c in cents)
     assert len(books) == 4 and all(len(cb) == 8 for cb in books)
     assert all(len(c) == dim // 4 for cb in books for c in cb)
     # deterministic rerun; coarse model identical to the standalone fit
-    c2, b2 = ivf_pq_fit_residual(emb, k_coarse=4, m=4, k_sub=8, iters=1)
-    assert (c2, b2) == (cents, books)
+    assert ivf_pq_fit_residual(emb, k_coarse=4, m=4, k_sub=8,
+                               iters=1) == model
     assert cents == kmeans_fit(emb, k=4, iters=1)
     # residual codebooks are NOT the flat ones — they trained on a
     # different (tighter) distribution
@@ -79,7 +84,8 @@ def test_encode_kernel_matches_literal_composition(spark, models):
         centroid_cells)
     from eirepolitic_data_pipeline_spark.operators.vectors import (
         _lit_array2, ivf_pq_encode, pq_codes)
-    emb, cents, books = models
+    emb, model = models
+    cents, books = model.centroids, model.codebooks
     dim = len(cents[0])
     malformed = spark.createDataFrame(
         [(300001, None), (300002, [0.5] * (dim - 1)),
@@ -87,7 +93,7 @@ def test_encode_kernel_matches_literal_composition(spark, models):
         "vec_id long, embedding array<double>")
     full = emb.select("vec_id", "embedding").unionByName(malformed)
     kern = {r["vec_id"]: (tuple(r["codes"]), r["cell"])
-            for r in ivf_pq_encode(full, books, cents).collect()}
+            for r in ivf_pq_encode(full, model).collect()}
     cell = centroid_cells(F.col("embedding"), cents)
     residual = F.zip_with(
         F.col("embedding").cast("array<double>"),
@@ -107,27 +113,25 @@ def test_encode_kernel_matches_literal_composition(spark, models):
 
 def test_residual_serving_exact_at_full_budget(spark, models):
     from eirepolitic_data_pipeline_spark.operators.similarity import (
-        knn_bruteforce, knn_ivf_adc_residual)
+        knn_bruteforce, knn_ivf_adc)
     from eirepolitic_data_pipeline_spark.operators.vectors import (
         ivf_pq_encode)
-    emb, cents, books = models
+    emb, model = models
     n = emb.count()
-    codes = ivf_pq_encode(emb, books, cents)
+    codes = ivf_pq_encode(emb, model)
     queries = emb.filter(F.col("vec_id") < 5)
     got = sorted((r["query_id"], r["neighbor_id"], r["rank"])
-                 for r in knn_ivf_adc_residual(
-                     codes, books, queries, k=5, m=n, centroids=cents,
-                     nprobe=len(cents), vectors=emb).collect())
+                 for r in knn_ivf_adc(
+                     codes, model, queries, k=5, m=n,
+                     nprobe=len(model.centroids), vectors=emb).collect())
     want = sorted((r["query_id"], r["neighbor_id"], r["rank"])
                   for r in knn_bruteforce(emb, queries, 5).collect())
     assert got == want and len(got) > 0
     # guard rails shared with the family
     with pytest.raises(ValueError, match="m"):
-        knn_ivf_adc_residual(codes, books, queries, k=5, m=3,
-                             centroids=cents)
-    # parquet round-trip serves identically (the at-rest layout)
-    out = knn_ivf_adc_residual(codes, books, queries, k=3,
-                               centroids=cents, nprobe=1).collect()
+        knn_ivf_adc(codes, model, queries, k=5, m=3)
+    # single-stage compressed serving at nprobe=1
+    out = knn_ivf_adc(codes, model, queries, k=3, nprobe=1).collect()
     assert out and all(r["rank"] <= 3 for r in out)
 
 
@@ -138,7 +142,8 @@ def test_residual_reconstruction_beats_flat(spark, models):
     so this is a fixed number on the fixture, not a flaky bound)."""
     from eirepolitic_data_pipeline_spark.operators.vectors import (
         _lit_array2, ivf_pq_encode, pq_decode, pq_encode, pq_fit)
-    emb, cents, books_r = models
+    emb, model = models
+    cents, books_r = model.centroids, model.codebooks
     books_f = pq_fit(emb, m=4, k=8, iters=1)
 
     def mse(decoded):
@@ -152,7 +157,7 @@ def test_residual_reconstruction_beats_flat(spark, models):
             .join(emb.select("vec_id", "embedding"), "vec_id")
             .select(mse(pq_decode(F.col("codes"), books_f)).alias("e"))
             .agg(F.avg("e")).first()[0])
-    res = (ivf_pq_encode(emb, books_r, cents)
+    res = (ivf_pq_encode(emb, model)
            .join(emb.select("vec_id", "embedding"), "vec_id")
            .select(mse(F.zip_with(
                F.element_at(_lit_array2(cents), F.col("cell") + 1),
@@ -163,121 +168,15 @@ def test_residual_reconstruction_beats_flat(spark, models):
 
 
 def test_encode_model_mismatch_raises(spark, models):
+    """A model whose centroids and codebooks live in different spaces,
+    or whose codebooks are degenerate, cannot be built — so no encode
+    (or any later lifecycle step) ever sees one."""
     from eirepolitic_data_pipeline_spark.operators.vectors import (
-        ivf_pq_encode)
-    emb, cents, books = models
+        IVFPQModel, ivf_pq_encode)
+    emb, model = models
     with pytest.raises(ValueError, match="dimension"):
-        ivf_pq_encode(emb, books, [[0.0, 1.0]])
+        ivf_pq_encode(emb, IVFPQModel([[0.0, 1.0]], model.codebooks,
+                                      residual=True))
     with pytest.raises(ValueError, match="codebook"):
-        ivf_pq_encode(emb, [[[]]], cents)
-
-
-def test_residual_index_lifecycle(spark, models, tmp_path):
-    """write_ivf_rpq_index / refresh_ivf_rpq_index / knn_ivf_rpq_index:
-    the persisted residual index holds exactly the encode kernel's
-    rows, append-refresh is byte-equivalent to a full rebuild with the
-    frozen models, the pruned serve returns the in-memory path's exact
-    rows with the probe set as a partition filter, and the drift
-    report's residual flag watches this index."""
-    from eirepolitic_data_pipeline_spark.operators.similarity import (
-        ivf_pq_index_drift, knn_ivf_adc_residual, knn_ivf_rpq_index,
-        refresh_ivf_rpq_index, write_ivf_rpq_index)
-    from eirepolitic_data_pipeline_spark.operators.vectors import (
-        ivf_pq_encode)
-    emb, cents, books = models
-
-    refreshed = str(tmp_path / "rpq_refreshed")
-    write_ivf_rpq_index(emb.filter(F.col("vec_id") >= 100), books, cents,
-                        refreshed)
-    refresh_ivf_rpq_index(emb.filter(F.col("vec_id") < 100), books, cents,
-                          refreshed)
-    full = str(tmp_path / "rpq_full")
-    write_ivf_rpq_index(emb, books, cents, full)
-
-    def rows(path):
-        return sorted(
-            (r["vec_id"], tuple(r["codes"]), int(r["cell"]))
-            for r in spark.read.parquet(path).collect())
-    want = sorted((r["vec_id"], tuple(r["codes"]), int(r["cell"]))
-                  for r in ivf_pq_encode(emb, books, cents).collect())
-    assert rows(refreshed) == rows(full) == want and len(want) > 0
-
-    queries = emb.filter(F.col("vec_id") < 5)
-    kw = dict(k=5, m=10, centroids=cents, nprobe=2, vectors=emb)
-    index = spark.read.parquet(refreshed)
-    out = knn_ivf_rpq_index(index, books, queries, **kw)
-    served = sorted((r["query_id"], r["neighbor_id"], r["rank"])
-                    for r in out.collect())
-    inmem = sorted((r["query_id"], r["neighbor_id"], r["rank"])
-                   for r in knn_ivf_adc_residual(
-                       ivf_pq_encode(emb, books, cents), books, queries,
-                       **kw).collect())
-    assert served == inmem and len(served) > 0
-    # the scan carries the probe union as a PARTITION filter
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    pf = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-    assert any("cell" in ln for ln in pf), pf
-    # drift report over the residual index
-    r = ivf_pq_index_drift(index, books, cents, emb, queries, k=5,
-                           nprobe=2, m=10, recall_floor=1.0,
-                           residual=True).first()
-    assert r["n_queries"] == r["n_servable"] == 5
-    assert 0.0 <= r["min_recall"] <= r["mean_recall"] <= 1.0
-    assert r["refit_recommended"] == (r["mean_recall"] < 1.0)
-
-
-def test_residual_compaction_bounds_files_and_preserves_serving(
-        spark, models, tmp_path):
-    """Compaction parity for the RESIDUAL layout (r10 verdict #6): the
-    residual index shares write_ivf_pq_index's cell-partitioned layout
-    exactly, so compact_ivf_pq_index's per-leaf rewrite must bound the
-    small-file accumulation from repeated refresh_ivf_rpq_index cycles
-    the same way — same rows, same cell dirs (pruning untouched), and
-    the pruned serve returns the identical result set."""
-    import os
-
-    from eirepolitic_data_pipeline_spark.operators.similarity import (
-        compact_ivf_pq_index, knn_ivf_rpq_index, refresh_ivf_rpq_index,
-        write_ivf_rpq_index)
-    emb, cents, books = models
-    path = str(tmp_path / "rpq_compact")
-    write_ivf_rpq_index(emb.filter(F.col("vec_id") >= 300), books, cents,
-                        path)
-    for lo, hi in ((200, 300), (100, 200), (0, 100)):
-        refresh_ivf_rpq_index(
-            emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi)),
-            books, cents, path)
-
-    def state(p):
-        files, dirs = 0, set()
-        for d, _, fs in os.walk(p):
-            files += sum(1 for f in fs if f.endswith(".parquet"))
-            dirs.update(x for x in (os.path.basename(d),)
-                        if x.startswith("cell="))
-        rows = sorted((r["vec_id"], tuple(r["codes"]), int(r["cell"]))
-                      for r in spark.read.parquet(p).collect())
-        return rows, files, dirs
-
-    queries = emb.filter(F.col("vec_id") < 5)
-    kw = dict(k=5, m=10, centroids=cents, nprobe=2, vectors=emb)
-    rows0, files0, dirs0 = state(path)
-    served0 = sorted(
-        (r["query_id"], r["neighbor_id"], r["rank"])
-        for r in knn_ivf_rpq_index(spark.read.parquet(path), books,
-                                   queries, **kw).collect())
-    n_cells = len(dirs0)
-    assert files0 > n_cells, "refreshes should have multiplied files"
-
-    tel = compact_ivf_pq_index(spark, path)
-    rows1, files1, dirs1 = state(path)
-    assert files1 == n_cells == tel["partitions"]
-    assert dirs1 == dirs0 and rows1 == rows0
-    out = knn_ivf_rpq_index(spark.read.parquet(path), books, queries,
-                            **kw)
-    served1 = sorted((r["query_id"], r["neighbor_id"], r["rank"])
-                     for r in out.collect())
-    assert served1 == served0 and len(served1) > 0
-    # compaction must not cost the probe pruning
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    pf = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-    assert any("cell" in ln for ln in pf), pf
+        ivf_pq_encode(emb, IVFPQModel(model.centroids, [[[]]],
+                                      residual=True))

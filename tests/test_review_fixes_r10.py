@@ -4,7 +4,7 @@
    r9 ADVICE flagged its unconditional persist/unpersist (persist is
    not ref-counted, so it evicted a caller's own pin); the r10 fused
    one-pass build removed the double consumption that motivated the
-   persist, so the build must leave the codes frame's storage level
+   persist, so the build must leave the input frame's storage level
    exactly as it found it — pinned or not (these two tests pin the
    no-touch contract from both sides).
 2. ann_recall rejects frame_bucketer without a matching bucketer —
@@ -49,39 +49,36 @@ def _well_formed_emb(spark):
                     & ~F.exists("embedding", lambda x: x.isNull())))
 
 
-def _models_and_codes(spark):
-    from eirepolitic_data_pipeline_spark.operators.vectors import (
-        ivf_pq_fit, pq_encode)
+def _emb_and_model(spark):
+    from eirepolitic_data_pipeline_spark.operators.vectors import ivf_pq_fit
     emb = _well_formed_emb(spark)
-    cents, books = ivf_pq_fit(emb, k_coarse=4, m=4, k_sub=8, iters=1)
-    return emb, cents, books, pq_encode(emb, books)
+    return emb, ivf_pq_fit(emb, k_coarse=4, m=4, k_sub=8, iters=1)
 
 
 def test_write_index_keeps_callers_persist(spark, tmp_path):
     from eirepolitic_data_pipeline_spark.operators.similarity import (
         write_ivf_pq_index)
-    _, cents, books, codes = _models_and_codes(spark)
-    codes = codes.persist()
+    emb, model = _emb_and_model(spark)
+    emb = emb.persist()
     try:
-        codes.count()
-        write_ivf_pq_index(codes, books, cents,
-                           str(tmp_path / "idx_caller_pinned"))
-        lvl = codes.storageLevel
+        emb.count()
+        write_ivf_pq_index(emb, model, str(tmp_path / "idx_caller_pinned"))
+        lvl = emb.storageLevel
         assert lvl.useMemory or lvl.useDisk, (
             "build must leave a caller-pinned frame pinned (the fused "
             "one-pass build has no reason to touch storage levels)")
     finally:
-        codes.unpersist()
+        emb.unpersist()
 
 
 def test_write_index_releases_its_own_pin(spark, tmp_path):
     from eirepolitic_data_pipeline_spark.operators.similarity import (
         write_ivf_pq_index)
-    _, cents, books, codes = _models_and_codes(spark)
-    lvl = codes.storageLevel
+    emb, model = _emb_and_model(spark)
+    lvl = emb.storageLevel
     assert not (lvl.useMemory or lvl.useDisk)
-    write_ivf_pq_index(codes, books, cents, str(tmp_path / "idx_own_pin"))
-    lvl = codes.storageLevel
+    write_ivf_pq_index(emb, model, str(tmp_path / "idx_own_pin"))
+    lvl = emb.storageLevel
     assert not (lvl.useMemory or lvl.useDisk), (
         "build must not leave the caller's unpersisted frame pinned "
         "(the fused one-pass build takes no pin at all)")
@@ -126,14 +123,16 @@ def test_index_probe_filter_matches_cell_dtype(spark, tmp_path):
     rows and both keep the probe set in PartitionFilters."""
     from eirepolitic_data_pipeline_spark.operators.similarity import (
         knn_ivf_adc, knn_ivf_pq_index, write_ivf_pq_index)
-    emb, cents, books, codes = _models_and_codes(spark)
+    from eirepolitic_data_pipeline_spark.operators.vectors import (
+        ivf_pq_encode)
+    emb, model = _emb_and_model(spark)
     path = str(tmp_path / "idx_dtype")
-    write_ivf_pq_index(codes, books, cents, path)
+    write_ivf_pq_index(emb, model, path)
     queries = emb.filter(F.col("vec_id") < 5)
-    kw = dict(k=5, m=10, centroids=cents, nprobe=2, vectors=emb)
+    kw = dict(k=5, m=10, nprobe=2, vectors=emb)
     want = sorted((r["query_id"], r["neighbor_id"], r["rank"])
-                  for r in knn_ivf_adc(codes, books, queries,
-                                       **kw).collect())
+                  for r in knn_ivf_adc(ivf_pq_encode(emb, model), model,
+                                       queries, **kw).collect())
     conf = "spark.sql.sources.partitionColumnTypeInference.enabled"
     prev = spark.conf.get(conf, "true")
     try:
@@ -143,7 +142,7 @@ def test_index_probe_filter_matches_cell_dtype(spark, tmp_path):
             index = spark.read.parquet(path)
             assert (index.schema["cell"].dataType.simpleString()
                     == expected_type)
-            out = knn_ivf_pq_index(index, books, queries, **kw)
+            out = knn_ivf_pq_index(index, model, queries, **kw)
             got = sorted((r["query_id"], r["neighbor_id"], r["rank"])
                          for r in out.collect())
             assert got == want and len(got) > 0, inference

@@ -266,33 +266,6 @@ def test_test_mode_builds_are_unpromotable(spark, tmp_path):
         catalog.promote("bt", ["silver_members"])
 
 
-def test_horizon_keeps_unparseable_event_times(spark, tmp_path):
-    """Processed-id horizon pruning must KEEP ids whose event time is NULL
-    or blank — those can never age out, and evicting them double-counts
-    the fact on the next overlapping re-delivery."""
-    from eirepolitic_data_pipeline_spark.jobs.incremental_refresh import (
-        IncrementalRollup)
-    job = IncrementalRollup(
-        spark=spark, catalog=BatchCatalog(root=str(tmp_path / "wh")),
-        table="rollup", keys=["g"], count_cols=["n"],
-        fact_id_col="fid", fact_ts_col="ts")
-    agg = lambda f: f.groupBy("g").agg(F.count(F.lit(1)).alias("n"))
-    w1 = spark.createDataFrame(
-        [("a", "x1", "2026-01-01"), ("a", "x2", None), ("a", "x3", "")],
-        "g string, fid string, ts string")
-    job.refresh(w1, agg, batch_id="w1", horizon="2026-02-01")
-    job.catalog.promote("w1", job.tables)
-    kept = {r["fid"] for r in job.catalog.read_table(
-        spark, "rollup__processed_ids").collect()}
-    # x1 aged past the horizon; the NULL and blank ids MUST survive
-    assert kept == {"x2", "x3"}
-    # re-delivery of x2/x3 in the next window must not double-count
-    w2 = spark.createDataFrame(
-        [("a", "x2", None), ("a", "x3", "")], "g string, fid string, ts string")
-    out = job.refresh(w2, agg, batch_id="w2", horizon="2026-02-01")
-    assert out.filter("g = 'a'").first()["n"] == 3
-
-
 def test_compact_csv_preserves_header(spark, tmp_path):
     """compact_dataset must read CSV with header=True like its own
     rewrite does — a headerless read turns header lines into data rows
@@ -659,76 +632,6 @@ def test_curate_corpus_persist_stages_opt_out(spark):
     plan_cached = cached._jdf.queryExecution().optimizedPlan().toString()
     assert "InMemoryRelation" in plan_cached
     assert {r["doc_id"] for r in cached.collect()} == set(range(6))
-
-
-def test_incremental_refresh_refuses_null_fact_ids(spark, tmp_path):
-    """A NULL fact id can neither be deduplicated within a window
-    (dropDuplicates collapses distinct null-id facts) nor tracked across
-    windows (plain-equality anti-join never matches NULL -> re-counted on
-    every re-delivery); refresh must refuse it loudly."""
-    from eirepolitic_data_pipeline_spark.io.catalog import BatchCatalog
-    from eirepolitic_data_pipeline_spark.jobs.incremental_refresh import (
-        IncrementalRollup)
-    roll = IncrementalRollup(
-        catalog=BatchCatalog(root=str(tmp_path / "wh")), spark=spark,
-        table="r", keys=["k"], fact_id_col="fid", count_cols=["n"])
-    delta = spark.createDataFrame([(None, "a"), ("x", "a")],
-                                  "fid string, k string")
-    agg = lambda df: df.groupBy("k").agg(F.count(F.lit(1)).alias("n"))
-    with pytest.raises(ValueError, match="NULL 'fid'"):
-        roll.refresh(delta, agg, "b1")
-
-
-def test_incremental_refresh_survives_adopting_fact_ts_col(spark, tmp_path):
-    """Enabling fact_ts_col on a deployment whose processed-id log
-    predates the column must not brick refresh with NUM_COLUMNS_MISMATCH:
-    legacy rows union in with a NULL ts (which the horizon filter keeps)."""
-    from eirepolitic_data_pipeline_spark.io.catalog import BatchCatalog
-    from eirepolitic_data_pipeline_spark.jobs.incremental_refresh import (
-        IncrementalRollup)
-    catalog = BatchCatalog(root=str(tmp_path / "wh"))
-    agg = lambda df: df.groupBy("k").agg(F.count(F.lit(1)).alias("n"))
-    base = dict(catalog=catalog, spark=spark, table="r", keys=["k"],
-                fact_id_col="fid", count_cols=["n"])
-
-    r1 = IncrementalRollup(**base)  # no ts column yet
-    d1 = spark.createDataFrame([("a", "k1", "2024-01-01")],
-                               "fid string, k string, ts string")
-    r1.refresh(d1.drop("ts"), agg, "b1")
-    catalog.promote("b1", catalog.batch_tables("b1"))
-
-    r2 = IncrementalRollup(**base, fact_ts_col="ts")  # adopted mid-life
-    d2 = spark.createDataFrame([("a", "k1", "2024-01-02"),   # re-delivered
-                                ("b", "k1", "2024-01-02")],  # new
-                               "fid string, k string, ts string")
-    out = {r["k"]: r["n"] for r in
-           r2.refresh(d2, agg, "b2", horizon="2023-12-01").collect()}
-    assert out == {"k1": 2}  # 'a' counted once, 'b' added
-    log = catalog.read_table(spark, "r__processed_ids", batch_id="b2")
-    rows = {r["fid"]: r["ts"] for r in log.collect()}
-    assert rows == {"a": None, "b": "2024-01-02"}  # legacy id kept, ts NULL
-
-
-def test_incremental_refresh_refuses_late_distinct_enable(spark, tmp_path):
-    """Turning distinct_col ON after windows were absorbed must refuse:
-    the merged sketch would cover only post-enable facts while being
-    published as the full approx_distinct."""
-    from eirepolitic_data_pipeline_spark.io.catalog import (
-        BatchCatalog, CatalogError)
-    from eirepolitic_data_pipeline_spark.jobs.incremental_refresh import (
-        IncrementalRollup)
-    catalog = BatchCatalog(root=str(tmp_path / "wh"))
-    agg = lambda df: df.groupBy("k").agg(F.count(F.lit(1)).alias("n"))
-    base = dict(catalog=catalog, spark=spark, table="r", keys=["k"],
-                fact_id_col="fid", count_cols=["n"])
-    d1 = spark.createDataFrame([("a", "k1", "m1")],
-                               "fid string, k string, m string")
-    IncrementalRollup(**base).refresh(d1, agg, "b1")
-    catalog.promote("b1", catalog.batch_tables("b1"))
-    d2 = spark.createDataFrame([("b", "k1", "m2")],
-                               "fid string, k string, m string")
-    with pytest.raises(CatalogError, match="sketch"):
-        IncrementalRollup(**base, distinct_col="m").refresh(d2, agg, "b2")
 
 
 def test_coverage_pct_zero_row_table_is_formatted(spark):

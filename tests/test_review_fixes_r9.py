@@ -168,17 +168,20 @@ def test_serving_family_shares_k_guard(spark):
     from eirepolitic_data_pipeline_spark.operators.similarity import (
         knn_ivf_adc, knn_ivf_pq, knn_ivf_pq_index, knn_pq_adc,
         knn_quantized_rerank)
+    from eirepolitic_data_pipeline_spark.operators.vectors import (
+        IVFPQModel)
     df = spark.createDataFrame([(1, [0.1, 0.2])],
                                "vec_id long, embedding array<double>")
     qz = spark.createDataFrame([(1, 0.1, [1, 2])],
                                "vec_id long, scale double, qvec array<int>")
     cents = [[0.0, 0.0]]
     books = [[[0.0], [1.0]], [[0.0], [1.0]]]
+    model = IVFPQModel(cents, books)
     for call in (
             lambda: knn_quantized_rerank(qz, df, k=0),
             lambda: knn_pq_adc(qz, books, df, k=0),
             lambda: knn_ivf_pq(qz, df, k=0, centroids=cents),
-            lambda: knn_ivf_adc(qz, books, df, k=0, centroids=cents),
-            lambda: knn_ivf_pq_index(qz, books, df, k=0, centroids=cents)):
+            lambda: knn_ivf_adc(qz, model, df, k=0),
+            lambda: knn_ivf_pq_index(qz, model, df, k=0)):
         with pytest.raises(ValueError, match="k must be >= 1"):
             call()

@@ -1,5 +1,5 @@
 """Streaming index maintenance (r11): ``streaming_index_refresh_sink``
-drives ``refresh_ivf_pq_index`` / ``refresh_ivf_rpq_index`` from a REAL
+drives ``refresh_ivf_pq_index`` (either codec) from a REAL
 multi-micro-batch readStream (file source, maxFilesPerTrigger=1,
 availableNow) — the streaming leg of the persisted-index lifecycle.
 
@@ -44,8 +44,7 @@ def _emb(spark):
 def models(spark):
     from eirepolitic_data_pipeline_spark.operators.vectors import ivf_pq_fit
     emb = _emb(spark)
-    cents, books = ivf_pq_fit(emb, k_coarse=4, m=4, k_sub=8, iters=1)
-    return emb, cents, books
+    return emb, ivf_pq_fit(emb, k_coarse=4, m=4, k_sub=8, iters=1)
 
 
 def _stream_dir(emb, tmp_path, name, splits=((100, 250), (250, 400))):
@@ -61,21 +60,20 @@ def _stream_dir(emb, tmp_path, name, splits=((100, 250), (250, 400))):
 def test_streamed_refresh_matches_full_rebuild(spark, models, tmp_path):
     from eirepolitic_data_pipeline_spark.operators.similarity import (
         knn_ivf_adc, knn_ivf_pq_index, write_ivf_pq_index)
-    from eirepolitic_data_pipeline_spark.operators.vectors import pq_encode
+    from eirepolitic_data_pipeline_spark.operators.vectors import (
+        ivf_pq_encode)
     from eirepolitic_data_pipeline_spark.streaming.jobs import (
         streaming_index_refresh_sink)
-    emb, cents, books = models
+    emb, model = models
     path = str(tmp_path / "idx_stream")
-    write_ivf_pq_index(pq_encode(emb.filter(F.col("vec_id") < 100),
-                                 books), books, cents, path)
+    write_ivf_pq_index(emb.filter(F.col("vec_id") < 100), model, path)
 
     src = _stream_dir(emb, tmp_path, "vec_src")
     stream = (spark.readStream.schema(
         "vec_id long, embedding array<double>")
         .option("maxFilesPerTrigger", 1).parquet(src))
     q = streaming_index_refresh_sink(
-        stream, books, cents, path,
-        checkpoint_dir=str(tmp_path / "ckpt"))
+        stream, model, path, checkpoint_dir=str(tmp_path / "ckpt"))
     q.awaitTermination(120)
 
     # >1 epoch actually ran (one marker per applied micro-batch)
@@ -84,8 +82,7 @@ def test_streamed_refresh_matches_full_rebuild(spark, models, tmp_path):
 
     streamed_universe = emb.filter(F.col("vec_id") < 400)
     full = str(tmp_path / "idx_full")
-    write_ivf_pq_index(pq_encode(streamed_universe, books), books, cents,
-                       full)
+    write_ivf_pq_index(streamed_universe, model, full)
 
     def rows(p):
         return sorted((r["vec_id"], tuple(r["codes"]), int(r["cell"]))
@@ -94,15 +91,14 @@ def test_streamed_refresh_matches_full_rebuild(spark, models, tmp_path):
 
     # serving from the streamed index: pruned and row-identical
     queries = emb.filter(F.col("vec_id") < 5)
-    kw = dict(k=5, m=10, centroids=cents, nprobe=2,
-              vectors=streamed_universe)
-    out = knn_ivf_pq_index(spark.read.parquet(path), books, queries, **kw)
+    kw = dict(k=5, m=10, nprobe=2, vectors=streamed_universe)
+    out = knn_ivf_pq_index(spark.read.parquet(path), model, queries, **kw)
     served = sorted((r["query_id"], r["neighbor_id"], r["rank"])
                     for r in out.collect())
     inmem = sorted((r["query_id"], r["neighbor_id"], r["rank"])
-                   for r in knn_ivf_adc(pq_encode(streamed_universe,
-                                                  books), books, queries,
-                                        **kw).collect())
+                   for r in knn_ivf_adc(ivf_pq_encode(streamed_universe,
+                                                      model), model,
+                                        queries, **kw).collect())
     assert served == inmem and len(served) > 0
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert any("PartitionFilters" in ln and "cell" in ln
@@ -114,13 +110,11 @@ def test_replayed_epoch_skips_by_marker(spark, models, tmp_path):
     exists must be a no-op (no duplicate vec_ids in the index)."""
     from eirepolitic_data_pipeline_spark.operators.similarity import (
         write_ivf_pq_index)
-    from eirepolitic_data_pipeline_spark.operators.vectors import pq_encode
     from eirepolitic_data_pipeline_spark.streaming.jobs import (
         streaming_index_refresh_sink)
-    emb, cents, books = models
+    emb, model = models
     path = str(tmp_path / "idx_replay")
-    write_ivf_pq_index(pq_encode(emb.filter(F.col("vec_id") < 100),
-                                 books), books, cents, path)
+    write_ivf_pq_index(emb.filter(F.col("vec_id") < 100), model, path)
     src = _stream_dir(emb, tmp_path, "vec_src_replay",
                       splits=((100, 250),))
     schema = "vec_id long, embedding array<double>"
@@ -128,7 +122,7 @@ def test_replayed_epoch_skips_by_marker(spark, models, tmp_path):
     def run_once(ckpt):
         stream = (spark.readStream.schema(schema)
                   .option("maxFilesPerTrigger", 1).parquet(src))
-        q = streaming_index_refresh_sink(stream, books, cents, path,
+        q = streaming_index_refresh_sink(stream, model, path,
                                          checkpoint_dir=str(ckpt))
         q.awaitTermination(120)
 
@@ -149,28 +143,25 @@ def test_replayed_epoch_skips_by_marker(spark, models, tmp_path):
 def test_batch_frame_applies_once_and_residual_layout(spark, models,
                                                       tmp_path):
     from eirepolitic_data_pipeline_spark.operators.similarity import (
-        knn_ivf_rpq_index, write_ivf_rpq_index)
+        knn_ivf_pq_index, write_ivf_pq_index)
     from eirepolitic_data_pipeline_spark.operators.vectors import (
         ivf_pq_encode, ivf_pq_fit_residual)
     from eirepolitic_data_pipeline_spark.streaming.jobs import (
         streaming_index_refresh_sink)
-    emb, _, _ = models
-    cents, books = ivf_pq_fit_residual(emb, k_coarse=4, m=4, k_sub=8,
-                                       iters=1)
+    emb, _ = models
+    rmodel = ivf_pq_fit_residual(emb, k_coarse=4, m=4, k_sub=8, iters=1)
     path = str(tmp_path / "idx_rpq_stream")
-    write_ivf_rpq_index(emb.filter(F.col("vec_id") >= 100), books, cents,
-                        path)
+    write_ivf_pq_index(emb.filter(F.col("vec_id") >= 100), rmodel, path)
+    # the model carries the codec: no flag tells the sink it is residual
     out = streaming_index_refresh_sink(
-        emb.filter(F.col("vec_id") < 100), books, cents, path,
-        residual=True)
+        emb.filter(F.col("vec_id") < 100), rmodel, path)
     assert out is None  # batch shape returns no query
     want = sorted((r["vec_id"], tuple(r["codes"]), int(r["cell"]))
-                  for r in ivf_pq_encode(emb, books, cents).collect())
+                  for r in ivf_pq_encode(emb, rmodel).collect())
     got = sorted((r["vec_id"], tuple(r["codes"]), int(r["cell"]))
                  for r in spark.read.parquet(path).collect())
     assert got == want and len(got) > 0
-    served = knn_ivf_rpq_index(spark.read.parquet(path), books,
-                               emb.filter(F.col("vec_id") < 5), k=5,
-                               m=10, centroids=cents, nprobe=2,
-                               vectors=emb)
+    served = knn_ivf_pq_index(spark.read.parquet(path), rmodel,
+                              emb.filter(F.col("vec_id") < 5), k=5,
+                              m=10, nprobe=2, vectors=emb)
     assert served.count() == 25

@@ -17,6 +17,8 @@ import time
 import numpy as np
 import pandas as pd
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def to_py(v):
     if v is None:
@@ -52,7 +54,13 @@ def main():
 
     import duckdb
 
-    sys.path.insert(0, "/root/repo")
+    # the checkout this script lives in, never another one; Spark's Python
+    # workers inherit PYTHONPATH from the JVM, which inherits it from this
+    # process, so export it before the session starts
+    sys.path.insert(0, ROOT)
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        [ROOT] + [p for p in os.environ.get("PYTHONPATH", "")
+                  .split(os.pathsep) if p])
     import __spark_entry__ as entrymod
 
     if os.environ.get("SPARK_GRAFT_PLAIN"):

@@ -49,9 +49,9 @@ What it checks:
    the m=40 recall must be >= the flat codec's at identical stored
    bytes — the measured case for residual encoding.
 9. **Residual-index maintenance** (r11) — check 7's steady-state loop
-   for the RESIDUAL layout: build ``write_ivf_rpq_index`` over 95% of
-   the corpus with check 8's residual books, append the last 5% via
-   ``refresh_ivf_rpq_index`` (frozen model pair), and assert the same
+   for the RESIDUAL codec: build ``write_ivf_pq_index`` over 95% of
+   the corpus with check 8's residual model, append the last 5% via
+   ``refresh_ivf_pq_index`` (frozen model), and assert the same
    file-level contract — resident files untouched (size+mtime), new
    files hold exactly the delta's rows, no row lost, and the pruned
    serve still reads only the probed cells' files.
@@ -387,12 +387,17 @@ def main():
         from eirepolitic_data_pipeline_spark.operators.similarity import (
             ivf_pq_index_drift, knn_ivf_pq_index, write_ivf_pq_index,
             refresh_ivf_pq_index)
+        from eirepolitic_data_pipeline_spark.operators.vectors import (
+            IVFPQModel)
+        model = IVFPQModel(cents, books)
+        # the drift slice's model: check 6's books + check 5's slice
+        # centroids
+        slice_model = IVFPQModel(rcents, books)
         delta_n = args.vectors // 20
         idx_path = os.path.join(tmp, "ivf_pq_index")
         t0 = time.perf_counter()
-        write_ivf_pq_index(
-            pq_encode(corpus.filter(F.col("vec_id") >= delta_n), books),
-            books, cents, idx_path)
+        write_ivf_pq_index(corpus.filter(F.col("vec_id") >= delta_n),
+                           model, idx_path)
         t_build = round(time.perf_counter() - t0, 1)
 
         def _files(root):
@@ -412,7 +417,7 @@ def main():
         before = _files(idx_path)
         t0 = time.perf_counter()
         refresh_ivf_pq_index(corpus.filter(F.col("vec_id") < delta_n),
-                             books, cents, idx_path)
+                             model, idx_path)
         t_refresh = round(time.perf_counter() - t0, 1)
         after = _files(idx_path)
         # the append-only contract, measured on the FILES (wall clocks at
@@ -426,19 +431,18 @@ def main():
                        for p in after if p not in before)
         index = spark.read.parquet(idx_path)
         n_rows = index.count()
-        served = knn_ivf_pq_index(index, books, rq, K, cents, nprobe=2,
-                                  m=40, vectors=corpus)
+        served = knn_ivf_pq_index(index, model, rq, K, nprobe=2, m=40,
+                                  vectors=corpus)
         plan = served._jdf.queryExecution().executedPlan().toString()
         pruned = any("PartitionFilters" in ln and "cell" in ln
                      for ln in plan.splitlines())
         n_served = served.count()
         # drift report on the affordable slice (truth is the linear
-        # cost): its own small index from check 6's codes + check 5's
-        # slice centroids
+        # cost): its own small index of the rerank slice
         idx2 = os.path.join(tmp, "ivf_pq_index_slice")
-        write_ivf_pq_index(codes, books, rcents, idx2)
+        write_ivf_pq_index(rl, slice_model, idx2)
         drift = ivf_pq_index_drift(
-            spark.read.parquet(idx2), books, rcents, rl, rq, k=K,
+            spark.read.parquet(idx2), slice_model, rl, rq, k=K,
             nprobe=2, m=40, recall_floor=0.5).first()
         t_maint = round(time.perf_counter() - t0, 1)
         maint_ok = (n_rows == args.vectors and pruned
@@ -479,20 +483,21 @@ def main():
         # structure, so the codebooks spend their codewords on a
         # tighter cell of space).
         from eirepolitic_data_pipeline_spark.operators.similarity import (
-            knn_ivf_adc_residual)
+            knn_ivf_adc)
         from eirepolitic_data_pipeline_spark.operators.vectors import (
             _residual_frame, _well_formed_vectors, ivf_pq_encode)
         t0 = time.perf_counter()
         corpus_wf = _well_formed_vectors(corpus, "embedding", "vec_id")
         books_r = pq_fit(_residual_frame(corpus_wf, cents), m=8, k=256,
                          iters=1, vec_col="__v", id_col="vec_id")
-        codes_r = ivf_pq_encode(rl, books_r, cents)
+        model_r = IVFPQModel(cents, books_r, residual=True)
+        codes_r = ivf_pq_encode(rl, model_r)
 
         def rpq_recall(m: int) -> float:
             got = {(r["query_id"], r["neighbor_id"])
-                   for r in knn_ivf_adc_residual(
-                       codes_r, books_r, rq, K, centroids=cents,
-                       nprobe=len(cents), m=m, vectors=rl).collect()}
+                   for r in knn_ivf_adc(
+                       codes_r, model_r, rq, K, nprobe=len(cents), m=m,
+                       vectors=rl).collect()}
             return len(got & exact) / len(exact)
 
         rq10 = rpq_recall(10)
@@ -513,22 +518,18 @@ def main():
             f"{'PASS' if rpq_ok else 'FAIL'} |")
 
         # 9. residual-index maintenance at scale (r11): check 7's loop
-        # for the residual layout — the build starts from VECTORS (the
-        # cell is part of the encoding, so there is no standalone codes
-        # frame to hand in) and the refresh encodes ONLY the delta with
-        # the frozen (books_r, cents) pair. Same file-level contract,
+        # for the residual codec — the refresh encodes ONLY the delta
+        # with the frozen residual model. Same file-level contract,
         # asserted the same way.
-        from eirepolitic_data_pipeline_spark.operators.similarity import (
-            knn_ivf_rpq_index, refresh_ivf_rpq_index, write_ivf_rpq_index)
         idx_r = os.path.join(tmp, "ivf_rpq_index")
         t0 = time.perf_counter()
-        write_ivf_rpq_index(corpus.filter(F.col("vec_id") >= delta_n),
-                            books_r, cents, idx_r)
+        write_ivf_pq_index(corpus.filter(F.col("vec_id") >= delta_n),
+                           model_r, idx_r)
         t_build_r = round(time.perf_counter() - t0, 1)
         before_r = _files(idx_r)
         t0 = time.perf_counter()
-        refresh_ivf_rpq_index(corpus.filter(F.col("vec_id") < delta_n),
-                              books_r, cents, idx_r)
+        refresh_ivf_pq_index(corpus.filter(F.col("vec_id") < delta_n),
+                             model_r, idx_r)
         t_refresh_r = round(time.perf_counter() - t0, 1)
         after_r = _files(idx_r)
         resident_r_ok = all(after_r.get(p) == st
@@ -537,8 +538,8 @@ def main():
                          for p in after_r if p not in before_r)
         index_r = spark.read.parquet(idx_r)
         n_rows_r = index_r.count()
-        served_r = knn_ivf_rpq_index(index_r, books_r, rq, K, cents,
-                                     nprobe=2, m=40, vectors=corpus)
+        served_r = knn_ivf_pq_index(index_r, model_r, rq, K, nprobe=2,
+                                    m=40, vectors=corpus)
         plan_r = served_r._jdf.queryExecution().executedPlan().toString()
         pruned_r = any("PartitionFilters" in ln and "cell" in ln
                        for ln in plan_r.splitlines())
@@ -555,7 +556,7 @@ def main():
                 f"{new_rows_r}/{delta_n}")
         lines.append(
             f"| residual-index maintenance ({args.vectors} rows, 5% "
-            f"delta append through the frozen model pair, nprobe=2 "
+            f"delta append through the frozen model, nprobe=2 "
             f"serve) | {t_maint_r} | build {t_build_r}s, refresh "
             f"{t_refresh_r}s (volume asserted on files) | no row lost, "
             f"resident files untouched (size+mtime), new files hold "
@@ -578,7 +579,7 @@ def main():
         t0 = time.perf_counter()
         bq = rl.filter(F.col("vec_id") < 200)
         served_b = knn_ivf_pq_index_batch(
-            spark.read.parquet(idx2), books, bq, K, rcents, nprobe=2,
+            spark.read.parquet(idx2), slice_model, bq, K, nprobe=2,
             m=40, vectors=rl)
         n_full = (served_b.groupBy("query_id")
                   .agg(F.count(F.lit(1)).alias("n"))
@@ -624,12 +625,12 @@ def main():
                 (F.col("id") + 1).cast("double") * (i + 1) * phi))
             .alias("embedding")))
         t0 = time.perf_counter()
-        refresh_ivf_pq_index(drifted, books, rcents, idx2)
+        refresh_ivf_pq_index(drifted, slice_model, idx2)
         universe = rl.unionByName(drifted)
         drifted_queries = drifted.filter(
             F.col("vec_id") < args.vectors + 10)
         fired = ivf_pq_index_drift(
-            spark.read.parquet(idx2), books, rcents, universe,
+            spark.read.parquet(idx2), slice_model, universe,
             drifted_queries, k=K, nprobe=2, m=40,
             recall_floor=0.5).first()
         t_fire = round(time.perf_counter() - t0, 1)

@@ -23,11 +23,10 @@ import subprocess
 import sys
 import time
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 INNER = r"""
 import json, os, statistics, sys, time
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-                if "__file__" in dir() else "/root/repo")
-sys.path.insert(0, "/root/repo")
 from eirepolitic_data_pipeline_spark import workload
 from eirepolitic_data_pipeline_spark.session import get_spark
 sf_dir = sys.argv[1]
@@ -61,7 +60,13 @@ def main() -> None:
     prefixes = args[sep + 1:]
     results = {}
     for d in densities:
-        env = dict(os.environ, SPARK_GRAFT_TEXT_SLICE_BYTES=str(d))
+        # the checkout this script lives in goes on PYTHONPATH: the inner
+        # driver imports the package from it, and Spark's Python workers
+        # inherit it through the JVM
+        env = dict(os.environ, SPARK_GRAFT_TEXT_SLICE_BYTES=str(d),
+                   PYTHONPATH=os.pathsep.join(
+                       [ROOT] + [p for p in os.environ.get(
+                           "PYTHONPATH", "").split(os.pathsep) if p]))
         t0 = time.time()
         out = subprocess.run(
             [sys.executable, "-c", INNER, sf_dir, *prefixes],
