@@ -30,6 +30,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
 import time
 
 from . import atomic
@@ -65,6 +66,14 @@ def is_path_not_found(e: Exception) -> bool:
         getattr(e, "getErrorClass", None)
     return get_cond is not None and get_cond() == "PATH_NOT_FOUND"
 
+
+#: serializes every batch-manifest read-modify-write in this process, so
+#: tables recorded at the same time (run_refresh's concurrent builds) all
+#: land
+_MANIFEST_LOCK = threading.Lock()
+#: serializes read_table's session-conf toggle and bucketed re-attach DDL,
+#: which concurrent readers would otherwise interleave
+_READ_LOCK = threading.Lock()
 
 #: how long ``observed`` waits for an observation's metrics
 OBSERVATION_TIMEOUT_S = 600.0
@@ -149,16 +158,19 @@ class BatchCatalog:
         the rows were PK-UNIQUELY merged on (upsert merge output) — the
         provenance the MergeWriter's anti-join fast path requires of its
         history side; absent for tables written any other way."""
-        m = self._load_manifest(batch_id)
-        self._refuse_if_promoted(batch_id, m)
-        if table in m["tables"] and not replace:
-            raise CatalogError(f"duplicate table {table!r} in batch {batch_id!r}")
-        m["tables"][table] = {"row_count": int(row_count), "status": status,
-                              "partition_by": list(partition_by),
-                              "bucket_by": list(bucket_by),
-                              "num_buckets": int(num_buckets),
-                              "merge_pk": list(merge_pk)}
-        self._save_manifest(batch_id, m)
+        with _MANIFEST_LOCK:
+            m = self._load_manifest(batch_id)
+            self._refuse_if_promoted(batch_id, m)
+            if table in m["tables"] and not replace:
+                raise CatalogError(
+                    f"duplicate table {table!r} in batch {batch_id!r}")
+            m["tables"][table] = {"row_count": int(row_count),
+                                  "status": status,
+                                  "partition_by": list(partition_by),
+                                  "bucket_by": list(bucket_by),
+                                  "num_buckets": int(num_buckets),
+                                  "merge_pk": list(merge_pk)}
+            self._save_manifest(batch_id, m)
 
     def table_entry(self, table: str, batch_id: Optional[str] = None) -> dict:
         """The manifest entry for ``table`` in ``batch_id`` (default: the
@@ -202,10 +214,16 @@ class BatchCatalog:
             return {"batch_id": batch_id, "tables": {}}
 
     def _save_manifest(self, batch_id: str, manifest: dict):
+        """Replace the manifest atomically: a concurrent reader sees the
+        old or the new manifest, never a torn one, and a crash mid-save
+        leaves the old one. Callers hold ``_MANIFEST_LOCK`` across their
+        load → modify → save."""
         p = self._manifest_path(batch_id)
         os.makedirs(os.path.dirname(p), exist_ok=True)
-        with open(p, "w") as f:
+        tmp = p + ".tmp"
+        with open(tmp, "w") as f:
             json.dump(manifest, f, sort_keys=True)
+        os.replace(tmp, p)
 
     def validate_batch(self, batch_id: str, expected_tables: list[str]) -> list[str]:
         """Reference `batch.py:133-177`: missing/failed/dataless tables make
@@ -240,19 +258,20 @@ class BatchCatalog:
         src = from_batch_id or self.production_batch_id()
         if src is None or src == batch_id:
             return []
-        m = self._load_manifest(batch_id)
-        self._refuse_if_promoted(batch_id, m)
-        carried = []
-        for tname, entry in sorted(
-                self._load_manifest(src).get("tables", {}).items()):
-            if tname in m["tables"]:
-                continue
-            e = dict(entry)
-            e["from_batch"] = entry.get("from_batch") or src
-            m["tables"][tname] = e
-            carried.append(tname)
-        if carried:
-            self._save_manifest(batch_id, m)
+        with _MANIFEST_LOCK:
+            m = self._load_manifest(batch_id)
+            self._refuse_if_promoted(batch_id, m)
+            carried = []
+            for tname, entry in sorted(
+                    self._load_manifest(src).get("tables", {}).items()):
+                if tname in m["tables"]:
+                    continue
+                e = dict(entry)
+                e["from_batch"] = entry.get("from_batch") or src
+                m["tables"][tname] = e
+                carried.append(tname)
+            if carried:
+                self._save_manifest(batch_id, m)
         return carried
 
     # -- write/read ----------------------------------------------------------
@@ -416,7 +435,12 @@ class BatchCatalog:
         read through it, so the scan reports the storage clustering as its
         output partitioning and merges/joins on the bucket keys plan
         without re-shuffling this side. A plain ``spark.read.parquet``
-        would silently drop the bucketing — the files carry no metadata."""
+        would silently drop the bucketing — the files carry no metadata.
+
+        Concurrent reads take turns through the conf toggle and the
+        re-attach (a drop + create of one catalog name per path). The
+        toggle is session-wide, so it can still overlap a read that
+        bypasses the catalog, such as a build's raw payload read."""
         bid = batch_id or self.production_batch_id()
         if bid is None:
             raise CatalogError(f"no production batch promoted; cannot read {table!r}")
@@ -425,18 +449,20 @@ class BatchCatalog:
         # wrote the files (see carry_forward) — read from there
         path = self.batch_path(entry.get("from_batch") or bid, table)
         conf_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-        prev = spark.conf.get(conf_key, "true")
-        try:
-            spark.conf.set(conf_key, "false")
-            # the plain read also checks the path exists (PATH_NOT_FOUND),
-            # which the bucketed re-attach's CREATE TABLE would not
-            reader = spark.read.schema(schema) if schema else spark.read
-            df = reader.parquet(path)
-            if entry.get("bucket_by") and entry.get("num_buckets", 0) > 0:
-                return self._read_bucketed(spark, path, entry, df.schema)
-            return df
-        finally:
-            spark.conf.set(conf_key, prev)
+        with _READ_LOCK:
+            prev = spark.conf.get(conf_key, "true")
+            try:
+                spark.conf.set(conf_key, "false")
+                # the plain read also checks the path exists
+                # (PATH_NOT_FOUND), which the bucketed re-attach's CREATE
+                # TABLE would not
+                reader = spark.read.schema(schema) if schema else spark.read
+                df = reader.parquet(path)
+                if entry.get("bucket_by") and entry.get("num_buckets", 0) > 0:
+                    return self._read_bucketed(spark, path, entry, df.schema)
+                return df
+            finally:
+                spark.conf.set(conf_key, prev)
 
     @staticmethod
     def _read_bucketed(spark: SparkSession, path: str, entry: dict,
@@ -492,9 +518,10 @@ class BatchCatalog:
                     "allow_shrink=True to retire them deliberately")
         # Stamp the manifest: from this moment the batch is immutable even
         # after the pointer moves on (it remains a rollback target).
-        m = self._load_manifest(batch_id)
-        m["promoted_at_unix"] = int(time.time())
-        self._save_manifest(batch_id, m)
+        with _MANIFEST_LOCK:
+            m = self._load_manifest(batch_id)
+            m["promoted_at_unix"] = int(time.time())
+            self._save_manifest(batch_id, m)
         self._write_pointer(batch_id, previous=self.production_batch_id())
 
     def rollback(self, to_batch_id: str):

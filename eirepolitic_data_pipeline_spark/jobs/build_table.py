@@ -81,6 +81,7 @@ from ..tables import (
     silver_questions,
     silver_source_files,
 )
+from ..tables.gold import cached_frames
 
 VALID_MODES = ("full", "test")
 
@@ -286,6 +287,7 @@ def build_table(spark: SparkSession, catalog: BatchCatalog,
                            + UNSUPPORTED[table])
     snapshot_date = snapshot_date or date.today().isoformat()
     today = today or date.fromisoformat(snapshot_date)
+    cached: list[DataFrame] = []  # the frames a gold builder cached
 
     if table == "silver_speeches":
         # XML corpus, not JSON pages: debate_xml.jsonl rows carry
@@ -324,7 +326,8 @@ def build_table(spark: SparkSession, catalog: BatchCatalog,
                     "builder receives a typed empty frame, not None")
             inputs.append(spark.createDataFrame(
                 [], ", ".join(f"{c} string" for c in cols)))
-        out = fn(*inputs, snapshot_date)
+        with cached_frames() as cached:
+            out = fn(*inputs, snapshot_date)
     else:
         raise CatalogError(f"unknown table {table!r}; registry declares: "
                            + ", ".join(sorted(registry.tables)))
@@ -362,27 +365,23 @@ def build_table(spark: SparkSession, catalog: BatchCatalog,
     # auto disables publishing for mode=test). Without it, the CLI's
     # default --mode test would land a 25-page sample in the candidate
     # batch that a later --promote silently serves as production.
-    cached_before = (set(spark.sparkContext._jsc.getPersistentRDDs()
-                         .keySet().toArray())
-                     if table in GOLD_BUILDERS else set())
-    writer.write(conformed, table, tdef.policy, batch_id=batch_id,
-                 status="test" if mode == "test" else "ok",
-                 schema=tdef.schema, gate=gate, check=check_gate,
-                 **bucket_kw)
+    try:
+        writer.write(conformed, table, tdef.policy, batch_id=batch_id,
+                     status="test" if mode == "test" else "ok",
+                     schema=tdef.schema, gate=gate, check=check_gate,
+                     **bucket_kw)
+    finally:
+        # the gold builders .cache() their dimension-bounded metric/lookup
+        # frames (consumed 2-3x within ONE mart materialization); the write
+        # was that materialization, so release exactly the frames THIS
+        # build cached — a session-wide release would also drop the blocks
+        # a concurrent build or an embedding caller pinned meanwhile
+        for df in cached:
+            df.unpersist()
     # the committed row count was observed in the write job and recorded
     # in the manifest — counting the returned frame again would launch a
     # redundant full-table job
     n = int(catalog.table_entry(table, batch_id=batch_id)["row_count"])
-    if table in GOLD_BUILDERS:
-        # the gold builders .cache() their dimension-bounded metric/lookup
-        # frames (consumed 2-3x within ONE mart materialization); the write
-        # above was that materialization, so release exactly the blocks
-        # THIS build pinned — never session-global clearCache, which would
-        # evict an embedding caller's own cached frames as collateral
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in jmap.keySet().toArray():
-            if rid not in cached_before:
-                jmap.get(rid).unpersist()
     if promote:
         # The production pointer is batch-GLOBAL: promoting moves every
         # read to this batch, so promote validates the batch's ENTIRE

@@ -19,6 +19,11 @@ import os
 from pyspark.sql import SparkSession
 
 
+#: the directory holding this package — what a Python worker needs on its
+#: path to import it
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
@@ -77,6 +82,13 @@ def get_spark(app_name: str = "eirepolitic_data_pipeline_spark",
         # merge uses, so nothing compiled would be reused: one merge of five
         # tables made ~270 Janino compiles at 100 entries, 6 at 2000.
         .config("spark.sql.codegen.cache.maxEntries", "2000")
+        # Python workers (mapInPandas builders, Arrow kernels) import this
+        # package; in local mode they inherit the driver's environment, not
+        # its sys.path, so a driver started outside the repo would fail
+        # them with ModuleNotFoundError. Spark merges this with its own
+        # PYTHONPATH for the workers. (A real cluster needs the package
+        # shipped to its executors, e.g. as a zip in spark.submit.pyFiles.)
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     # Only force a master when none is configured (tests / local bench).
     if not os.environ.get("SPARK_MASTER") and "SPARK_CONNECT_MODE_ENABLED" not in os.environ:

@@ -24,6 +24,10 @@ Scale notes (100 TB design point):
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+from contextvars import ContextVar
+from typing import Iterator, Optional
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -36,6 +40,33 @@ from ..functions.scalar import (
 )
 
 OPEN_END_TS = "9999-12-31"
+
+#: the frames the gold builders cached inside the enclosing
+#: ``cached_frames`` block of this thread
+_CACHED: ContextVar[Optional[list]] = ContextVar("gold_cached", default=None)
+
+
+def _cache(df: DataFrame) -> DataFrame:
+    """``df.cache()``, recorded for the enclosing ``cached_frames`` block."""
+    df = df.cache()
+    frames = _CACHED.get()
+    if frames is not None:
+        frames.append(df)
+    return df
+
+
+@contextmanager
+def cached_frames() -> Iterator[list]:
+    """Collect the frames the gold builders cache inside this block, in
+    this thread only, so the caller can release exactly those once it has
+    materialized the mart, and leave alone the blocks another thread's
+    build or an embedding caller pinned meanwhile."""
+    frames: list = []
+    token = _CACHED.set(frames)
+    try:
+        yield frames
+    finally:
+        _CACHED.reset(token)
 
 
 # ---------------------------------------------------------------------------
@@ -273,25 +304,25 @@ def gold_member_activity_yearly(current_members: DataFrame, speeches: DataFrame,
     # shuffles run once; MEMORY_AND_DISK spills if a pathological dimension
     # ever outgrows executor memory.
     year_of = F.year("__d").cast("string")
-    speech_metrics = _speech_period_metrics(
-        speeches, year_of, "year", normalized=normalized_inputs).cache()
-    vote_metrics = _vote_period_metrics(
+    speech_metrics = _cache(_speech_period_metrics(
+        speeches, year_of, "year", normalized=normalized_inputs))
+    vote_metrics = _cache(_vote_period_metrics(
         member_votes, year_of, "year", with_kinds=True,
-        normalized=normalized_inputs).cache()
+        normalized=normalized_inputs))
 
     # A4: distinct divisions per year; divisions table if usable, else votes.
     div_source = divisions
     if div_source is None or "division_date" not in div_source.columns \
             or div_source.limit(1).count() == 0:
         div_source = member_votes
-    division_counts = (
+    division_counts = _cache(
         div_source
         .withColumn("__d", blank_as_null("division_date").try_cast("date"))
         .filter(F.col("__d").isNotNull())
         .withColumn("year", F.year("__d").cast("string"))
         .groupBy("year")
         .agg(F.countDistinct("division_id").alias("division_count"))
-    ).cache()
+    )
 
     grid = _period_grid(current_members, [speech_metrics, vote_metrics],
                         [speech_metrics, vote_metrics, division_counts],
@@ -339,11 +370,11 @@ def gold_member_activity_monthly(current_members: DataFrame,
     """Monthly member activity (PK member_code, year_month; `tables.yml:250-256`)."""
     month_of = F.date_format("__d", "yyyy-MM")
     # Cached for the same reason as the yearly mart: bounded frames, 3 readers.
-    speech_metrics = _speech_period_metrics(
-        speeches, month_of, "year_month", normalized=normalized_inputs).cache()
-    vote_metrics = _vote_period_metrics(
+    speech_metrics = _cache(_speech_period_metrics(
+        speeches, month_of, "year_month", normalized=normalized_inputs))
+    vote_metrics = _cache(_vote_period_metrics(
         member_votes, month_of, "year_month", with_kinds=False,
-        normalized=normalized_inputs).cache()
+        normalized=normalized_inputs))
     grid = _period_grid(current_members, [speech_metrics, vote_metrics],
                         [speech_metrics, vote_metrics],
                         "year_month", snapshot_date[:7])
@@ -402,9 +433,9 @@ def gold_constituency_activity_yearly(current_members: DataFrame,
     # frames are (constituency × year)-bounded with 3 readers each (years
     # union, names union, final join). Cache all of them so each fact input
     # is scanned and aggregated exactly once.
-    lookup = _member_constituency_lookup(current_members, member_votes).cache()
+    lookup = _cache(_member_constituency_lookup(current_members, member_votes))
 
-    speech_metrics = (
+    speech_metrics = _cache(
         speeches
         .withColumn("member_code", _trimmed("speaker_member_code"))
         .withColumn("__d", blank_as_null("debate_date").try_cast("date"))
@@ -414,8 +445,8 @@ def gold_constituency_activity_yearly(current_members: DataFrame,
         .withColumn("year", F.year("__d").cast("string"))
         .groupBy("constituency_name", "year")
         .agg(F.count("speech_id").alias("speech_count"))
-    ).cache()
-    vote_metrics = (
+    )
+    vote_metrics = _cache(
         member_votes
         .withColumn("member_code", _trimmed("member_code"))
         .withColumn("__d", blank_as_null("division_date").try_cast("date"))
@@ -429,14 +460,14 @@ def gold_constituency_activity_yearly(current_members: DataFrame,
         .withColumn("year", F.year("__d").cast("string"))
         .groupBy("constituency_name", "year")
         .agg(F.count("member_vote_id").alias("votes_cast_count"))
-    ).cache()
-    member_counts = (
+    )
+    member_counts = _cache(
         current_members
         .withColumn("constituency_name", _trimmed("constituency_name"))
         .filter(F.col("constituency_name") != "")
         .groupBy("constituency_name")
         .agg(F.countDistinct("member_code").alias("member_count"))
-    ).cache()
+    )
 
     # Same bounded-dimension collect as _period_grid: distinct years are
     # calendar-bounded, so one job replaces the probe + recompute pair.

@@ -290,3 +290,54 @@ def test_dq_gate_fails_empty_build(spark, tmp_path):
         ("row_count>=1", False, 0), ("unique(member_code)", True, 0),
         ("member_code_blank_count==0", True, 0)]
     assert catalog.batch_tables("e1") == []
+
+
+def test_gold_build_releases_only_its_own_cached_frames(spark, tmp_path,
+                                                         raw_root,
+                                                         monkeypatch):
+    """A gold build unpersists the frames its builder cached, not every
+    block that became persistent while it ran: a frame another thread
+    persists during the build's write keeps its cached blocks."""
+    import threading
+
+    from eirepolitic_data_pipeline_spark.io.writers import MergeWriter
+
+    registry = TableRegistry.from_dict(DEFAULT_TABLES_CONFIG)
+    catalog = BatchCatalog(root=str(tmp_path / "wh"))
+    kw = dict(batch_id="b1", raw_root=raw_root, snapshot_date=SNAP)
+    for t in ("silver_members", "silver_member_memberships",
+              "silver_member_votes", "gold_current_members"):
+        build_table(spark, catalog, registry, t, **kw)
+
+    jsc = spark.sparkContext._jsc
+
+    def persistent():
+        return set(jsc.getPersistentRDDs().keySet().toArray())
+
+    other = {}
+
+    def persist_elsewhere():
+        before = persistent()
+        other["df"] = spark.range(50).selectExpr("id * 7 AS v").persist()
+        other["df"].count()
+        other["rdds"] = persistent() - before
+
+    real_write = MergeWriter.write
+
+    def write(self, *a, **k):
+        t = threading.Thread(target=persist_elsewhere)
+        t.start()
+        t.join()
+        return real_write(self, *a, **k)
+
+    monkeypatch.setattr(MergeWriter, "write", write)
+    before = persistent()
+    res = build_table(spark, catalog, registry,
+                      "gold_member_activity_yearly", **kw)
+    assert res.row_count >= 2
+    try:
+        assert other["rdds"] and other["rdds"] <= persistent()
+        # ... while the builder's own cached frames were all released
+        assert persistent() - before == other["rdds"]
+    finally:
+        other["df"].unpersist()

@@ -322,3 +322,45 @@ def test_noncanonical_partition_values_roundtrip(spark, catalog):
     catalog.write_table(df, "nc_t", "bnc", partition_by=("snapshot_date",))
     back = catalog.read_table(spark, "nc_t", batch_id="bnc").collect()[0]
     assert back["snapshot_date"] == "2026-8-1"
+
+
+def test_concurrent_record_table_keeps_every_entry(catalog):
+    """Threads recording distinct tables into one batch all land, and a
+    reader polling the manifest meanwhile never sees a torn file."""
+    import sys
+    import threading
+
+    n_threads, per_thread = 8, 20
+    errors: list = []
+    stop = threading.Event()
+
+    def record(i):
+        for j in range(per_thread):
+            catalog.record_table("b1", f"t{i}_{j}", row_count=j)
+
+    def poll():
+        while not stop.is_set():
+            try:
+                catalog.batch_tables("b1")
+            except ValueError as e:     # json.JSONDecodeError
+                errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        reader = threading.Thread(target=poll)
+        reader.start()
+        writers = [threading.Thread(target=record, args=(i,))
+                   for i in range(n_threads)]
+        for t in writers:
+            t.start()
+        for t in writers:
+            t.join(timeout=60)
+        stop.set()
+        reader.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in [reader, *writers])
+    assert not errors
+    assert catalog.batch_tables("b1") == sorted(
+        f"t{i}_{j}" for i in range(n_threads) for j in range(per_thread))
