@@ -33,9 +33,10 @@ class MergeWriter:
               num_buckets: int = 0, status: str = "ok",
               schema: Optional[StructType] = None,
               gate: Optional[Observation] = None,
-              check: Optional[Callable[[], None]] = None) -> DataFrame:
-        """Merge incoming into retained history per policy, write to the
-        candidate batch, and return the merged DataFrame.
+              check: Optional[Callable[[], None]] = None) -> None:
+        """Merge incoming into retained history per policy and write it to
+        the candidate batch. Nothing is read back: a caller that needs the
+        committed table reads it from the catalog.
 
         ``snapshot_date`` partitions the physical layout (hive-style, as the
         reference's `snapshot_date={d}` keys) when provided.
@@ -49,8 +50,7 @@ class MergeWriter:
         plan can read the current candidate dir directly — no localCheckpoint
         (whose non-replicated, lineage-severed blocks would be the ONLY copy
         of all prior micro-batch merges on a real cluster) and no window
-        where a mid-write failure has destroyed the previous state. The
-        returned frame re-reads the committed files, not the pre-swap plan.
+        where a mid-write failure has destroyed the previous state.
 
         ``bucket_by``/``num_buckets`` persist the merged table BUCKETED
         (merge-heavy fact tables set this by default via the registry's
@@ -148,9 +148,7 @@ class MergeWriter:
                     null_pk = c if null_pk is None else (null_pk | c)
                 if incoming.filter(null_pk).limit(1).count():
                     fast_path = False
-            # observability (and the tests' hook): which merge form ran —
-            # the returned frame is the committed re-read, whose plan no
-            # longer shows the join shape
+            # observability (and the tests' hook): which merge form ran
             self.last_merge_form = "antijoin" if fast_path else "window"
             if fast_path:
                 merged = merge_upsert_antijoin(existing, incoming, policy,
@@ -173,12 +171,3 @@ class MergeWriter:
         finally:
             if pinned is not None:
                 pinned.unpersist()
-        # Hand back the COMMITTED files in both modes, never the pre-write
-        # merge plan: in accumulate mode the swap has replaced the files
-        # that plan read; in batch mode the plan still works, but the
-        # caller's first action on it would re-execute the entire history
-        # merge a second time — at fact scale that doubles the dominant
-        # refresh cost for nothing. The written schema is known, so the
-        # re-read infers nothing.
-        return self.catalog.read_table(self.spark, table, batch_id=batch_id,
-                                       schema=merged.schema)

@@ -154,19 +154,6 @@ GOLD_BUILDERS: dict[str, tuple[Callable[..., DataFrame], list[str],
         set()),
 }
 
-#: schema stubs for optional gold inputs that may have no catalog table
-_EMPTY_INPUT_COLUMNS = {
-    "silver_speeches": ["speaker_member_code", "debate_date", "speech_id"],
-    "silver_divisions": ["division_id", "division_date"],
-    "silver_member_parties": ["member_code", "party_name", "party_start",
-                              "party_end", "is_current"],
-    "silver_member_constituencies": ["member_code", "constituency_name",
-                                     "represent_start", "represent_end",
-                                     "is_current"],
-    "silver_member_offices": ["member_code", "office_name", "office_start",
-                              "office_end", "is_current"],
-}
-
 UNSUPPORTED = {
     "control_pipeline_runs": "written by the run machinery, not a builder",
     "control_table_manifests": "written by io.catalog manifests",
@@ -318,14 +305,10 @@ def build_table(spark: SparkSession, catalog: BatchCatalog,
                 raise CatalogError(
                     f"{table}: required input {name!r} does not exist in "
                     f"batch {batch_id!r} or production; build it first")
-            cols = _EMPTY_INPUT_COLUMNS.get(name)
-            if cols is None:
-                raise CatalogError(
-                    f"{table}: optional input {name!r} is absent and has "
-                    "no _EMPTY_INPUT_COLUMNS stub — add one so the "
-                    "builder receives a typed empty frame, not None")
-            inputs.append(spark.createDataFrame(
-                [], ", ".join(f"{c} string" for c in cols)))
+            # an absent optional input is its registry table, empty — the
+            # same columns and string convention as any catalog read
+            inputs.append(_stringified(
+                spark.createDataFrame([], registry[name].schema)))
         with cached_frames() as cached:
             out = fn(*inputs, snapshot_date)
     else:

@@ -289,9 +289,7 @@ def _spread_boundary(frame: DataFrame) -> DataFrame:
     SURVIVOR set (already reduced by the quality gate and the upstream
     dedup stages) per persisted boundary — and the boundary is being
     materialized block-by-block anyway for the persist, where a skewed or
-    coalesced layout would hurt every downstream stage repeatedly. Only
-    applied on the persist_stages path; the lazy composition is left
-    untouched.
+    coalesced layout would hurt every downstream stage repeatedly.
 
     Why no registry.spread-style getNumPartitions() guard: that guard
     works on SCANS, where the pre-execution partition count reflects file
@@ -306,7 +304,7 @@ def _spread_boundary(frame: DataFrame) -> DataFrame:
     sc = frame.sparkSession.sparkContext
     # defensive conf parse (r8, ADVICE): shuffle.partitions can be the
     # string "auto" under Databricks AQE auto-tuning, and a ValueError
-    # here failed the whole persist_stages curation path
+    # here failed the whole curation path
     conf_parts = shuffle_partitions(frame.sparkSession)
     return frame.repartition(max(sc.defaultParallelism, conf_parts))
 
@@ -318,8 +316,8 @@ def curate_corpus(docs: DataFrame, text_col: str = "text",
                   max_line_df: int = 100,
                   near_dup_threshold: float = 0.7,
                   near_dup_hashes: int = 32, near_dup_band_rows: int = 4,
-                  split_weights: Mapping[str, float] | None = None,
-                  persist_stages: bool = True) -> DataFrame:
+                  split_weights: Mapping[str, float] | None = None
+                  ) -> DataFrame:
     """The flagship end-to-end training-data curation recipe, composed
     from this module's and ``operators.dedupe``'s primitives in the order
     web-scale pipelines (C4 / Gopher / RefinedWeb) run them:
@@ -349,15 +347,12 @@ def curate_corpus(docs: DataFrame, text_col: str = "text",
     filters, the skew-capped posting-list expansion, bounded component
     closure — no new shuffle pattern is introduced by the composition.
 
-    With ``persist_stages`` (the default) the returned plan references
-    three ``persist()``-ed stage boundaries (see ``curate_corpus_stages``);
-    a long-lived session that curates many distinct corpora should
-    release them once the result is materialized (the CLI's
-    track-and-unpersist pattern, jobs/curate.py) — identical re-runs are
-    deduplicated by Spark's cache manager and cost nothing extra. Pass
-    ``persist_stages=False`` to keep the composition cache-free (each
-    downstream consumer then recomputes the stage prefix — measured ~5×
-    the end-to-end cost)."""
+    The returned plan references three ``persist()``-ed stage boundaries
+    (see ``curate_corpus_stages``); a long-lived session that curates
+    many distinct corpora should release them once the result is
+    materialized (the CLI's track-and-unpersist pattern, jobs/curate.py)
+    — identical re-runs are deduplicated by Spark's cache manager and
+    cost nothing extra."""
     out = None
     for _name, frame in curate_corpus_stages(
             docs, text_col=text_col, id_col=id_col, source_col=source_col,
@@ -366,8 +361,7 @@ def curate_corpus(docs: DataFrame, text_col: str = "text",
             near_dup_threshold=near_dup_threshold,
             near_dup_hashes=near_dup_hashes,
             near_dup_band_rows=near_dup_band_rows,
-            split_weights=split_weights,
-            persist_stages=persist_stages):
+            split_weights=split_weights):
         out = frame
     return out
 
@@ -380,8 +374,7 @@ def curate_corpus_stages(docs: DataFrame, text_col: str = "text",
                          near_dup_threshold: float = 0.7,
                          near_dup_hashes: int = 32,
                          near_dup_band_rows: int = 4,
-                         split_weights: Mapping[str, float] | None = None,
-                         persist_stages: bool = True):
+                         split_weights: Mapping[str, float] | None = None):
     """``curate_corpus`` with the stage boundaries exposed: yields
     ``(stage_name, frame)`` after each pipeline stage, ending with the
     final ``("split", curated)`` frame — the SINGLE implementation both
@@ -390,12 +383,12 @@ def curate_corpus_stages(docs: DataFrame, text_col: str = "text",
 
     Laziness caveats, so callers aren't surprised:
 
-    - with ``persist_stages`` (the default), the three stage outputs
-      that downstream stages consume MORE THAN ONCE (quality feeds the
-      line explode twice plus dedupe_lines' join-back; line-dedup feeds
-      the fingerprint aggregate AND the survivor join; exact-dedup feeds
-      the fused MinHash signature/posting pass AND the final survivor
-      join) are lazily ``persist()``-ed — the in-query analog
+    - the three stage outputs that downstream stages consume MORE THAN
+      ONCE (quality feeds the line explode twice plus dedupe_lines'
+      join-back; line-dedup feeds the fingerprint aggregate AND the
+      survivor join; exact-dedup feeds the fused MinHash
+      signature/posting pass AND the final survivor join) are lazily
+      ``persist()``-ed — the in-query analog
       of the persisted silver table each would be in the production
       layout. Without that, every action downstream of the near-dup
       stage recomputes the whole quality→line-dedup→exact prefix per
@@ -437,8 +430,7 @@ def curate_corpus_stages(docs: DataFrame, text_col: str = "text",
     # scan + quality projection per run (r7). Same persist/unpersist
     # contract as the other stage boundaries: callers that walk the
     # stages unpersist every cached frame when done.
-    if persist_stages:
-        kept = kept.persist()
+    kept = kept.persist()
     yield "quality_gate", kept
 
     # dedupe_lines carries the non-text columns through its own join-back
@@ -447,8 +439,7 @@ def curate_corpus_stages(docs: DataFrame, text_col: str = "text",
     # upstream pass fewer per run at every scale.
     kept = (dedupe_lines(kept, text_col, id_col, max_df=max_line_df)
             .filter(quality_features(text_col)["n_tokens"] >= min_tokens))
-    if persist_stages:
-        kept = _spread_boundary(kept).persist()
+    kept = _spread_boundary(kept).persist()
     yield "line_dedup", kept
 
     # skew-proof survivor set: min-per-fingerprint AGGREGATE, never the
@@ -456,8 +447,7 @@ def curate_corpus_stages(docs: DataFrame, text_col: str = "text",
     # this stage must absorb (see exact_canonical_ids)
     kept = kept.join(exact_canonical_ids(kept, text_col, id_col),
                      id_col, "left_semi")
-    if persist_stages:
-        kept = _spread_boundary(kept).persist()
+    kept = _spread_boundary(kept).persist()
     yield "exact_dedup", kept
 
     # survivor-set twin (r8): one anti-join against the loser frame

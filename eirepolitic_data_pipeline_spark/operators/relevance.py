@@ -57,7 +57,7 @@ def bm25_scores(df: DataFrame, terms: Sequence[str],
     the df pass and the scoring pass) — so the corpus is tokenized exactly
     TWICE regardless of plan fan-out; these are the same artifacts a
     production run would write as its own tables (curate_corpus's
-    persist_stages pattern; a long-lived session curating many corpora
+    persisted stage boundaries; a long-lived session curating many corpora
     should release them once the result is materialized). Pass False for
     a cache-free plan (each consumer re-scans the corpus).
     """
@@ -129,7 +129,7 @@ def bigram_lm_bits(df: DataFrame, text_col: str = "text",
     ``persist()``-ed under ``persist_stats`` so the context-count and
     probability consumers don't re-run the count pass: the same artifact
     a production run would write as its own table (curate_corpus's
-    persist_stages pattern — release after materializing downstream).
+    persisted stage boundaries — release after materializing downstream).
     All joins key on the bigram — never |corpus|^2.
     """
     occ = _bigram_pairs(df, text_col, id_col)

@@ -1,19 +1,19 @@
-"""Embedding similarity search: brute-force cosine top-k, LSH/IVF-bucketed
-approximate nearest neighbors, and the compressed serving stack
-(int8-dequantized and product-quantized two-stage kNN, up to the
-fully-literal FAISS-shape IVFPQ ``knn_ivf_adc``) over an
-``array<float>`` column.
+"""Embedding similarity search over an ``array<float>`` column: one
+``knn`` retriever composed from a codec (stored, int8, PQ, IVF-PQ or a
+projection), an optional coarse quantizer (sign-LSH, grid cells, trained
+centroids, an index's stored cells) and an optional exact re-rank; its
+recall telemetry; and the persisted IVF-PQ index lifecycle.
 
-The dot/norm folds are pure Catalyst higher-order functions (zip_with /
-aggregate) — JVM-side, no Python, no UDF. For very wide vectors or very hot
-paths a Pandas-UDF matmul variant is provided (Arrow-batched numpy dot) —
-prefer it when k·dim work per row dominates over serialization. Corpus-sized
-index builds (cells, codes) run as map-only Arrow kernels, parity-pinned to
-their pure-Catalyst literal twins.
+``cosine_col``'s dot/norm folds are pure Catalyst higher-order functions
+(zip_with / aggregate) — the semantic contract the DuckDB oracles mirror.
+Pair scoring and corpus-sized index builds (cells, codes, projections)
+run as map-only Arrow kernels, parity-pinned to their pure-Catalyst
+literal twins.
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass, field
 from typing import Optional
 
 from pyspark.sql import Column, DataFrame, Window
@@ -194,411 +194,6 @@ def _scored_pairs_kernel(paired: DataFrame, a_id: str, b_id: str,
                                        f"{out_col} double"))
 
 
-def knn_bruteforce(vectors: DataFrame, queries: DataFrame, k: int,
-                   id_col: str = "vec_id", vec_col: str = "embedding",
-                   query_id_col: str = "vec_id") -> DataFrame:
-    """Exact top-k neighbors for each query vector.
-
-    queries is expected tiny (it is broadcast); vectors can be arbitrarily
-    large — the plan is scan × broadcast → per-row fold → window top-k,
-    which scales linearly with |vectors|·|queries|.
-    """
-    v = vectors.select(F.col(id_col).alias("neighbor_id"),
-                       F.col(vec_col).cast("array<double>").alias("nv"))
-    q = queries.select(F.col(query_id_col).alias("query_id"),
-                       F.col(vec_col).cast("array<double>").alias("qv"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    # scoring via the Arrow pair kernel (r12, guide §4): the broadcast
-    # join stays map-side; the |queries|·|corpus| interpreted cosine
-    # folds — the stage's dominant cost — run as three vectorized
-    # accumulations, float-identical to cosine_col (kernel docstring)
-    pairs = (v.crossJoin(F.broadcast(q))
-             .filter(F.col("neighbor_id") != F.col("query_id")))
-    return (
-        _scored_pairs_kernel(pairs, "query_id", "neighbor_id",
-                             "qv", "nv")
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
-def _resolve_m(k: int, m) -> int:
-    """Shared k/m validation of the compressed-serving family
-    (knn_quantized_rerank / knn_pq_adc / knn_ivf_pq / knn_ivf_adc /
-    knn_ivf_pq_index): k >= 1, m defaults to 4k, and the exact re-rank
-    can only return candidates stage 1 kept (m >= k). One place (r9
-    review: five hand-copies had already drifted — knn_ivf_pq's lost
-    the k guard, silently returning empty for k=0)."""
-    if k < 1:
-        raise ValueError("k must be >= 1")
-    if m is None:
-        m = 4 * k
-    if m < k:
-        raise ValueError(f"m ({m}) must be >= k ({k}) — the exact re-rank "
-                         "can only return candidates stage 1 kept")
-    return m
-
-
-def knn_quantized_rerank(quantized: DataFrame, queries: DataFrame, k: int,
-                         m: Optional[int] = None,
-                         vectors: Optional[DataFrame] = None,
-                         id_col: str = "vec_id",
-                         vec_col: str = "embedding",
-                         query_id_col: str = "vec_id") -> DataFrame:
-    """Two-stage serving kNN over a COMPRESSED corpus — the IVF-PQ
-    serving pattern (asymmetric distance computation, Jégou et al. 2011),
-    composed from this repo's symmetric int8 codec: stage 1 scores every
-    corpus row against the broadcast queries on the DEQUANTIZED vectors
-    (``quantize_int8``'s ``(vec_id, scale, qvec)`` columns) and keeps the
-    top-``m`` candidates per query; stage 2 re-ranks those
-    |queries|·``m`` candidates EXACTLY against the full-precision
-    ``vectors`` frame and emits the top-``k``. Output
-    ``(query_id, neighbor_id, cosine, rank)`` — ``cosine`` exact when
-    ``vectors`` is given, dequantized-approximate when ``vectors=None``
-    (single-stage compressed search).
-
-    Why this exists at 100 TB: the float64 embedding column is the
-    dominant scan cost of every serving pass, and the int8 twin is ~8x
-    narrower — so the corpus-wide stage reads the compressed table only,
-    while full-precision vectors are touched for just |queries|·m rows
-    via a broadcast-candidate join (never a second corpus scan of the
-    wide column). Candidate quality is the codec's certified
-    reconstruction (q72's mse contract); ``m`` > k buys back the
-    neighbors the quantization grid blurs across the top-k boundary —
-    the exactness knob, with m = |corpus| degenerating to brute force.
-
-    Determinism: dequantization multiplies by the EMITTED 9-dp-rounded
-    scale (the reproducibility pin of the codec), both rank cuts order
-    by (cosine DESC, neighbor_id), and all cosines are the repo's
-    sequential folds — the DuckDB oracle re-derives both stages
-    bit-compatibly. Zero-scale (all-zero) vectors dequantize to zero and
-    score 0.0 via ``cosine_col``'s zero-norm guard, never NaN.
-
-    CONTRACT: ``quantized`` must be ``quantize_int8``'s verbatim output
-    schema — the ``(vec_id, scale, qvec)`` column NAMES are fixed
-    (``id_col``/``vec_col`` rename only the full-precision ``vectors``/
-    ``queries`` frames; a quantized frame with renamed columns raises an
-    AnalysisException rather than silently mis-joining). And ``vectors``
-    must cover every id in ``quantized`` (stage 2's fetch is an inner
-    join, so a candidate missing from the full-precision frame silently
-    drops out of the top-k instead of erroring). Both in-repo callers
-    derive the two frames from the same source, which satisfies this by
-    construction."""
-    m = _resolve_m(k, m)
-    # zip against array_repeat(scale): when `quantized` is the
-    # quantize_int8 PLAN (not a materialized table), referencing the
-    # scale column inside an interpreted element lambda inlines its
-    # whole array_max fold per ELEMENT (dim x dim work per row, r9);
-    # array_repeat evaluates it once per row
-    dq = F.zip_with(F.col("qvec"),
-                    F.array_repeat(F.col("scale"), F.size("qvec")),
-                    lambda x, s: x.cast("double") * s)
-    v = quantized.select(F.col("vec_id").alias("neighbor_id"),
-                         dq.alias("nv"))
-    q = queries.select(F.col(query_id_col).alias("query_id"),
-                       F.col(vec_col).cast("array<double>").alias("qv"))
-    cand = _compressed_topm(v, q, m)
-    if vectors is None:
-        return (cand.filter(F.col("rank") <= k)
-                .select("query_id", "neighbor_id", "cosine", "rank"))
-    return _exact_rerank(cand.select("query_id", "neighbor_id"), q,
-                         vectors, k, id_col, vec_col)
-
-
-def knn_pca_rerank(vectors: DataFrame, queries: DataFrame, k: int,
-                   mean: list, components: list,
-                   m: Optional[int] = None,
-                   id_col: str = "vec_id", vec_col: str = "embedding",
-                   query_id_col: str = "vec_id") -> DataFrame:
-    """Two-stage serving kNN through a PCA-REDUCED stage 1 — the
-    reduce-then-index pattern (project to the top-k' variance
-    directions, generate candidates in the cheap space, re-rank
-    exactly in the full space). The third member of the two-stage
-    family next to ``knn_quantized_rerank`` (int8 codec stage 1) and
-    ``knn_ivf_pq`` (cell-pruned ADC stage 1): here the compression is
-    DIMENSIONALITY, so stage 1's per-candidate cosine fold costs k'
-    multiplies instead of dim — at dim=512 and k'=32 the corpus-wide
-    scan stage does ~16× less arithmetic and reads a ~16× narrower
-    projection column, while stage 2 touches full-precision vectors
-    for only |queries|·m rows via the broadcast-candidate join
-    (``_exact_rerank`` — never a second corpus scan).
-
-    ``(mean, components)`` is ``pca_fit``'s model pair (fit once,
-    serve many — the kmeans/codebook lifecycle; pass
-    ``whiten=True``'s output when the reduced-space metric should be
-    Mahalanobis-like). Corpus projection is the map-only Arrow kernel
-    (``pca_project``); the sample-sized query frame projects through
-    the literal Catalyst twin (``pca_project_expr``, bit-identical by
-    the family's parity pin) — the ``centroid_cells`` vs
-    ``centroid_cells_frame`` split. Candidate quality is governed by
-    ``m`` (default 4k): reduced-space cosine is a proxy ranking, and
-    ``m`` > k buys back neighbors the projection blurs across the
-    top-k boundary; ``m`` >= |corpus|−1 keeps every row in stage 1,
-    making the output EXACTLY ``knn_bruteforce`` (test-pinned).
-    Output ``(query_id, neighbor_id, cosine, rank)`` with exact
-    full-space cosines."""
-    from .vectors import pca_project, pca_project_expr
-
-    m = _resolve_m(k, m)
-    pv = pca_project(vectors, mean, components,
-                     vec_col=vec_col, id_col=id_col)
-    v = pv.select(F.col(id_col).alias("neighbor_id"),
-                  F.col("projection").alias("nv"))
-    q_red = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        pca_project_expr(vec_col, mean, components).alias("qv"))
-    cand = _compressed_topm(v, q_red, m)
-    q_full = queries.select(F.col(query_id_col).alias("query_id"),
-                            F.col(vec_col).cast("array<double>")
-                            .alias("qv"))
-    return _exact_rerank(cand.select("query_id", "neighbor_id"),
-                         q_full, vectors, k, id_col, vec_col)
-
-
-def _compressed_topm(v: DataFrame, q: DataFrame, m: int) -> DataFrame:
-    """Stage 1 shared by the compressed serving operators
-    (``knn_quantized_rerank``, ``knn_pq_adc``): score every row of the
-    approximately-reconstructed corpus ``v`` = (neighbor_id, nv) against
-    the broadcast raw-query frame ``q`` = (query_id, qv) and keep the
-    top-``m`` per query. Projects down to (ids, cosine) BEFORE the top-m
-    window: the window's exchange moves every scored corpus row, and
-    carrying the query vector through it would ship a dim-sized payload
-    per scored row — qv re-attaches after the cut from the
-    (broadcast-small) query frame."""
-    w_m = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id"))
-    # Arrow pair kernel for the |queries|·|corpus| ADC scoring (r12,
-    # guide §4) — the kernel's output IS the pre-window projection the
-    # old explicit .select kept narrow, float-identical to cosine_col
-    pairs = (v.crossJoin(F.broadcast(q))
-             .filter(F.col("neighbor_id") != F.col("query_id")))
-    return (_scored_pairs_kernel(pairs, "query_id", "neighbor_id",
-                                 "qv", "nv")
-            .withColumn("rank", F.row_number().over(w_m).cast("int"))
-            .filter(F.col("rank") <= m))
-
-
-def knn_pq_adc(codes: DataFrame, codebooks: list[list[list[float]]],
-               queries: DataFrame, k: int,
-               m: Optional[int] = None,
-               vectors: Optional[DataFrame] = None,
-               id_col: str = "vec_id", vec_col: str = "embedding",
-               query_id_col: str = "vec_id") -> DataFrame:
-    """Two-stage serving kNN over a PRODUCT-QUANTIZED corpus — the real
-    PQ half of IVF-PQ (Jégou et al. 2011), where ``knn_quantized_rerank``
-    substitutes the scalar int8 codec: stage 1 scores every corpus row's
-    ``pq_decode`` reconstruction (each subspace's codeword, concatenated)
-    against the broadcast RAW queries — asymmetric distance computation,
-    exact query vs compressed corpus — and keeps the top-``m``
-    candidates; stage 2 re-ranks those |queries|·m candidates EXACTLY
-    against full precision and emits the top-``k``. Output
-    ``(query_id, neighbor_id, cosine, rank)``; ``vectors=None`` skips
-    the re-rank (single-stage compressed search, approximate cosines).
-
-    Why PQ at 100 TB: the serving scan reads the ``(vec_id, codes)``
-    table — m small ints per row against dim doubles, a 64x+ cut at the
-    default shapes (m=4, dim=64) vs int8's 8x — plus the shared
-    m·k·(dim/m)-double codebook, embedded in the projection as a
-    2-level literal the decode looks up per subspace (m ``element_at``
-    calls per row, not a per-(row, centroid) fold — decode is NOT the
-    interpreted hot spot; the cosine fold is, same as every sibling).
-    Candidate quality is the trained codebooks' reconstruction; ``m``
-    (the candidate budget, distinct from the subspace count — named
-    ``m`` in both papers' traditions, disambiguated by position) buys
-    back neighbors the quantization blurs, with m = |corpus|
-    degenerating to brute force over the re-rank.
-
-    Determinism/parity: codes from ``pq_codes``/``pq_encode`` (kernel
-    parity-pinned), decode concatenates ``round_dp``-rounded codewords
-    (repr-exact literals), cosines are the repo's sequential folds, and
-    both rank cuts order by (cosine DESC, neighbor_id) — the DuckDB
-    oracle re-derives fit, encode, decode, and both stages.
-
-    CONTRACT: ``codes`` must be ``pq_encode``'s verbatim
-    ``(vec_id, codes)`` schema built with these ``codebooks`` (decode
-    of mismatched codes throws under ANSI, see ``pq_decode``), and
-    ``vectors`` must cover every id in ``codes`` (the re-rank fetch is
-    an inner join — ``knn_quantized_rerank``'s contract)."""
-    from .vectors import pq_decode
-
-    m = _resolve_m(k, m)
-    v = codes.select(F.col("vec_id").alias("neighbor_id"),
-                     pq_decode("codes", codebooks).alias("nv"))
-    q = queries.select(F.col(query_id_col).alias("query_id"),
-                       F.col(vec_col).cast("array<double>").alias("qv"))
-    cand = _compressed_topm(v, q, m)
-    if vectors is None:
-        return (cand.filter(F.col("rank") <= k)
-                .select("query_id", "neighbor_id", "cosine", "rank"))
-    return _exact_rerank(cand.select("query_id", "neighbor_id"), q,
-                         vectors, k, id_col, vec_col)
-
-
-def _exact_rerank(cand: DataFrame, q: DataFrame, vectors: DataFrame,
-                  k: int, id_col: str, vec_col: str) -> DataFrame:
-    """Stage 2 of the compressed-serving operators: exact top-``k`` over a
-    small (query_id, neighbor_id) candidate frame. The candidate side is
-    |queries|·m rows — broadcast (with ``qv`` re-attached from the
-    broadcast-small query frame ``q`` = (query_id, qv)) so the
-    full-precision fetch is a map-side join against the wide table, never
-    a corpus shuffle."""
-    xv = vectors.select(F.col(id_col).alias("neighbor_id"),
-                        F.col(vec_col).cast("array<double>").alias("xv"))
-    w_k = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id"))
-    cand_q = cand.join(F.broadcast(q), "query_id")
-    return (xv.join(F.broadcast(cand_q), "neighbor_id")
-            .withColumn("cosine", cosine_col("xv", "qv"))
-            .withColumn("rank", F.row_number().over(w_k).cast("int"))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "cosine", "rank"))
-
-
-def knn_ivf_pq(quantized: DataFrame, queries: DataFrame, k: int,
-               centroids: list[list[float]], nprobe: int = 2,
-               m: Optional[int] = None,
-               vectors: Optional[DataFrame] = None,
-               id_col: str = "vec_id", vec_col: str = "embedding",
-               query_id_col: str = "vec_id") -> DataFrame:
-    """The full IVF-PQ serving composition (Jégou et al. 2011; the FAISS
-    IVFPQ shape), assembled from this repo's certified pieces: a trained
-    coarse quantizer partitions the COMPRESSED corpus into centroid cells
-    (``centroid_cells`` over a ``kmeans_fit`` model — q82's certified
-    quantizer), each query probes its ``nprobe`` nearest cells
-    (``centroid_probe_ranks``), candidates are scored on the DEQUANTIZED
-    int8 vectors within the probed cells only (q83's certified
-    compressed scoring through ``knn_lsh``'s bucket equi-join), the
-    top-``m`` survive, and an exact re-rank against full precision emits
-    the top-``k``. ``vectors=None`` skips the re-rank (single-stage
-    compressed IVF search).
-
-    Where the siblings sit: ``knn_quantized_rerank`` scores the WHOLE
-    compressed corpus per query (exhaustive-PQ — bounded IO, linear
-    compute); this operator adds the IVF candidate cut on top, so
-    per-query compute tracks the probed cells' population, not the
-    corpus. Probing every cell (nprobe >= k_centroids) degenerates to
-    ``knn_quantized_rerank`` with the same ``m`` (test-pinned). Corpus
-    cells are keyed on the dequantized vectors — self-consistent with
-    the scoring at the codec's precision; a vector the codec cannot key
-    (NULL/ragged) gets a NULL cell and drops from the index, the
-    sign_lsh_bucket contract.
-
-    Plan shape: one narrow scan of the (scale, qvec) table with corpus
-    cells computed by the ARROW ASSIGNMENT KERNEL (map-only, vectorized —
-    the ``centroid_cells`` literal expression is an interpreted
-    per-(row, centroid) fold and measured ~100 s for 200k x 16 on the
-    stress host; the kernel is parity-pinned to it, so the cells are
-    identical), a bucket equi-join against the probed cells (work tracks
-    cell population), the same pruned top-m window as q83 (ids + cosine
-    only, map-side WindowGroupLimit), and the broadcast-candidate exact
-    fetch. Queries — a sample-sized frame — key their home cell and probe
-    ranking through the literal expressions. Rows the codec cannot key
-    (NULL/wrong-dimension/NULL-element qvec) drop from the index, the
-    same rows ``centroid_cells`` gives a NULL cell.
-
-    Same ``quantized`` contract as ``knn_quantized_rerank``: the frame
-    must carry ``quantize_int8``'s verbatim ``(vec_id, scale, qvec)``
-    column names (``id_col``/``vec_col`` rename only the full-precision
-    frames)."""
-    m = _resolve_m(k, m)
-    # zip against array_repeat(scale): when `quantized` is the
-    # quantize_int8 PLAN (not a materialized table), referencing the
-    # scale column inside an interpreted element lambda inlines its
-    # whole array_max fold per ELEMENT (dim x dim work per row, r9);
-    # array_repeat evaluates it once per row
-    dq = F.zip_with(F.col("qvec"),
-                    F.array_repeat(F.col("scale"), F.size("qvec")),
-                    lambda x, s: x.cast("double") * s)
-    # corpus cells via the shared frame-level kernel bucketer (r9): rows
-    # the codec cannot key (NULL/wrong-dimension/NULL-element qvec, which
-    # dequantize to the same malformed shapes) drop from the index there
-    dq_frame = centroid_cells_frame(
-        quantized.select("vec_id", dq.alias("__dqv")), centroids,
-        id_col="vec_id", vec_col="__dqv", cell_col="__cell")
-    return _ivf_compressed_serve(dq_frame, queries, k, centroids, nprobe,
-                                 m, vectors, id_col, vec_col,
-                                 query_id_col)
-
-
-def _ivf_compressed_serve(dq_frame: DataFrame, queries: DataFrame, k: int,
-                          centroids: list[list[float]], nprobe: int,
-                          m: int, vectors: Optional[DataFrame],
-                          id_col: str, vec_col: str,
-                          query_id_col: str) -> DataFrame:
-    """The IVF serving core shared by ``knn_ivf_pq`` (int8 corpus) and
-    ``knn_ivf_adc`` (PQ-codes corpus): given the kernel-bucketed
-    approximate corpus ``dq_frame`` = (vec_id, __dqv, __cell), run the
-    probe → cell-equi-join → top-m → exact-re-rank chain. Queries keep
-    their RAW vector under the shared column name — asymmetric distance
-    computation: exact query against compressed corpus, the ADC scoring
-    rule — and key their home cell through the literal expression
-    (sample-sized, never the corpus)."""
-    q_in = queries.select(F.col(query_id_col),
-                          F.col(vec_col).cast("array<double>")
-                          .alias("__dqv"),
-                          centroid_cells(vec_col, centroids)
-                          .alias("__cell"))
-    cand = knn_lsh(dq_frame, q_in, m, id_col="vec_id",
-                   vec_col="__dqv", query_id_col=query_id_col,
-                   multiprobe=False,
-                   bucketer=lambda c, n: F.col("__cell"),
-                   vector_prober=lambda qv: centroid_probe_ranks(
-                       qv, centroids, nprobe=nprobe))
-    if vectors is None:
-        return cand.filter(F.col("rank") <= k)
-    q = queries.select(F.col(query_id_col).alias("query_id"),
-                       F.col(vec_col).cast("array<double>").alias("qv"))
-    return _exact_rerank(cand.select("query_id", "neighbor_id"), q,
-                         vectors, k, id_col, vec_col)
-
-
-def knn_ivf_adc(codes: DataFrame, model: IVFPQModel,
-                queries: DataFrame, k: int, nprobe: int = 2,
-                m: Optional[int] = None,
-                vectors: Optional[DataFrame] = None,
-                id_col: str = "vec_id", vec_col: str = "embedding",
-                query_id_col: str = "vec_id") -> DataFrame:
-    """FAISS-shape IVFPQ serving over an encoded corpus: the trained
-    coarse quantizer partitions a PRODUCT-QUANTIZED corpus —
-    ``knn_ivf_pq``'s composition with the real PQ codec in place of the
-    scalar int8 stand-in. The stored ``cell`` is the index key; each
-    query probes its ``nprobe`` nearest centroids by raw distance,
-    candidates score inside the probed cells on the reconstructions
-    (asymmetric distance computation), the top-``m`` survive, and the
-    exact full-precision re-rank emits the top-``k``.
-
-    The reconstruction follows the model's codec: ``pq_decode(codes)``
-    for a flat model, ``centroid[cell] + pq_decode(codes)`` for a
-    residual one. For a flat model, probing every cell degenerates to
-    ``knn_pq_adc`` with the same ``m`` (test-pinned, the
-    ``knn_ivf_pq``/``knn_quantized_rerank`` relationship).
-
-    Storage story at 100 TB: the serving scan reads (vec_id, codes,
-    cell) — m small ints per row — plus the bounded broadcast model;
-    per-query compute tracks probed-cell population. CONTRACT: ``codes``
-    is ``ivf_pq_encode``'s ``(vec_id, codes, cell)`` built with THIS
-    model (a parquet round-trip of it, filtered to the probe union, is
-    the partition-pruned at-rest serve — ``knn_ivf_pq_index``); a code
-    or cell outside the model throws under ANSI in ``element_at`` (loud
-    on a model/codes mismatch, the ``pq_decode`` rule), and ``vectors``
-    must cover every id in ``codes``."""
-    from .vectors import _lit_array2, pq_decode
-
-    m = _resolve_m(k, m)
-    recon = pq_decode("codes", model.codebooks)
-    if model.residual:
-        recon = F.zip_with(
-            F.element_at(_lit_array2(model.centroids),
-                         F.col("cell").cast("int") + 1),
-            recon, lambda c, r: c + r)
-    dq_frame = codes.select("vec_id", recon.alias("__dqv"),
-                            F.col("cell").cast("string").alias("__cell"))
-    return _ivf_compressed_serve(dq_frame, queries, k, model.centroids,
-                                 nprobe, m, vectors, id_col, vec_col,
-                                 query_id_col)
-
-
 def sign_lsh_bucket(vec_col: Column | str, n_bits: int = 8) -> Column:
     """Axis-aligned hyperplane LSH: bucket = sign bits of the first n dims.
     Cheap, deterministic, engine-independent. For better-distributed planes
@@ -661,165 +256,6 @@ def hashed_projection_bucket(vec_col: Column | str, dim: int,
                   F.concat(*bits))
 
 
-def knn_lsh(vectors: DataFrame, queries: DataFrame, k: int,
-            id_col: str = "vec_id", vec_col: str = "embedding",
-            query_id_col: str = "vec_id", n_bits: int = 6,
-            multiprobe: bool = False,
-            max_bucket: Optional[int] = None,
-            bucketer=None, prober=None, vector_prober=None) -> DataFrame:
-    """Approximate top-k: candidates must share the query's LSH bucket
-    (optionally ±1-bit multiprobe buckets for recall). The bucket equi-join
-    partitions candidates by bucket — at 100 TB each task handles one
-    bucket's candidate set, never the full corpus.
-
-    ``max_bucket`` is the optional hot-bucket guard (same groupBy-count
-    semi-join shape as semantic_dedup's max_cell — never a window): a
-    degenerate bucket (all-zero embeddings, too few bits for the corpus)
-    otherwise funnels |bucket| x |queries probing it| comparisons into one
-    join task. Defaults to None because dropping a bucket drops RECALL for
-    queries that live in it — a search operator shouldn't silently return
-    worse neighbors; set it (DEFAULT_MAX_CELL is a reasonable value) when
-    the corpus can contain degenerate buckets, or raise n_bits.
-
-    ``bucketer`` swaps the bucket function: a callable
-    ``(vec, n_bits) -> Column`` producing an ``n_bits``-character
-    '0'/'1' string (multiprobe flips those characters), where ``vec``
-    is the vector column NAME (str — every bucketer in this module
-    accepts names; wrap in ``F.col`` for Column arithmetic. Passing the
-    name lets the model-literal builders parse as one-round-trip text,
-    the r11 plan-construction fix). Default is ``sign_lsh_bucket``;
-    pass e.g.
-    ``lambda c, n: hashed_projection_bucket(c, dim=768, n_planes=n)`` for
-    better-distributed planes when embedding axes are correlated.
-
-    ``prober`` generalizes multiprobe to non-bit bucket keys: a callable
-    ``(qbucket_col) -> Column`` producing an ARRAY of probe keys (which
-    must include the home bucket and be pairwise distinct — the
-    no-dedup argument below relies on it). Mutually exclusive with
-    ``multiprobe`` (which is bit-flip-specific). Use with an IVF-style
-    bucketer: ``prober=ivf_probe_cells`` probes the 3^dims adjacent grid
-    cells — the nprobe dial of a real IVF index.
-
-    ``vector_prober`` (r8) is the trained-quantizer variant of
-    ``prober``: a callable ``(qvec) -> Column`` producing the probe
-    ARRAY from the query VECTOR itself (``qvec`` is the query-vector
-    column NAME, str — same rationale as ``bucketer``) — required when probe ranking
-    needs distances (``centroid_probe_ranks``: the nprobe nearest
-    centroids), which the bucket key alone can't express. Same output
-    contract as ``prober`` (home bucket first, pairwise distinct), and
-    the home-bucket NULL guard still applies: a query the bucketer
-    deems unservable probes nothing, whatever the prober says. All
-    three probe expansions are mutually exclusive."""
-    exclusive = [multiprobe, prober is not None, vector_prober is not None]
-    if sum(exclusive) > 1:
-        raise ValueError("multiprobe (bit-flip), prober (bucket-key), and "
-                         "vector_prober (query-vector) are mutually "
-                         "exclusive probe expansions")
-    bucket_of = bucketer or sign_lsh_bucket
-    v = vectors.select(F.col(id_col).alias("neighbor_id"),
-                       F.col(vec_col).cast("array<double>").alias("nv"),
-                       bucket_of(vec_col, n_bits).alias("bucket"))
-    if max_bucket is not None:
-        small = (v.groupBy("bucket")
-                 .agg(F.count(F.lit(1)).alias("__bn"))
-                 .filter(F.col("__bn") <= max_bucket)
-                 .select("bucket"))
-        v = v.join(small, "bucket", "left_semi")
-    q = queries.select(F.col(query_id_col).alias("query_id"),
-                       F.col(vec_col).cast("array<double>").alias("qv"),
-                       bucket_of(vec_col, n_bits).alias("qbucket"))
-    if multiprobe:
-        # probe the home bucket plus each 1-bit flip
-        def flip(bucket: Column, i: int) -> Column:
-            flipped = F.when(F.substring(bucket, i + 1, 1) == "1", "0").otherwise("1")
-            return F.concat(F.substring(bucket, 1, i), flipped,
-                            F.substring(bucket, i + 2, n_bits - i - 1))
-        probes = F.array(F.col("qbucket"),
-                         *[flip(F.col("qbucket"), i) for i in range(n_bits)])
-        q = q.withColumn("qbucket", F.explode(probes))
-    elif prober is not None:
-        # a NULL home bucket (NULL/short vector) must stay out of the
-        # probe set: explode of a NULL array emits no rows, so guard the
-        # prober output rather than trusting it to propagate NULLs
-        q = q.withColumn(
-            "qbucket",
-            F.explode(F.when(F.col("qbucket").isNotNull(),
-                             prober(F.col("qbucket")))))
-    elif vector_prober is not None:
-        # same NULL-home-bucket guard: the bucketer is the authority on
-        # servability, so a vector it refuses to key probes nothing even
-        # if the prober could rank centroids for it
-        q = q.withColumn(
-            "qbucket",
-            F.explode(F.when(F.col("qbucket").isNotNull(),
-                             vector_prober("qv"))))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    # No dropDuplicates: (query_id, neighbor_id) pairs are unique by
-    # construction — each neighbor has ONE bucket, and the probe set (home
-    # bucket + n_bits distinct 1-bit flips) is pairwise distinct, so a
-    # neighbor can match at most one probe even under multiprobe. A
-    # defensive dedup here would cost a full extra shuffle of the
-    # candidate set hash-partitioned on both columns.
-    #
-    # Candidate scoring via the Arrow pair kernel (r12, guide §4): the
-    # bucket equi-join is untouched (still partitions candidates by
-    # bucket); only the per-pair interpreted cosine folds move into the
-    # vectorized kernel, float-identical to cosine_col.
-    pairs = q.join(v, (F.col("bucket") == F.col("qbucket"))
-                   & (F.col("neighbor_id") != F.col("query_id")))
-    return (
-        _scored_pairs_kernel(pairs, "query_id", "neighbor_id",
-                             "qv", "nv")
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
-def knn_bruteforce_pandas(vectors: DataFrame, queries_pdf, k: int,
-                          id_col: str = "vec_id", vec_col: str = "embedding"):
-    """Arrow-batched numpy variant: queries as a small pandas DataFrame
-    (id, vector) broadcast into a mapInPandas stage doing a matmul per
-    batch. Use when |queries|·dim is large enough that the per-row column
-    fold dominates. Returns (query_id, neighbor_id, cosine) rows."""
-    import numpy as np
-    import pandas as pd
-
-    qids = queries_pdf[id_col].to_numpy()
-    qm = np.stack(queries_pdf[vec_col].to_numpy()).astype("float64")
-    # zero-norm guard, same contract as cosine_col: dividing by a zero norm
-    # yields NaN cosines, and NaN sorts ABOVE every real number in the
-    # descending top-k window — an all-zero embedding would rank as the TOP
-    # neighbor of every query. Dividing by 1 leaves the vector all-zero, so
-    # its similarities are exactly 0.0.
-    qnorm = np.linalg.norm(qm, axis=1, keepdims=True)
-    qn = qm / np.where(qnorm == 0, 1.0, qnorm)
-
-    def score(it):
-        for pdf in it:
-            vm = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-            vnorm = np.linalg.norm(vm, axis=1, keepdims=True)
-            vm = vm / np.where(vnorm == 0, 1.0, vnorm)
-            sims = vm @ qn.T  # |batch| × |queries|
-            out = pd.DataFrame({
-                "neighbor_id": np.repeat(pdf[id_col].to_numpy(), len(qids)),
-                "query_id": np.tile(qids, len(pdf)),
-                "cosine": sims.ravel(),
-            })
-            yield out
-
-    # derive the id type from the vectors frame (string/int32 ids must not
-    # hit a hardcoded 'long' Arrow schema); query ids share the id domain
-    id_type = vectors.schema[id_col].dataType.simpleString()
-    scored = vectors.select(id_col, vec_col).mapInPandas(
-        score,
-        schema=f"neighbor_id {id_type}, query_id {id_type}, cosine double")
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (scored.filter(F.col("neighbor_id") != F.col("query_id"))
-            .withColumn("rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= k))
-
-
 def ivf_grid_cells(vec_col: Column | str, grid: int = 4,
                    dims: int = 2) -> Column:
     """Deterministic coarse quantizer: grid cell over the first ``dims``
@@ -834,7 +270,7 @@ def ivf_grid_cells(vec_col: Column | str, grid: int = 4,
     NULL-propagating, where concat_ws silently SKIPPED the NULL coordinate
     and minted malformed cells like "2" or "" (review r7b) — which the
     single-probe join mis-bucketed and the nprobe ring expanded into
-    DUPLICATE probe keys, breaking knn_lsh's pairwise-distinct contract
+    DUPLICATE probe keys, breaking ``knn``'s pairwise-distinct probe contract
     (a neighbor matched several probes, crowding top-k and fanning out
     ann_recall's counting join). The oracles' separate cx/cy columns drop
     NULL coords via NULL join keys — this makes the engine structurally
@@ -857,9 +293,8 @@ def centroid_cells(vec_col: Column | str,
     """Trained-centroid coarse quantizer — the production IVF shape the
     fixed grid (``ivf_grid_cells``) stands in for: cell = id of the
     NEAREST fitted centroid (squared L2, ties to the lowest id) as a
-    compact string key. Drop-in ``bucketer`` for ``knn_lsh``/``ann_recall``
-    (wrap in a lambda that ignores the n_bits slot); pair with
-    ``centroid_probe_ranks`` for the nprobe dial. Fit the model with
+    compact string key — the ``Centroids`` quantizer's query-side key;
+    ``centroid_probe_ranks`` is its nprobe dial. Fit the model with
     ``operators.vectors.kmeans_fit`` — its deterministic, 6-dp-rounded
     centroids are what make the bucketing reproducible across runs and
     engines.
@@ -1023,8 +458,8 @@ def centroid_probe_ranks(vec_col: Column | str,
     is the ``nprobe`` NEAREST centroids by query distance (ties to the
     lowest id) — the real IVF serving rule, where the fixed grid's
     adjacency ring (``ivf_probe_cells``) is only a geometric stand-in.
-    Use through ``knn_lsh``/``ann_recall``'s ``vector_prober`` seam: the
-    probe ranking needs the query VECTOR, not just its home cell.
+    The ``Centroids`` quantizer's probes: the ranking needs the query
+    VECTOR, not just its home cell.
 
     Contract (what the no-dedup candidate join relies on): the array is
     pairwise distinct (distinct centroid ids), and its FIRST element is
@@ -1145,20 +580,17 @@ def ivf_probe_cells(cell_col: Column, dims: int = 2) -> Column:
     dial of a real IVF index: q80 measures the one-cell recall floor;
     probing the adjacency ring buys back the near-neighbors that landed
     just across a cell boundary, at 3^dims times the candidate cost.
-    Swap for a trained-centroid top-nprobe ranking without touching the
-    join (the knn_lsh ``prober`` contract only requires a distinct key
-    array).
+    The ``Grid`` quantizer's ``ring`` probes.
 
-    ``dims`` MUST match the bucketer's: a cell whose parsed coordinate
+    ``dims`` MUST match the cell key's: a cell whose parsed coordinate
     count differs gets a NULL probe array (explode drops the query) —
     without the arity guard, a 3-dim cell parsed as 2 coords would build
-    probes that can never equal any neighbor cell, returning empty
-    results with no structural trace (review r7b). A cell whose
-    coordinates aren't numeric (the bucketer contract allows any custom
-    key) degrades to the SAME NULL probe array via try_cast (r8, ADVICE)
-    — previously the plain cast THREW under ANSI, so one malformed key
-    failed the job instead of surfacing as the row-level recall 0.0 the
-    arity leg already degrades to. Per-row key shape is data, not
+    probes that can never equal any neighbor cell, returning empty results
+    with no structural trace (review r7b). A cell whose coordinates aren't
+    numeric degrades to the SAME NULL probe array via try_cast (r8,
+    ADVICE) — previously the plain cast THREW under ANSI, so one malformed
+    key failed the job instead of surfacing as the row-level recall 0.0
+    the arity leg already degrades to. Per-row key shape is data, not
     configuration."""
     from itertools import product
 
@@ -1176,6 +608,331 @@ def ivf_probe_cells(cell_col: Column, dims: int = 2) -> Column:
     # (CaseWhen branches evaluate lazily per row)
     return F.when(F.size(parts) == dims,
                   F.when(numeric, F.array(*combos)))
+
+
+# ---------------------------------------------------------------------------
+# The retriever: one ``knn`` composed from a codec, an optional coarse
+# quantizer and an optional exact re-rank — FAISS ``index_factory``'s
+# coarse quantizer x codec x re-rank (Johnson et al. 2017; IVF-PQ, Jégou
+# et al. 2011).
+# ---------------------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class Int8:
+    """Codec: the corpus is ``quantize_int8``'s verbatim
+    ``(vec_id, scale, qvec)`` frame, scored on its dequantized vectors
+    (``qvec * scale`` with the emitted 9-dp scale); queries stay raw."""
+
+
+@dataclass(frozen=True)
+class PQ:
+    """Codec: the corpus is ``pq_encode``'s verbatim ``(vec_id, codes)``
+    frame built with ``codebooks``, scored on its ``pq_decode``
+    reconstructions against raw queries — asymmetric distance
+    computation. A code outside the codebooks throws under ANSI."""
+    codebooks: list
+
+
+@dataclass(frozen=True)
+class Projection:
+    """Codec: corpus and queries both scored in the projected space
+    ``W (x - mean)`` — ``pca_fit``'s ``(mean, components)`` or a random
+    projection (``rp_components`` with a zero mean). The corpus projects
+    through the ``pca_project`` Arrow kernel, the sample-sized queries
+    through its bit-identical literal twin ``pca_project_expr``; rows
+    the projection cannot key (NULL / wrong-dimension / NULL-element)
+    drop from the corpus."""
+    mean: list
+    components: list
+
+
+# An ``IVFPQModel`` is the fourth codec: the corpus is ``ivf_pq_encode``'s
+# ``(vec_id, codes, cell)``, reconstructed as ``pq_decode(codes)`` or, for
+# a residual model, ``centroids[cell] + pq_decode(codes)``.
+
+
+def _corpus_view(codec, corpus: DataFrame, id_col: str,
+                 vec_col: str) -> tuple[DataFrame, str, str]:
+    """Stage 1's corpus side under ``codec``: ``(frame, id, vector)``,
+    naming the column every corpus row is keyed and scored on."""
+    from .vectors import _lit_array2, pca_project, pq_decode
+
+    if codec is None:
+        return corpus, id_col, vec_col
+    if isinstance(codec, Projection):
+        return (pca_project(corpus, codec.mean, codec.components,
+                            vec_col=vec_col, id_col=id_col),
+                id_col, "projection")
+    keep = []
+    if isinstance(codec, Int8):
+        # zip against array_repeat(scale): when `corpus` is the
+        # quantize_int8 PLAN (not a materialized table), referencing the
+        # scale column inside an interpreted element lambda inlines its
+        # whole array_max fold per ELEMENT (dim x dim work per row);
+        # array_repeat evaluates it once per row
+        recon = F.zip_with(F.col("qvec"),
+                           F.array_repeat(F.col("scale"), F.size("qvec")),
+                           lambda x, s: x.cast("double") * s)
+    elif isinstance(codec, PQ):
+        recon = pq_decode("codes", codec.codebooks)
+    elif isinstance(codec, IVFPQModel):
+        recon = pq_decode("codes", codec.codebooks)
+        if codec.residual:
+            recon = F.zip_with(
+                F.element_at(_lit_array2(codec.centroids),
+                             F.col("cell").cast("int") + 1),
+                recon, lambda c, r: c + r)
+        keep = ["cell"]  # the index key StoredCells reads
+    else:
+        raise TypeError(f"not a codec: {codec!r}")
+    return (corpus.select("vec_id", recon.alias("__dqv"), *keep),
+            "vec_id", "__dqv")
+
+
+def _explode_probes(q: DataFrame, probes: Column) -> DataFrame:
+    """One query row per probe key. A NULL home bucket (a query the
+    quantizer cannot key) probes nothing, whatever ``probes`` says:
+    explode of a NULL array emits no rows."""
+    return q.withColumn("qbucket", F.explode(
+        F.when(F.col("qbucket").isNotNull(), probes)))
+
+
+@dataclass(frozen=True)
+class _Quantizer:
+    """A coarse quantizer keys the corpus and the queries with ONE bucket
+    function and expands each query's home bucket into its probes, so the
+    two sides cannot disagree. Probe sets are pairwise distinct and hold
+    the home bucket, and each corpus row has one bucket, so a
+    (query, neighbor) pair meets at most once — no dedup shuffle.
+
+    ``max_bucket`` is the optional hot-bucket guard: buckets holding more
+    corpus rows are skipped (a groupBy-count semi-join, never a window —
+    ``semantic_dedup``'s ``max_cell`` shape). It trades recall for
+    bounded join tasks, so it is off by default."""
+    max_bucket: Optional[int] = field(default=None, kw_only=True)
+
+    def key(self, vec: Column | str) -> Column:
+        """The bucket of one vector column (NULL: unservable)."""
+        raise NotImplementedError
+
+    def key_corpus(self, frame: DataFrame, id_col: str,
+                   vec_col: str) -> tuple[DataFrame, Column]:
+        """``(frame, key)`` for the corpus side; unservable rows are
+        dropped or NULL-keyed."""
+        return frame, self.key(vec_col)
+
+    def probes(self, q: DataFrame) -> DataFrame:
+        """Expand ``q``'s home ``qbucket`` (query vector ``qv``) into one
+        row per probe; the default probes the home bucket only."""
+        return q
+
+
+@dataclass(frozen=True)
+class SignLSH(_Quantizer):
+    """Sign-bit LSH: an ``n_bits``-character '0'/'1' bucket — the signs of
+    the first ``n_bits`` coordinates (``sign_lsh_bucket``) or, with
+    ``dim``, of ``n_bits`` md5-hashed ±1 projections of all ``dim``
+    coordinates (``hashed_projection_bucket``; better spread when the
+    embedding axes correlate). ``probe_flips`` also probes every 1-bit
+    flip of the home bucket (1-bit multiprobe)."""
+    n_bits: int = 6
+    probe_flips: bool = False
+    dim: Optional[int] = None
+
+    def key(self, vec):
+        if self.dim is None:
+            return sign_lsh_bucket(vec, self.n_bits)
+        return hashed_projection_bucket(vec, self.dim, self.n_bits)
+
+    def probes(self, q):
+        if not self.probe_flips:
+            return q
+        n = self.n_bits
+        home = F.col("qbucket")
+
+        def flip(i: int) -> Column:
+            bit = F.when(F.substring(home, i + 1, 1) == "1", "0") \
+                .otherwise("1")
+            return F.concat(F.substring(home, 1, i), bit,
+                            F.substring(home, i + 2, n - i - 1))
+        return q.withColumn("qbucket", F.explode(
+            F.array(home, *[flip(i) for i in range(n)])))
+
+
+@dataclass(frozen=True)
+class Grid(_Quantizer):
+    """Fixed 4x4 grid cells over the first 2 coordinates
+    (``ivf_grid_cells``' defaults); ``ring`` also probes the 8 adjacent
+    cells (``ivf_probe_cells``) — the nprobe dial of the untrained
+    index."""
+    ring: bool = False
+
+    def key(self, vec):
+        return ivf_grid_cells(vec)
+
+    def probes(self, q):
+        if not self.ring:
+            return q
+        return _explode_probes(q, ivf_probe_cells(F.col("qbucket")))
+
+
+@dataclass(frozen=True)
+class Centroids(_Quantizer):
+    """Trained coarse quantizer: cell = the nearest of ``centroids``
+    (``kmeans_fit``'s model); each query probes its ``nprobe`` nearest
+    cells by query distance (``centroid_probe_ranks``). The corpus is
+    keyed by the Arrow assignment kernel (``centroid_cells_frame``), the
+    sample-sized queries by the parity-pinned literal ``centroid_cells``."""
+    centroids: list
+    nprobe: int = 1
+
+    def key(self, vec):
+        return centroid_cells(vec, self.centroids)
+
+    def key_corpus(self, frame, id_col, vec_col):
+        return (centroid_cells_frame(frame, self.centroids, id_col=id_col,
+                                     vec_col=vec_col, cell_col="__cell"),
+                F.col("__cell"))
+
+    def probes(self, q):
+        return _explode_probes(q, centroid_probe_ranks(
+            "qv", self.centroids, nprobe=self.nprobe))
+
+
+@dataclass(frozen=True)
+class StoredCells(Centroids):
+    """``Centroids`` over an encoded IVF-PQ index: the corpus is
+    ``ivf_pq_encode``'s ``(vec_id, codes, cell)`` (served with the
+    ``IVFPQModel`` codec) and its stored ``cell`` is the key — no
+    re-assignment. Build it from the model that encoded the index."""
+
+    def key_corpus(self, frame, id_col, vec_col):
+        return frame, F.col("cell").cast("string")
+
+
+@dataclass(frozen=True)
+class _Keyed(_Quantizer):
+    """``inner``'s probes over keys already stored in column ``col`` on
+    both sides (``ann_recall`` keys the corpus once for both branches)."""
+    inner: _Quantizer
+    col: str
+
+    def key(self, vec):
+        return F.col(self.col)
+
+    def probes(self, q):
+        return self.inner.probes(q)
+
+
+def _resolve_m(k: int, m) -> int:
+    """k >= 1; the re-rank budget ``m`` defaults to 4k and must be >= k
+    (the exact re-rank can only return candidates stage 1 kept)."""
+    if k < 1:
+        raise ValueError("k must be >= 1")
+    if m is None:
+        m = 4 * k
+    if m < k:
+        raise ValueError(f"m ({m}) must be >= k ({k}) — the exact re-rank "
+                         "can only return candidates stage 1 kept")
+    return m
+
+
+def knn(corpus: DataFrame, queries: DataFrame, k: int, *,
+        codec=None, quantizer: Optional[_Quantizer] = None,
+        m: Optional[int] = None, vectors: Optional[DataFrame] = None,
+        id_col: str = "vec_id", vec_col: str = "embedding",
+        query_id_col: str = "vec_id") -> DataFrame:
+    """Top-``k`` cosine neighbors of each query: ``(query_id,
+    neighbor_id, cosine, rank)``, ranked by (cosine DESC, neighbor_id);
+    a query never returns itself.
+
+    Stage 1 scores ``codec``'s reconstruction of every corpus row against
+    ``codec``'s view of each query with the Arrow pair kernel
+    (``_scored_pairs_kernel``, float-identical to ``cosine_col``):
+
+    - ``codec``: ``None`` (the corpus as stored, ``(id_col, vec_col)``),
+      ``Int8()``, ``PQ(codebooks)``, an ``IVFPQModel``, or
+      ``Projection(mean, components)``. Every codec but ``Projection``
+      keeps queries raw (asymmetric distance computation).
+    - ``quantizer``: ``None`` broadcasts the queries into one linear
+      corpus scan. A quantizer (``SignLSH``, ``Grid``, ``Centroids``,
+      ``StoredCells``) instead bucket-equi-joins queries to corpus rows
+      over the query's probes, so work tracks bucket population; rows it
+      cannot key drop out. Keys are computed on the codec's vectors.
+
+    Stage 1 keeps the top ``m`` per query when ``vectors`` is given, else
+    the top ``k`` (``cosine`` is then the codec's approximation). Stage 2
+    re-ranks those |queries|·m candidates exactly against the
+    full-precision ``vectors`` (``(id_col, vec_col)``, covering every
+    corpus id — an inner join) through a broadcast-candidate join, never
+    a second corpus scan. ``m`` defaults to 4k and must be >= k; at
+    |corpus| with no quantizer (or with every cell probed) the result
+    is the exhaustive one.
+
+    ``queries`` is a sample-sized ``(query_id_col, vec_col)`` frame: it
+    is broadcast. Codec frames carry their codec's verbatim column names
+    (``id_col``/``vec_col`` rename only the raw frames)."""
+    m = _resolve_m(k, m)
+    frame, cid, cvec = _corpus_view(codec, corpus, id_col, vec_col)
+    qview = vec_col
+    if isinstance(codec, Projection):
+        from .vectors import pca_project_expr
+        qview = pca_project_expr(vec_col, codec.mean, codec.components)
+    q_cols = [F.col(query_id_col).alias("query_id"),
+              (F.col(qview).cast("array<double>")
+               if isinstance(qview, str) else qview).alias("qv")]
+    if quantizer is None:
+        v = frame.select(F.col(cid).alias("neighbor_id"),
+                         F.col(cvec).cast("array<double>").alias("nv"))
+        pairs = (v.crossJoin(F.broadcast(queries.select(*q_cols)))
+                 .filter(F.col("neighbor_id") != F.col("query_id")))
+    else:
+        frame, key = quantizer.key_corpus(frame, cid, cvec)
+        v = frame.select(F.col(cid).alias("neighbor_id"),
+                         F.col(cvec).cast("array<double>").alias("nv"),
+                         key.alias("bucket"))
+        if quantizer.max_bucket is not None:
+            small = (v.groupBy("bucket")
+                     .agg(F.count(F.lit(1)).alias("__bn"))
+                     .filter(F.col("__bn") <= quantizer.max_bucket)
+                     .select("bucket"))
+            v = v.join(small, "bucket", "left_semi")
+        q = quantizer.probes(queries.select(
+            *q_cols, quantizer.key(qview).alias("qbucket")))
+        pairs = q.join(v, (F.col("bucket") == F.col("qbucket"))
+                       & (F.col("neighbor_id") != F.col("query_id")))
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id"))
+    cand = (_scored_pairs_kernel(pairs, "query_id", "neighbor_id",
+                                 "qv", "nv")
+            .withColumn("rank", F.row_number().over(w).cast("int"))
+            .filter(F.col("rank") <= (k if vectors is None else m)))
+    if vectors is None:
+        return cand.select("query_id", "neighbor_id", "cosine", "rank")
+    q = queries.select(F.col(query_id_col).alias("query_id"),
+                       F.col(vec_col).cast("array<double>").alias("qv"))
+    return _exact_rerank(cand.select("query_id", "neighbor_id"), q,
+                         vectors, k, id_col, vec_col)
+
+
+def _exact_rerank(cand: DataFrame, q: DataFrame, vectors: DataFrame,
+                  k: int, id_col: str, vec_col: str) -> DataFrame:
+    """``knn``'s stage 2: exact top-``k`` over a small (query_id,
+    neighbor_id) candidate frame. The candidate side is |queries|·m rows
+    — broadcast (with ``qv`` re-attached from the broadcast-small query
+    frame ``q`` = (query_id, qv)) so the full-precision fetch is a
+    map-side join against the wide table, never a corpus shuffle."""
+    xv = vectors.select(F.col(id_col).alias("neighbor_id"),
+                        F.col(vec_col).cast("array<double>").alias("xv"))
+    w_k = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id"))
+    cand_q = cand.join(F.broadcast(q), "query_id")
+    return (xv.join(F.broadcast(cand_q), "neighbor_id")
+            .withColumn("cosine", cosine_col("xv", "qv"))
+            .withColumn("rank", F.row_number().over(w_k).cast("int"))
+            .filter(F.col("rank") <= k)
+            .select("query_id", "neighbor_id", "cosine", "rank"))
 
 
 #: Hot-cell guard for semantic_dedup: cells holding more vectors than this
@@ -1245,129 +1002,59 @@ def semantic_dedup(vectors: DataFrame, threshold: float = 0.95,
         .select(F.col("id").alias(id_col), "canonical_id")
 
 
-def ann_recall(vectors: DataFrame, queries: DataFrame, k: int,
-               id_col: str = "vec_id", vec_col: str = "embedding",
-               query_id_col: str = "vec_id", n_bits: int = 6,
-               multiprobe: Optional[bool] = None,
-               max_bucket: Optional[int] = None,
-               bucketer=None, prober=None, vector_prober=None,
-               frame_bucketer=None) -> DataFrame:
-    """Recall@k telemetry for the bucketed ANN path: how many of each
-    query's TRUE top-k neighbors (``knn_bruteforce`` ground truth) the
-    LSH index (``knn_lsh`` with the same parameters a caller would serve
-    with) actually returned. Output one row per query:
+def ann_recall(corpus: DataFrame, queries: DataFrame, k: int,
+               quantizer: _Quantizer, id_col: str = "vec_id",
+               vec_col: str = "embedding",
+               query_id_col: str = "vec_id") -> DataFrame:
+    """Recall@k telemetry for a bucketed index: how many of each query's
+    TRUE top-k neighbors (the exhaustive ``knn``) the ``quantizer``'s
+    bucketed ``knn`` returned. Output one row per query:
     ``(query_id, n_true, n_hit, recall)`` with recall = n_hit / n_true
     rounded to 6 dp. Mean recall is one ``avg`` over the result — kept
     out of the row contract so the per-query distribution (the thing that
     exposes a degenerate bucket) is never pre-averaged away.
 
-    This is the missing feedback loop for every ANN tuning decision:
-    n_bits/multiprobe/bucketer changes trade recall for candidate-set
-    size, and without this operator a user only ever sees the cost side.
-    Run it on a SAMPLE of queries (ground truth is a brute-force pass —
-    |queries| x |vectors| cosine folds); the result quantifies what the
-    index bought for the corpus actually being served, not a benchmark's.
+    This is the feedback loop for every ANN tuning decision: bucket
+    width and probe count trade recall for candidate-set size. Run it on
+    a SAMPLE of queries (ground truth is a brute-force pass — |queries| x
+    |corpus| cosine folds).
 
     Plan shape: ground truth = one broadcast-queries scan of the corpus
-    (knn_bruteforce — linear, no CartesianProduct); approx = the bucket
-    equi-join path under test; the comparison is a LEFT join from truth
-    to approx on (query_id, neighbor_id) — truth is |queries| x k rows,
-    so the join is trivially small — then one groupBy(query_id). A query
-    with NO brute-force neighbors (corpus of 1) emits no row rather than
-    a 0/0.
+    (linear, no CartesianProduct); approx = the bucket equi-join under
+    test; the comparison is a LEFT join from truth to approx on
+    (query_id, neighbor_id) — |queries| x k rows — then one
+    groupBy(query_id). A query with NO exhaustive neighbors (corpus of
+    1) emits no row rather than a 0/0.
 
-    Universe contract (r8, ADVICE): recall is measured over the
-    INDEX-SERVABLE universe — corpus rows whose bucket is NULL
-    (NULL/short/malformed vectors under the given bucketer) are excluded
-    from the brute-force truth as well, since the bucket equi-join
-    structurally drops them; leaving them in silently depressed recall
-    with rows no index setting could ever reach. A query whose own
-    bucket is NULL emits no row at all (it is unservable, not
-    zero-recall). Callers that pre-filter to well-formed vectors (the
-    q78–q82 workload queries) see no change.
+    Universe contract: recall is measured over the INDEX-SERVABLE
+    universe — corpus rows the quantizer cannot key are excluded from
+    the truth as well, since the bucket equi-join structurally drops
+    them, and a query it cannot key emits no row at all (unservable, not
+    zero-recall).
 
-    ``frame_bucketer`` (r9) is the CORPUS-side twin of ``bucketer``: a
-    callable ``(df, id_col, vec_col, out_col) -> DataFrame`` returning
-    ``(id_col, vec_col, out_col)`` rows — unservable rows either dropped
-    or NULL-keyed, both are filtered here. Supply it when the bucket
-    function is expensive as a per-row expression: a trained-centroid
-    bucketer is a k-struct argmin of interpreted folds, and routing the
-    corpus through ``centroid_cells_frame``'s Arrow kernel instead cut
-    q82's fixed overhead by the cost of one corpus-wide k·dim-literal
-    evaluation. CONTRACT: it must key rows IDENTICALLY to ``bucketer``
-    (which still keys the sample-sized query side) — the kernel/literal
-    parity pin is what licenses the pair this operator ships with."""
-    # multiprobe default: bit-flip probing ON for the sign-LSH family,
-    # but OFF automatically when a generic prober is supplied — otherwise
-    # the documented prober usage would trip knn_lsh's mutual-exclusion
-    # error unless the caller also knew to disable an unrelated default
-    # (review r7b). An EXPLICIT multiprobe=True alongside prober still
-    # raises, as it should.
-    if multiprobe is None:
-        multiprobe = prober is None and vector_prober is None
-    # A frame_bucketer keys the corpus while `bucketer` keys the query
-    # side; supplying only the former silently pairs the corpus keys
-    # with sign_lsh_bucket query keys — every join misses and every
-    # query reports recall 0 with no structural trace (r9 ADVICE). The
-    # identical-keying contract must be explicit, so demand the pair.
-    if frame_bucketer is not None and bucketer is None:
-        raise ValueError(
-            "frame_bucketer requires a matching bucketer: the corpus and "
-            "query sides must key buckets IDENTICALLY, and without an "
-            "explicit query-side bucketer the query keys silently fall "
-            "back to sign_lsh_bucket (recall 0 everywhere)")
-    bucket_of = bucketer or sign_lsh_bucket
-    # Evaluate the bucketer ONCE over the corpus (r8): the servability
-    # filter, the truth branch's filter, and knn_lsh's bucket column would
-    # otherwise each evaluate it per corpus row — and a trained-centroid
-    # bucketer is a k-struct argmin of interpreted zip_with folds, the
-    # single most expensive expression in the ANN family (q82 measured ~3
-    # corpus-wide evaluations). A column projection alone doesn't help
-    # (predicate pushdown inlines the alias right back), so the bucketed
-    # corpus is lazily localCheckpoint-ed: the first action materializes
-    # (id, vector, bucket) blocks once — spill-safe MEMORY_AND_DISK — and
-    # both the truth and index branches read them. One corpus pass and one
-    # bucketer evaluation total, which is also one fewer source scan at
-    # 100 TB. The query side stays un-checkpointed: recall telemetry runs
-    # on a query SAMPLE (docstring), so its double evaluation is bounded.
-    #
-    # Retention/fault-tolerance trade (r9, ADVICE): localCheckpoint blocks
-    # live until the DataFrame is driver-GC'd (no caller-visible handle to
-    # unpersist here — the checkpoint is an internal node of the returned
-    # plan), so a caller looping MANY telemetry calls in one session
-    # accumulates corpus-sized MEMORY_AND_DISK block sets until the old
-    # result frames go out of scope; and checkpointing TRUNCATES lineage,
-    # so losing an executor mid-job fails the query instead of recomputing
-    # the lost blocks. Both are accepted for this operator because recall
-    # telemetry is a bounded, occasionally-run diagnostic (not a
-    # steady-state pipeline stage) and the alternative — three bucketer
-    # evaluations and three corpus scans per call — is the certain cost.
-    # Callers needing caller-driven retention control should persist the
-    # bucketed frame themselves and pass it with an identity bucketer
-    # (min_label_components' edge-cache pattern).
-    if frame_bucketer is not None:
-        bucketed = frame_bucketer(vectors, id_col, vec_col, "__ann_bucket")
-    else:
-        bucketed = vectors.select(F.col(id_col), F.col(vec_col),
-                                  bucket_of(F.col(vec_col), n_bits)
-                                  .alias("__ann_bucket"))
-    vectors = (bucketed
-               .filter(F.col("__ann_bucket").isNotNull())
-               .localCheckpoint(eager=False))
+    The corpus is keyed ONCE (a trained-centroid key is the Arrow
+    assignment kernel, an expression key is an interpreted fold) and
+    lazily ``localCheckpoint``-ed: the first action materializes (id,
+    vector, bucket) blocks — spill-safe MEMORY_AND_DISK — and both the
+    truth and the index branch read them, one corpus pass in total. The
+    blocks live until the returned frame is driver-GC'd, and the
+    checkpoint truncates lineage (a lost executor fails the query rather
+    than recomputing) — accepted for an occasionally-run diagnostic."""
+    frame, key = quantizer.key_corpus(corpus, id_col, vec_col)
+    corpus = (frame.select(F.col(id_col), F.col(vec_col),
+                           key.alias("__ann_bucket"))
+              .filter(F.col("__ann_bucket").isNotNull())
+              .localCheckpoint(eager=False))
     queries = (queries
-               .withColumn("__ann_bucket",
-                           bucket_of(F.col(vec_col), n_bits))
+               .withColumn("__ann_bucket", quantizer.key(F.col(vec_col)))
                .filter(F.col("__ann_bucket").isNotNull()))
-    truth = knn_bruteforce(vectors.drop("__ann_bucket"),
-                           queries.drop("__ann_bucket"), k, id_col,
-                           vec_col, query_id_col)
-    approx = (knn_lsh(vectors, queries, k, id_col, vec_col, query_id_col,
-                      n_bits=n_bits, multiprobe=multiprobe,
-                      max_bucket=max_bucket,
-                      bucketer=lambda c, n: F.col("__ann_bucket"),
-                      prober=prober, vector_prober=vector_prober)
-              .select("query_id", "neighbor_id",
-                      F.lit(1).alias("__hit")))
+    cols = dict(id_col=id_col, vec_col=vec_col, query_id_col=query_id_col)
+    truth = knn(corpus.drop("__ann_bucket"), queries.drop("__ann_bucket"),
+                k, **cols)
+    keyed = _Keyed(quantizer, "__ann_bucket",
+                   max_bucket=quantizer.max_bucket)
+    approx = (knn(corpus, queries, k, quantizer=keyed, **cols)
+              .select("query_id", "neighbor_id", F.lit(1).alias("__hit")))
     return (
         truth.select("query_id", "neighbor_id")
         .join(approx, ["query_id", "neighbor_id"], "left")
@@ -1389,7 +1076,7 @@ def write_ivf_pq_index(df: DataFrame, model: IVFPQModel, path: str,
     100 TB deployment actually serves from, where ``knn_ivf_pq_index``
     turns each query batch's probe set into a partition filter and the
     scan READS ONLY THE PROBED CELLS' FILES (Spark partition pruning;
-    the in-memory ``knn_ivf_adc`` instead serves an encoded frame per
+    the in-memory ``knn`` with the model codec serves an encoded frame per
     pass, the right shape for ad-hoc corpora).
 
     Build shape: ONE map-only encode kernel pass chained onto whatever
@@ -1567,17 +1254,18 @@ def knn_ivf_pq_index(index: DataFrame, model: IVFPQModel,
     100 TB the difference between scanning nprobe/k_coarse of the index
     and scanning all of it. Within the pruned scan, per-query candidate
     restriction, ADC scoring (in the model's codec), top-``m``, and the
-    exact re-rank are ``knn_ivf_adc``'s exact stages (same results as
-    the in-memory composition for the same model — test-pinned). A
-    query whose vector the quantizer cannot key probes nothing and
-    returns no rows."""
+    exact re-rank are ``knn``'s stages under the model codec and its
+    ``StoredCells`` quantizer (same results as the in-memory composition
+    for the same model — test-pinned). A query whose vector the quantizer
+    cannot key probes nothing and returns no rows."""
     m = _resolve_m(k, m)
     queries, pruned = _pruned_probe_scan(index, queries, model.centroids,
                                          nprobe, vec_col, query_id_col,
                                          max_query_rows)
-    return knn_ivf_adc(pruned, model, queries, k, nprobe=nprobe, m=m,
-                       vectors=vectors, id_col=id_col, vec_col=vec_col,
-                       query_id_col=query_id_col)
+    return knn(pruned, queries, k, codec=model,
+               quantizer=StoredCells(model.centroids, nprobe=nprobe), m=m,
+               vectors=vectors, id_col=id_col, vec_col=vec_col,
+               query_id_col=query_id_col)
 
 
 def _exact_rerank_shuffle(cand: DataFrame, q: DataFrame,
@@ -1602,7 +1290,7 @@ def _exact_rerank_shuffle(cand: DataFrame, q: DataFrame,
     zero-norm pairs 0.0; test-pinned float-identical to the expression
     path). A ragged or NULL full-precision vector is a LOUD contract
     error (``vectors`` must be the well-formed full-precision table —
-    ``knn_quantized_rerank``'s standing contract), where the expression
+    ``knn``'s standing contract), where the expression
     form silently scored it NULL."""
     import numpy as np
 
@@ -1626,7 +1314,7 @@ def _exact_rerank_shuffle(cand: DataFrame, q: DataFrame,
                     "exact re-rank: ragged or NULL full-precision "
                     "vector — `vectors` must cover every candidate id "
                     "with well-formed fixed-dimension vectors "
-                    "(knn_quantized_rerank's contract)")
+                    "(knn's contract)")
             if Q.shape != X.shape:
                 raise ValueError(
                     "exact re-rank: query/corpus dimension mismatch — "
@@ -1663,7 +1351,7 @@ def _batch_stage1_kernel(index: DataFrame, qp: DataFrame, m: int,
     probed cell, decode the cell's codes (codebook gather — the
     ``ivf_pq_encode`` kernel's pinned ``pq_decode`` parity; plus
     ``centroid[cell] +`` for a residual model, elementwise-identical to
-    ``knn_ivf_adc``'s ``zip_with`` decode), score every (query-in-cell
+    ``knn``'s ``zip_with`` decode), score every (query-in-cell
     x row-in-cell) pair, and emit each query's top-``m`` within the
     cell. Arrow ships
     the m-small-int codes through the cogroup shuffle, NOT the decoded
@@ -1792,7 +1480,7 @@ def knn_ivf_pq_index_batch(index: DataFrame, model: IVFPQModel,
     each task forwards at most m rows per query. (query_id,
     neighbor_id) pairs are unique by construction — each index row has
     ONE stored cell and the probe set is pairwise distinct — so no
-    dedup shuffle is needed (``knn_lsh``'s argument).
+    dedup shuffle is needed (``knn``'s argument).
 
     Same results as ``knn_ivf_pq_index`` for the same inputs, for
     either codec (test-pinned): the stored cell is consumed directly,
@@ -1924,7 +1612,7 @@ def ivf_pq_index_drift(index: DataFrame, model: IVFPQModel,
     no recall row at all, ``ann_recall``'s universe contract).
 
     Plan shape: truth = one broadcast-queries corpus scan
-    (``knn_bruteforce``); served = the pruned-probe serving path under
+    (the exhaustive ``knn``); served = the pruned-probe serving path under
     test; the comparison joins two |queries|·k-row frames and folds to
     a single row — run it on a SAMPLE, the ground truth is the linear
     cost (``ann_recall``'s standing rule). The query sample is pinned
@@ -1950,9 +1638,10 @@ def ivf_pq_index_drift(index: DataFrame, model: IVFPQModel,
     queries, pruned, pinned_rows = _pruned_probe_scan(
         index, queries, model.centroids, nprobe, vec_col, query_id_col,
         max_query_rows, with_rows=True)
-    served = (knn_ivf_adc(pruned, model, queries, k, nprobe=nprobe,
-                          m=m_res, vectors=vectors, id_col=id_col,
-                          vec_col=vec_col, query_id_col=query_id_col)
+    served = (knn(pruned, queries, k, codec=model,
+                  quantizer=StoredCells(model.centroids, nprobe=nprobe),
+                  m=m_res, vectors=vectors, id_col=id_col,
+                  vec_col=vec_col, query_id_col=query_id_col)
               .select("query_id", "neighbor_id",
                       F.lit(1).alias("__hit")))
     # the truth side keeps only queries the quantizer can KEY
@@ -1963,8 +1652,8 @@ def ivf_pq_index_drift(index: DataFrame, model: IVFPQModel,
     from .vectors import well_formed_pred
     servable = queries.filter(
         well_formed_pred(vec_col, len(model.centroids[0])))
-    truth = knn_bruteforce(vectors, servable, k, id_col=id_col,
-                           vec_col=vec_col, query_id_col=query_id_col)
+    truth = knn(vectors, servable, k, id_col=id_col, vec_col=vec_col,
+                query_id_col=query_id_col)
     # n_queries = COUNT(DISTINCT id) over the PINNED batch — the rows
     # are already on the driver (the serving-contract collect), so the
     # count is a Python fold over them instead of an extra aggregate

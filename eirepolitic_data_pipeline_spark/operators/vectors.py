@@ -13,12 +13,13 @@ plumbing a 100 TB embedding/ANN pipeline needs around its indexes.
   product quantization: m independent deterministic subspace codebooks
   (one fused kernel pass per Lloyd round for ALL subspaces), m-byte
   codes per vector, and reconstruction-by-concatenation, serving
-  through ``operators.similarity.knn_pq_adc``.
+  through ``operators.similarity.knn`` with the ``PQ`` codec.
 - ``ivf_pq_fit`` / ``ivf_pq_fit_residual`` / ``ivf_pq_encode`` — the
   IVF-PQ model (``IVFPQModel``: coarse centroids, subspace codebooks,
   and whether the codebooks quantize residuals) and its one encoded
   layout ``(vec_id, codes, cell)``, served by
-  ``operators.similarity.knn_ivf_adc`` and the persisted-index family.
+  ``operators.similarity.knn`` (the model as codec, ``StoredCells`` as
+  quantizer) and the persisted-index family.
 
 All are expressed over Catalyst array higher-order functions (zip_with /
 transform / aggregate) for their literal semantic twins, with Arrow
@@ -498,13 +499,14 @@ def pq_fit(df: DataFrame, m: int = 4, k: int = 16, iters: int = 1,
     seeds, fixed Lloyd rounds, ``round_dp``-rounded means) in each.
     Returns ``m`` codebooks, each ``k x (dim/m)`` plain Python floats —
     the model ``pq_encode``/``pq_codes`` compress with and
-    ``pq_decode``/``knn_pq_adc`` serve from.
+    ``pq_decode``/``knn``'s ``PQ`` codec serve from.
 
     This is the real PQ the int8 codec (``quantize_int8``) stands in
-    for in ``knn_ivf_pq``'s composition: int8 compresses each COORDINATE
-    to a byte (8x, reconstruction error bounded by the scalar grid),
-    while PQ compresses each SUBSPACE to a single code (dim/m doubles →
-    one small int, 64x+ at the default shapes) and reconstruction
+    for in the int8 IVF composition (``knn`` with ``Int8`` and
+    ``Centroids``): int8 compresses each COORDINATE to a byte (8x,
+    reconstruction error bounded by the scalar grid), while PQ
+    compresses each SUBSPACE to a single code (dim/m doubles → one
+    small int, 64x+ at the default shapes) and reconstruction
     quality comes from the TRAINED codebooks tracking the data's actual
     density. ``dim`` must divide evenly by ``m`` (PQ's standard
     contract) — raises ValueError otherwise.
@@ -548,7 +550,7 @@ class IVFPQModel:
     codebooks quantize ``x - centroids[cell(x)]`` (``ivf_pq_fit_residual``,
     FAISS's IVFPQ), flat ones quantize ``x`` itself (``ivf_pq_fit``).
     Every later step of the lifecycle takes this one value and reads the
-    codec from it: ``ivf_pq_encode``, ``knn_ivf_adc``,
+    codec from it: ``ivf_pq_encode``, ``knn`` (as its codec),
     ``write_ivf_pq_index`` / ``refresh_ivf_pq_index``,
     ``knn_ivf_pq_index`` / ``knn_ivf_pq_index_batch`` and
     ``ivf_pq_index_drift`` — so codes can only be served by the codec
@@ -1032,7 +1034,8 @@ def pq_decode(codes_col: Column | str,
     this reconstruction equals the sum of per-subspace folds — so
     cosine(query, decode(codes)) IS the asymmetric distance computation
     (ADC) of Jégou et al. 2011, just computed coordinate-wise instead
-    of via per-query lookup tables; ``knn_pq_adc`` relies on this.
+    of via per-query lookup tables; ``knn``'s ``PQ`` codec relies on
+    this.
 
     Accepts a Column or a column NAME: the str form parses the whole
     decode in ONE Py4J round trip (identical tree — the per-subspace
@@ -1633,8 +1636,8 @@ def rp_components(dim: int, out_dim: int, seed: str = "jl"
     eigendecomposition, the full projection chain is SQL-re-derivable
     and oracle-certified end to end (q98), which also certifies the
     shared ``pca_project`` kernel it runs through. Plug the output
-    straight into ``pca_project`` / ``pca_project_expr`` /
-    ``knn_pca_rerank`` with ``mean=[0.0]*dim``."""
+    straight into ``pca_project`` / ``pca_project_expr`` / ``knn``'s
+    ``Projection`` codec with ``mean=[0.0]*dim``."""
     import hashlib
     import math
 

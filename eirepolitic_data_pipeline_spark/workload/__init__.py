@@ -109,7 +109,7 @@ _CERT_PRIORITY = [
     "q92_knn_ivf_pq_batch",
     "q93_knn_ivf_rpq_batch",
     # (1b) in-memory ANN through the Arrow pair-scoring kernel
-    # (knn_bruteforce / knn_lsh / _compressed_topm scoring moved to
+    # (the exhaustive and bucketed knn stage-1 scoring moved to
     # mapInArrow, bit-parity pinned by tests/test_pair_kernel.py)
     "q26_knn_bruteforce",
     "q27_ann_bucketed",
@@ -214,7 +214,7 @@ _CERT_TAIL = [
     "q101_pca_correlation",
     # sql=None (rows-only pytest pins — a window slot yields only
     # "no_oracle"); q96's serving change is covered by the pytest
-    # parity pins and by q100 (same _compressed_topm path, WITH oracle)
+    # parity pins and by q100 (same Projection-codec knn, WITH oracle)
     "q95_pca_projection",
     "q96_knn_pca_rerank",
 ]

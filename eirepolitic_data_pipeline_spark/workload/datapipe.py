@@ -1633,23 +1633,24 @@ def q64_decontaminate_benchmark(spark, sf_dir):
     FROM cand
     QUALIFY rank <= 3
     """,
-    survey_ref="beyond-ref: multiprobe LSH kNN (operators/similarity.py:knn_lsh)",
+    survey_ref="beyond-ref: multiprobe LSH kNN (operators/similarity.py:knn with the SignLSH quantizer)",
 )
 def q65_knn_lsh_multiprobe(spark, sf_dir):
     """The RECALL path of the ANN operator under the oracle gate: top-3
-    neighbors per query via ``knn_lsh`` with 1-bit multiprobe — each query
-    probes its home sign-LSH bucket plus the 6 one-bit-flip buckets, so
-    near neighbors that land just across a hyperplane are still found
+    neighbors per query via ``knn`` with 1-bit multiprobe sign-LSH — each
+    query probes its home sign-LSH bucket plus the 6 one-bit-flip buckets,
+    so near neighbors that land just across a hyperplane are still found
     (q27's single-bucket form misses them by design). The probe set is
     pairwise distinct, so no dedup shuffle is needed (operator contract);
     candidates still arrive via bucket equi-join — never n². The oracle
     re-derives the probe expansion and ranks by the identical
     sequential-fold cosine (ranked on the RAW double on both engines —
     rounding is display-only)."""
-    from ..operators.similarity import knn_lsh
+    from ..operators.similarity import SignLSH, knn
     emb = _no_null_elements(spread(t(spark, sf_dir, "embeddings"), VEC_SLICE_BYTES))
     queries = emb.filter(F.col("vec_id") < 5)
-    out = knn_lsh(emb, queries, k=3, n_bits=6, multiprobe=True)
+    out = knn(emb, queries, k=3,
+              quantizer=SignLSH(n_bits=6, probe_flips=True))
     return out.select("query_id", "neighbor_id",
                       F.round("cosine", 6).alias("cosine"), "rank")
 
@@ -2521,14 +2522,15 @@ def q78_ann_recall(spark, sf_dir):
     the comparison join is |queries| x k rows — noise. At 100 TB this
     runs on a query SAMPLE; the brute-force side is the deliberate
     cost of measuring truth."""
-    from ..operators.similarity import ann_recall
+    from ..operators.similarity import SignLSH, ann_recall
     # the q27 vector contract: NULL/empty/short vectors are out of
     # contract for a 6-bit bucketed index and for brute-force ground
     # truth alike (a NULL query would score 0.0 against everything)
     emb = (_no_null_elements(spread(t(spark, sf_dir, "embeddings"), VEC_SLICE_BYTES))
            .filter(F.size("embedding") >= 6))
     queries = emb.filter(F.col("vec_id") < 20)
-    return ann_recall(emb, queries, k=5, n_bits=6, multiprobe=True)
+    return ann_recall(emb, queries, k=5,
+                      quantizer=SignLSH(n_bits=6, probe_flips=True))
 
 
 @register(
@@ -2675,7 +2677,7 @@ def q79_semdedup_clusters(spark, sf_dir):
       ON a.query_id = t.query_id AND a.neighbor_id = t.neighbor_id
     GROUP BY t.query_id
     """,
-    survey_ref="beyond-ref: ANN recall@k for the IVF-grid path (operators/similarity.py:ann_recall with the ivf_grid_cells bucketer swapped in)",
+    survey_ref="beyond-ref: ANN recall@k for the IVF-grid path (operators/similarity.py:ann_recall with the Grid quantizer swapped in)",
     memoize=False,  # ann_recall lazily localCheckpoints the bucketed
     # corpus (r8): a memoized plan would re-read those blocks on repeat
     # runs and time cached data instead of the index path
@@ -2683,20 +2685,17 @@ def q79_semdedup_clusters(spark, sf_dir):
 def q80_ann_recall_ivf(spark, sf_dir):
     """q78's recall telemetry pointed at the OTHER index family: the
     IVF-grid coarse quantizer (q27's ivf_grid path) instead of sign-LSH —
-    certifying that ann_recall's ``bucketer`` seam really is a swap-in
-    (the operator contract q78 alone can't show). Single-probe by
-    construction (an IVF probe set is cell-adjacency, not bit flips —
-    multiprobe=False), so this measures the one-cell recall floor an
+    certifying that ann_recall's ``quantizer`` really is a swap-in
+    (the operator contract q78 alone can't show). Single-probe (no
+    adjacency ring), so this measures the one-cell recall floor an
     nprobe parameter would buy back. Same plan shape as q78: linear
     broadcast ground truth, cell equi-join under test, |queries| x k
     comparison join."""
-    from ..operators.similarity import ann_recall, ivf_grid_cells
+    from ..operators.similarity import Grid, ann_recall
     emb = (_no_null_elements(spread(t(spark, sf_dir, "embeddings"), VEC_SLICE_BYTES))
            .filter(F.size("embedding") >= 2))
     queries = emb.filter(F.col("vec_id") < 20)
-    return ann_recall(emb, queries, k=5, multiprobe=False,
-                      bucketer=lambda c, n: ivf_grid_cells(c, grid=4,
-                                                           dims=2))
+    return ann_recall(emb, queries, k=5, quantizer=Grid())
 
 
 @register(
@@ -2750,30 +2749,26 @@ def q80_ann_recall_ivf(spark, sf_dir):
       ON a.query_id = t.query_id AND a.neighbor_id = t.neighbor_id
     GROUP BY t.query_id
     """,
-    survey_ref="beyond-ref: IVF nprobe recall (operators/similarity.py:ivf_probe_cells through knn_lsh's generic prober hook)",
+    survey_ref="beyond-ref: IVF nprobe recall (operators/similarity.py:ivf_probe_cells as the Grid quantizer's ring probes)",
     memoize=False,  # ann_recall lazily localCheckpoints the bucketed
     # corpus (r8): a memoized plan would re-read those blocks on repeat
     # runs and time cached data instead of the index path
 )
 def q81_ann_recall_ivf_nprobe(spark, sf_dir):
-    """q80's IVF recall with the nprobe dial turned: each query probes
-    its home cell PLUS the 3x3 adjacency ring (ivf_probe_cells through
-    knn_lsh's generic ``prober`` hook — the nprobe mechanism a real IVF
-    index serves with). Certifies the recall-vs-cost trade the telemetry
-    pair exists to inform: q80 is the 1-cell floor, this is the 9-cell
-    rung, and the per-query rows make the bought-back neighbors visible
-    (recall here must dominate q80's per query — asserted in tests). The
-    probe set stays pairwise distinct (distinct offsets -> distinct cell
-    strings), so the no-dedup join contract holds."""
-    from ..operators.similarity import (ann_recall, ivf_grid_cells,
-                                        ivf_probe_cells)
+    """q80's IVF recall with the nprobe dial turned: each query probes its
+    home cell PLUS the 3x3 adjacency ring (ivf_probe_cells as the
+    ``Grid(ring=True)`` quantizer's probes — the nprobe mechanism a real
+    IVF index serves with). Certifies the recall-vs-cost trade the
+    telemetry pair exists to inform: q80 is the 1-cell floor, this is the
+    9-cell rung, and the per-query rows make the bought-back neighbors
+    visible (recall here must dominate q80's per query — asserted in
+    tests). The probe set stays pairwise distinct (distinct offsets ->
+    distinct cell strings), so the no-dedup join contract holds."""
+    from ..operators.similarity import Grid, ann_recall
     emb = (_no_null_elements(spread(t(spark, sf_dir, "embeddings"), VEC_SLICE_BYTES))
            .filter(F.size("embedding") >= 2))
     queries = emb.filter(F.col("vec_id") < 20)
-    return ann_recall(emb, queries, k=5, multiprobe=False,
-                      bucketer=lambda c, n: ivf_grid_cells(c, grid=4,
-                                                           dims=2),
-                      prober=lambda b: ivf_probe_cells(b, dims=2))
+    return ann_recall(emb, queries, k=5, quantizer=Grid(ring=True))
 
 
 @register(
@@ -2846,7 +2841,7 @@ def q81_ann_recall_ivf_nprobe(spark, sf_dir):
       ON a.query_id = t.query_id AND a.neighbor_id = t.neighbor_id
     GROUP BY t.query_id
     """,
-    survey_ref="beyond-ref: trained-centroid IVF recall (operators/similarity.py:centroid_cells + centroid_probe_ranks over kmeans_fit's model, through ann_recall's bucketer/vector_prober seams)",
+    survey_ref="beyond-ref: trained-centroid IVF recall (operators/similarity.py:centroid_cells + centroid_probe_ranks over kmeans_fit's model, as ann_recall's Centroids quantizer)",
     memoize=False,  # kmeans_fit COLLECTS the centroid model at
     # construction (q73's rule) — memoizing the plan would cache the fit
 )
@@ -2854,11 +2849,10 @@ def q82_ann_recall_ivf_trained(spark, sf_dir):
     """The production IVF shape, closed (r7 verdict's #1 residual): the
     coarse quantizer is a TRAINED k-means codebook (``kmeans_fit``, k=8,
     one deterministic Lloyd round), home cell = nearest centroid
-    (``centroid_cells`` through ann_recall's ``bucketer`` seam), and
-    nprobe = the 3 nearest centroids BY QUERY DISTANCE
-    (``centroid_probe_ranks`` through the new ``vector_prober`` seam —
-    the probe ranking needs the query vector, which the fixed grid's
-    cell-adjacency prober never did). The fixed grid degrades in >2
+    (the ``Centroids`` quantizer's key), and nprobe = the 3 nearest
+    centroids BY QUERY DISTANCE (``centroid_probe_ranks`` — the probe
+    ranking needs the query vector, which the fixed grid's
+    cell-adjacency ring never did). The fixed grid degrades in >2
     effective dimensions because it quantizes only the leading
     coordinates; the trained codebook partitions the full 64-dim space,
     and the fixture shows it: mean recall ~0.73 here vs ~0.37 for q80's
@@ -2868,28 +2862,17 @@ def q82_ann_recall_ivf_trained(spark, sf_dir):
     home cells, the top-nprobe probe ranking off the same distance
     table, brute-force truth, and the recall join — so the certification
     covers fit + bucketing + probing + telemetry as one contract."""
-    from ..operators.similarity import (ann_recall, centroid_cells,
-                                        centroid_cells_frame,
-                                        centroid_probe_ranks)
+    from ..operators.similarity import Centroids, ann_recall
     from ..operators.vectors import kmeans_fit
     emb = (_no_null_elements(spread(t(spark, sf_dir, "embeddings"), KERNEL_SLICE_BYTES))
            .filter(F.col("embedding").isNotNull()
                    & (F.size("embedding") > 0)))
     cents = kmeans_fit(emb, k=8, iters=1)
     queries = emb.filter(F.col("vec_id") < 20)
-    # corpus side buckets through the Arrow assignment kernel (r9 —
-    # frame_bucketer seam): same cells as the literal centroid_cells
-    # expression (kernel parity pin), minus one corpus-wide evaluation
-    # of the k x dim-literal interpreted argmin — the dominant term of
-    # this query's fixed overhead at k=8 x 64 dims. The query side (20
-    # rows) keeps the literal expression.
-    return ann_recall(emb, queries, k=5, multiprobe=False,
-                      bucketer=lambda c, n: centroid_cells(c, cents),
-                      frame_bucketer=lambda df, i, v, out:
-                          centroid_cells_frame(df, cents, id_col=i,
-                                               vec_col=v, cell_col=out),
-                      vector_prober=lambda qv: centroid_probe_ranks(
-                          qv, cents, nprobe=3))
+    # the corpus side keys through the Arrow assignment kernel, the
+    # 20-row query side through the parity-pinned literal expression
+    return ann_recall(emb, queries, k=5,
+                      quantizer=Centroids(cents, nprobe=3))
 
 
 @register(
@@ -2956,7 +2939,7 @@ def q82_ann_recall_ivf_trained(spark, sf_dir):
     FROM ex
     QUALIFY rank <= 5
     """,
-    survey_ref="beyond-ref: quantized-candidate kNN with exact re-rank (operators/similarity.py:knn_quantized_rerank over quantize_int8's codec) — the IVF-PQ serving pattern",
+    survey_ref="beyond-ref: quantized-candidate kNN with exact re-rank (operators/similarity.py:knn with quantize_int8's Int8 codec) — the IVF-PQ serving pattern",
 )
 def q83_knn_quantized_rerank(spark, sf_dir):
     """Compressed-corpus serving kNN (the IVF-PQ pattern, composed from
@@ -2970,14 +2953,14 @@ def q83_knn_quantized_rerank(spark, sf_dir):
     verbatim, 9-dp emitted scale), the dequantized stage-1 ranking, and
     the exact stage-2 re-rank — certifying that the compressed index and
     the full-precision truth agree on every emitted (neighbor, rank)."""
-    from ..operators.similarity import knn_quantized_rerank
+    from ..operators.similarity import Int8, knn
     from ..operators.vectors import quantize_int8
     emb = (_no_null_elements(spread(t(spark, sf_dir, "embeddings"), VEC_SLICE_BYTES))
            .filter(F.col("embedding").isNotNull()
                    & (F.size("embedding") > 0)))
     quantized = quantize_int8(emb).select("vec_id", "scale", "qvec")
     queries = emb.filter(F.col("vec_id") < 20)
-    out = knn_quantized_rerank(quantized, queries, k=5, m=10, vectors=emb)
+    out = knn(quantized, queries, k=5, codec=Int8(), m=10, vectors=emb)
     return out.select("query_id", "neighbor_id",
                       F.round("cosine", 6).alias("cosine"), "rank")
 
@@ -3111,13 +3094,13 @@ def _ivf_pq_oracle_sql() -> str:
 @register(
     "q84_knn_ivf_pq",
     _ivf_pq_oracle_sql(),
-    survey_ref="beyond-ref: composed IVF-PQ serving (operators/similarity.py:knn_ivf_pq — trained cells via the Arrow assignment kernel, nprobe probe ranking, compressed-candidate scoring, broadcast exact re-rank)",
+    survey_ref="beyond-ref: composed IVF-PQ serving (operators/similarity.py:knn with the Int8 codec and Centroids quantizer — trained cells via the Arrow assignment kernel, nprobe probe ranking, compressed-candidate scoring, broadcast exact re-rank)",
     memoize=False,  # kmeans_fit COLLECTS the centroid model at
     # construction (q73's rule) — memoizing the plan would cache the fit
 )
 def q84_knn_ivf_pq(spark, sf_dir):
     """THE serving query a 100 TB ANN user runs (r8 verdict's #1 ask):
-    the composed ``knn_ivf_pq`` — trained coarse quantizer
+    ``knn`` composed from the int8 codec and a trained coarse quantizer
     (``kmeans_fit`` k=8, one Lloyd round), corpus index cells computed
     over the DEQUANTIZED int8 codec by the Arrow assignment kernel
     (map-only — the literal ``centroid_cells`` fold measured ~100 s at
@@ -3132,7 +3115,7 @@ def q84_knn_ivf_pq(spark, sf_dir):
     whose work tracks probed-cell population, the pruned ids+cosine top-m
     window, and a broadcast-candidate exact fetch touching full precision
     for only |queries| x m rows."""
-    from ..operators.similarity import knn_ivf_pq
+    from ..operators.similarity import Centroids, Int8, knn
     from ..operators.vectors import kmeans_fit, quantize_int8
     emb = (_no_null_elements(spread(t(spark, sf_dir, "embeddings"), KERNEL_SLICE_BYTES))
            .filter(F.col("embedding").isNotNull()
@@ -3140,8 +3123,8 @@ def q84_knn_ivf_pq(spark, sf_dir):
     cents = kmeans_fit(emb, k=8, iters=1)
     quantized = quantize_int8(emb).select("vec_id", "scale", "qvec")
     queries = emb.filter(F.col("vec_id") < 20)
-    out = knn_ivf_pq(quantized, queries, k=5, m=10, centroids=cents,
-                     nprobe=3, vectors=emb)
+    out = knn(quantized, queries, k=5, codec=Int8(),
+              quantizer=Centroids(cents, nprobe=3), m=10, vectors=emb)
     return out.select("query_id", "neighbor_id",
                       F.round("cosine", 6).alias("cosine"), "rank")
 
@@ -3243,7 +3226,7 @@ def _pq_adc_oracle_sql(m_sub: int = 4, kc: int = 8) -> str:
 @register(
     "q85_knn_pq_adc",
     _pq_adc_oracle_sql(),
-    survey_ref="beyond-ref: product-quantization codec + ADC serving (operators/vectors.py:pq_fit/pq_encode/pq_decode; operators/similarity.py:knn_pq_adc) — the real PQ half of IVF-PQ",
+    survey_ref="beyond-ref: product-quantization codec + ADC serving (operators/vectors.py:pq_fit/pq_encode/pq_decode; operators/similarity.py:knn with the PQ codec) — the real PQ half of IVF-PQ",
     memoize=False,  # pq_fit COLLECTS the m codebooks at construction
     # (q73's rule) — memoizing the plan would cache the fit
 )
@@ -3255,14 +3238,14 @@ def q85_knn_pq_adc(spark, sf_dir):
     (k=8 codewords each, one Lloyd round, all seeded from ONE corpus
     TakeOrdered), ``pq_encode`` compresses the corpus to 4 small ints
     per vector via the Arrow kernel (map-only; 64 doubles -> 4 codes, a
-    ~64x narrower serving scan vs int8's 8x), and ``knn_pq_adc`` serves
+    ~64x narrower serving scan vs int8's 8x), and ``knn`` serves
     top-k=5 by scoring the ``pq_decode`` reconstructions against the
     raw queries (asymmetric distance computation) with q83's top-m=10 /
     exact-re-rank stages. The oracle re-derives every step — 4 unrolled
     subspace fits, encode-as-assignment, decode-as-concatenation, both
     serving stages — so fit, codec, and serving certify as ONE
     contract."""
-    from ..operators.similarity import knn_pq_adc
+    from ..operators.similarity import PQ, knn
     from ..operators.vectors import pq_encode, pq_fit
     emb = (_no_null_elements(spread(t(spark, sf_dir, "embeddings"), KERNEL_SLICE_BYTES))
            .filter(F.col("embedding").isNotNull()
@@ -3270,7 +3253,7 @@ def q85_knn_pq_adc(spark, sf_dir):
     books = pq_fit(emb, m=4, k=8, iters=1)
     codes = pq_encode(emb, books)
     queries = emb.filter(F.col("vec_id") < 20)
-    out = knn_pq_adc(codes, books, queries, k=5, m=10, vectors=emb)
+    out = knn(codes, queries, k=5, codec=PQ(books), m=10, vectors=emb)
     return out.select("query_id", "neighbor_id",
                       F.round("cosine", 6).alias("cosine"), "rank")
 
@@ -3398,7 +3381,7 @@ def _ivf_adc_chain_sql(m_sub: int = 4, kc: int = 8,
 @register(
     "q86_knn_ivf_adc",
     _ivf_adc_oracle_sql(),
-    survey_ref="beyond-ref: FAISS-shape IVFPQ, fully literal (operators/similarity.py:knn_ivf_adc — trained coarse cells keyed on pq_decode reconstructions by ivf_pq_encode, nprobe probing, ADC scoring, exact re-rank)",
+    survey_ref="beyond-ref: FAISS-shape IVFPQ, fully literal (operators/similarity.py:knn with the IVFPQModel codec and StoredCells quantizer — trained coarse cells keyed on pq_decode reconstructions by ivf_pq_encode, nprobe probing, ADC scoring, exact re-rank)",
     memoize=False,  # kmeans_fit + pq_fit COLLECT their models at
     # construction (q73's rule) — memoizing the plan would cache the fits
 )
@@ -3406,7 +3389,7 @@ def q86_knn_ivf_adc(spark, sf_dir):
     """The name 'IVF-PQ' made fully literal (r9): trained coarse
     quantizer (k=8) + REAL product quantization (m=4 subspace
     codebooks) + ADC scoring + exact re-rank, as ONE oracle-certified
-    chain (``ivf_pq_fit`` → ``ivf_pq_encode`` → ``knn_ivf_adc``). q84
+    chain (``ivf_pq_fit`` → ``ivf_pq_encode`` → ``knn``). q84
     certified the composition with the int8 stand-in codec; q85
     certified the PQ codec + exhaustive ADC; this row certifies their
     union — index cells argmin'd over the PQ reconstructions by the
@@ -3415,7 +3398,7 @@ def q86_knn_ivf_adc(spark, sf_dir):
     scan a 1000-executor cluster runs here reads m=4 small ints and a
     cell per corpus row plus the bounded broadcast model — the
     narrowest serving path in the family."""
-    from ..operators.similarity import knn_ivf_adc
+    from ..operators.similarity import StoredCells, knn
     from ..operators.vectors import ivf_pq_encode, ivf_pq_fit
     emb = (_no_null_elements(spread(t(spark, sf_dir, "embeddings"), KERNEL_SLICE_BYTES))
            .filter(F.col("embedding").isNotNull()
@@ -3426,8 +3409,9 @@ def q86_knn_ivf_adc(spark, sf_dir):
     model = ivf_pq_fit(emb, k_coarse=8, m=4, k_sub=8, iters=1)
     codes = ivf_pq_encode(emb, model)
     queries = emb.filter(F.col("vec_id") < 20)
-    out = knn_ivf_adc(codes, model, queries, k=5, m=10, nprobe=3,
-                      vectors=emb)
+    out = knn(codes, queries, k=5, codec=model,
+              quantizer=StoredCells(model.centroids, nprobe=3), m=10,
+              vectors=emb)
     return out.select("query_id", "neighbor_id",
                       F.round("cosine", 6).alias("cosine"), "rank")
 
@@ -3747,7 +3731,7 @@ def _ivf_rpq_chain_sql(m_sub: int = 4, kc: int = 8,
 @register(
     "q89_knn_ivf_rpq",
     _ivf_rpq_oracle_sql(),
-    survey_ref="beyond-ref: residual-encoding IVFPQ, the actual FAISS recipe (operators/vectors.py:ivf_pq_fit_residual/ivf_pq_encode; operators/similarity.py:knn_ivf_adc over a residual model — codebooks trained on residuals, cell part of the encoding, reconstruction = centroid + decoded residual)",
+    survey_ref="beyond-ref: residual-encoding IVFPQ, the actual FAISS recipe (operators/vectors.py:ivf_pq_fit_residual/ivf_pq_encode; operators/similarity.py:knn with a residual IVFPQModel codec — codebooks trained on residuals, cell part of the encoding, reconstruction = centroid + decoded residual)",
     memoize=False,  # the fits COLLECT their models and the encode is
     # the serving input — memoizing would cache the whole training
 )
@@ -3760,11 +3744,11 @@ def q89_knn_ivf_rpq(spark, sf_dir):
     ``(vec_id, codes, cell)`` (``ivf_pq_encode`` — the cell is PART of
     the encoding), and serving that reconstructs ``centroid[cell] +
     decode(codes)`` before the family's shared probe/ADC/re-rank
-    stages (``knn_ivf_adc`` over the residual model). Same stored bytes as q86,
-    strictly lower reconstruction error (test-pinned corpus-wide on
-    the fixture) — the oracle re-derives the full chain including the
+    stages (``knn`` with the residual model as codec). Same stored bytes
+    as q86, strictly lower reconstruction error (test-pinned corpus-wide
+    on the fixture) — the oracle re-derives the full chain including the
     residual codec via ``_pq_codec_sql``'s ``src`` seam."""
-    from ..operators.similarity import knn_ivf_adc
+    from ..operators.similarity import StoredCells, knn
     from ..operators.vectors import ivf_pq_encode, ivf_pq_fit_residual
     emb = (_no_null_elements(spread(t(spark, sf_dir, "embeddings"), KERNEL_SLICE_BYTES))
            .filter(F.col("embedding").isNotNull()
@@ -3772,8 +3756,9 @@ def q89_knn_ivf_rpq(spark, sf_dir):
     model = ivf_pq_fit_residual(emb, k_coarse=8, m=4, k_sub=8, iters=1)
     codes = ivf_pq_encode(emb, model)
     queries = emb.filter(F.col("vec_id") < 20)
-    out = knn_ivf_adc(codes, model, queries, k=5, m=10, nprobe=3,
-                      vectors=emb)
+    out = knn(codes, queries, k=5, codec=model,
+              quantizer=StoredCells(model.centroids, nprobe=3), m=10,
+              vectors=emb)
     return out.select("query_id", "neighbor_id",
                       F.round("cosine", 6).alias("cosine"), "rank")
 
@@ -4027,9 +4012,9 @@ def q95_pca_projection(spark, sf_dir):
     None,  # the stage-1 model is pca_fit's eigendecomposition — not
     # SQL-re-derivable (q95's note); the EXACTNESS contract is pinned
     # instead: m >= |corpus| makes the output bit-identical to
-    # knn_bruteforce (tests/test_pca.py:test_knn_pca_rerank_exact_at_
+    # the exhaustive knn (tests/test_pca.py:test_knn_pca_rerank_exact_at_
     # full_m), and the default-m recall floor is pinned at 0.85
-    survey_ref="beyond-ref: reduce-then-index serving (operators/similarity.py:knn_pca_rerank — PCA-reduced stage-1 candidate scan at k'/dim of the fold cost, broadcast-candidate exact full-dim re-rank); third member of the two-stage family after int8 and IVF-PQ stage 1s",
+    survey_ref="beyond-ref: reduce-then-index serving (operators/similarity.py:knn with the Projection codec — PCA-reduced stage-1 candidate scan at k'/dim of the fold cost, broadcast-candidate exact full-dim re-rank); third member of the two-stage family after int8 and IVF-PQ stage 1s",
     memoize=False,  # the fit COLLECTS its model at construction
 )
 def q96_knn_pca_rerank(spark, sf_dir):
@@ -4044,15 +4029,15 @@ def q96_knn_pca_rerank(spark, sf_dir):
     candidate instead of dim — the same narrow-scan argument as the
     int8 stage 1, with dimensionality instead of bit-depth as the
     compression axis."""
-    from ..operators.similarity import knn_pca_rerank
+    from ..operators.similarity import Projection, knn
     from ..operators.vectors import pca_fit
     emb = (_no_null_elements(spread(t(spark, sf_dir, "embeddings"), KERNEL_SLICE_BYTES))
            .filter(F.col("embedding").isNotNull()
                    & (F.size("embedding") > 0)))
     mean, comps, _ = pca_fit(emb, k=32)
     queries = emb.filter(F.col("vec_id") < 20)
-    out = knn_pca_rerank(emb, queries, k=5, mean=mean,
-                         components=comps)
+    out = knn(emb, queries, k=5, codec=Projection(mean, comps),
+              vectors=emb)
     return out.select("query_id", "neighbor_id",
                       F.round("cosine", 6).alias("cosine"), "rank")
 
@@ -4294,12 +4279,12 @@ def _rp_rerank_oracle_sql(dim: int = 64, out_dim: int = 8,
 @register(
     "q100_knn_rp_rerank",
     _rp_rerank_oracle_sql(),
-    survey_ref="beyond-ref: JL-reduced two-stage serving kNN (operators/similarity.py:knn_pca_rerank with the static rp_components model) — the two-stage machinery value-hash certified end to end, which the PCA-model path (q96) structurally cannot be",
+    survey_ref="beyond-ref: JL-reduced two-stage serving kNN (operators/similarity.py:knn with a Projection codec over the static rp_components model) — the two-stage machinery value-hash certified end to end, which the PCA-model path (q96) structurally cannot be",
     memoize=True,
 )
 def q100_knn_rp_rerank(spark, sf_dir):
     """q96's two-stage serving path with q98's STATIC model (r11): the
-    same knn_pca_rerank machinery — map-only corpus projection,
+    same ``knn`` Projection-codec machinery — map-only corpus projection,
     Catalyst-twin query projection, reduced-space top-m=10, exact
     full-dim re-rank to k=5 — but the JL sign model is a pure function
     of (dim, out_dim, seed), so the ENTIRE chain is re-derived by the
@@ -4312,15 +4297,15 @@ def q100_knn_rp_rerank(spark, sf_dir):
     scan → kernel → window — the serving shape with zero training
     cost, which is exactly when JL beats PCA at 100 TB (projecting
     from row one of a brand-new corpus)."""
-    from ..operators.similarity import knn_pca_rerank
+    from ..operators.similarity import Projection, knn
     from ..operators.vectors import rp_components
     emb = (_no_null_elements(spread(t(spark, sf_dir, "embeddings"), KERNEL_SLICE_BYTES))
            .filter(F.col("embedding").isNotNull()
                    & (F.size("embedding") > 0)))
     W = rp_components(64, 8)
     queries = emb.filter(F.col("vec_id") < 20)
-    out = knn_pca_rerank(emb, queries, k=5, mean=[0.0] * 64,
-                         components=W, m=10)
+    out = knn(emb, queries, k=5, codec=Projection([0.0] * 64, W), m=10,
+              vectors=emb)
     return out.select("query_id", "neighbor_id",
                       F.round("cosine", 6).alias("cosine"), "rank")
 

@@ -19,7 +19,9 @@ from .registry import register, t
     """
     WITH rev AS (
       SELECT CAST(year(l_shipdate) AS INTEGER) AS ship_year, l_suppkey,
-             round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+             CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,4))
+                            * (1 - CAST(l_discount AS DECIMAL(18,4)))), 2)
+                  AS DOUBLE) AS revenue
       FROM lineitem GROUP BY 1, 2
     )
     SELECT ship_year, l_suppkey, revenue,
@@ -31,12 +33,20 @@ from .registry import register, t
 )
 def q13_dense_rank_suppliers(spark, sf_dir):
     """W1 dense-rank-per-partition (reference per-year activity ranks).
-    Rank over the ROUNDED revenue so engine float drift can't flip ranks."""
+    Rank over the ROUNDED revenue so engine float drift can't flip ranks.
+
+    Money sums exactly: price and discount enter as DECIMAL(18,4), which
+    holds every stored price (1.005 included) without a half-cent split,
+    the sum and its half-up round to cents are decimal, and only the
+    rounded revenue is cast to DOUBLE — summing doubles and rounding
+    them lets each engine resolve a half-cent boundary its own way."""
     li = t(spark, sf_dir, "lineitem")
+    money = (F.col("l_extendedprice").cast("decimal(18,4)")
+             * (1 - F.col("l_discount").cast("decimal(18,4)")))
     rev = (
         li.withColumn("ship_year", F.year("l_shipdate").cast("int"))
         .groupBy("ship_year", "l_suppkey")
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
+        .agg(F.round(F.sum(money), 2).cast("double").alias("revenue"))
     )
     w = Window.partitionBy("ship_year").orderBy(F.col("revenue").desc(), F.col("l_suppkey"))
     return rev.withColumn("supplier_rank", F.dense_rank().over(w).cast("int"))

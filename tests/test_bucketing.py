@@ -231,8 +231,9 @@ def test_bucketed_fact_merge_plans_no_history_exchange(spark, tmp_path,
 
     # second refresh cycle through the writer: same contents as the
     # window-over-union merge of the same inputs
-    got = writer.write(delta, "fact", policy, batch_id="b2",
-                       bucket_by=("pk",), num_buckets=8)
+    writer.write(delta, "fact", policy, batch_id="b2",
+                 bucket_by=("pk",), num_buckets=8)
+    got = catalog.read_table(spark, "fact", batch_id="b2")
     want = merge_for_policy(hist, delta, policy)
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0

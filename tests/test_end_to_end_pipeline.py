@@ -98,9 +98,10 @@ def test_full_pipeline_lifecycle(spark, tmp_path):
     memberships2 = silver_member_memberships(raw_m2, snapshot_date=SNAP,
                                              today=TODAY)
     tdef = registry.tables["silver_member_memberships"]
-    merged = writer.write(tdef.conform(memberships2),
-                          "silver_member_memberships", tdef.policy,
-                          batch_id="b2")
+    writer.write(tdef.conform(memberships2), "silver_member_memberships",
+                 tdef.policy, batch_id="b2")
+    merged = catalog.read_table(spark, "silver_member_memberships",
+                                batch_id="b2")
     # Same membership_id (URI) updated in place: still 2 rows, TD002 closed.
     got = {r["membership_id"]: r for r in merged.collect()}
     assert len(got) == 2

@@ -38,7 +38,7 @@ def _rows(spark, catalog, table, batch_id):
 
 def _write_epoch(spark, catalog, rows, table="t", batch_id="b1"):
     df = spark.createDataFrame(rows, "id int, v string")
-    return MergeWriter(catalog=catalog, spark=spark).write(
+    MergeWriter(catalog=catalog, spark=spark).write(
         df, table, POLICY, batch_id=batch_id, accumulate=True)
 
 

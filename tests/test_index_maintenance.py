@@ -2,7 +2,8 @@
 
 - one lifecycle over an ``IVFPQModel`` (fit → encode → write → refresh
   → online serve → batch serve → drift) serves the same rows as the
-  in-memory ``knn_ivf_adc`` for either codec, flat or residual;
+  in-memory ``knn`` with the model codec for either codec, flat or
+  residual;
 - ``refresh_ivf_pq_index`` appends an encoded delta into existing cell
   partitions and is byte-equivalent to rebuilding over base ∪ delta
   with the same frozen model (encode + cell assignment are row-wise
@@ -66,14 +67,14 @@ def test_ivf_pq_lifecycle_round_trip(spark, tmp_path, fit):
     codec: fit → encode → write → refresh → knn_ivf_pq_index →
     knn_ivf_pq_index_batch → drift. The refreshed index holds exactly
     the encode kernel's rows (append == full rebuild with the frozen
-    model), both serves return the in-memory knn_ivf_adc rows on the
+    model), both serves return the in-memory knn rows on the
     same model, the online scan carries the probe union as a PARTITION
     filter, and the drift report's recall is the recall of those served
     rows against brute force."""
     import re
 
     from eirepolitic_data_pipeline_spark.operators.similarity import (
-        ivf_pq_index_drift, knn_bruteforce, knn_ivf_adc, knn_ivf_pq_index,
+        StoredCells, ivf_pq_index_drift, knn, knn_ivf_pq_index,
         knn_ivf_pq_index_batch, refresh_ivf_pq_index, write_ivf_pq_index)
     from eirepolitic_data_pipeline_spark.operators.vectors import (
         ivf_pq_encode)
@@ -104,7 +105,9 @@ def test_ivf_pq_lifecycle_round_trip(spark, tmp_path, fit):
 
     queries = emb.filter(F.col("vec_id") < 5)
     kw = dict(k=5, m=10, nprobe=2, vectors=emb)
-    inmem = _ranked(knn_ivf_adc(codes, model, queries, **kw))
+    inmem = _ranked(knn(codes, queries, codec=model,
+                        quantizer=StoredCells(model.centroids, nprobe=2),
+                        k=5, m=10, vectors=emb))
     online = knn_ivf_pq_index(index, model, queries, **kw)
     assert _ranked(online) == inmem and len(inmem) > 0
     # the scan carries the probe set as a PARTITION filter
@@ -119,8 +122,7 @@ def test_ivf_pq_lifecycle_round_trip(spark, tmp_path, fit):
     assert r["n_queries"] == r["n_servable"] == 5
     assert 0.0 <= r["min_recall"] <= r["mean_recall"] <= 1.0
     assert r["refit_recommended"] == (r["mean_recall"] < 1.0)
-    truth = {(q, n) for q, n, _, _ in _ranked(knn_bruteforce(emb, queries,
-                                                             5))}
+    truth = {(q, n) for q, n, _, _ in _ranked(knn(emb, queries, 5))}
     served = {(q, n) for q, n, _, _ in inmem}
     per_q = [len({p for p in truth & served if p[0] == q})
              / len({p for p in truth if p[0] == q})
@@ -177,7 +179,7 @@ def test_refresh_appends_equivalently_to_full_rebuild(spark, models,
 
 def test_serving_after_refresh_matches_inmemory(spark, models, tmp_path):
     from eirepolitic_data_pipeline_spark.operators.similarity import (
-        knn_ivf_adc, knn_ivf_pq_index, refresh_ivf_pq_index,
+        StoredCells, knn, knn_ivf_pq_index, refresh_ivf_pq_index,
         write_ivf_pq_index)
     from eirepolitic_data_pipeline_spark.operators.vectors import (
         ivf_pq_encode)
@@ -193,8 +195,9 @@ def test_serving_after_refresh_matches_inmemory(spark, models, tmp_path):
                                   queries, **kw).collect())
     inmem = sorted(
         (r["query_id"], r["neighbor_id"], r["rank"])
-        for r in knn_ivf_adc(ivf_pq_encode(emb, model), model, queries,
-                             **kw).collect())
+        for r in knn(ivf_pq_encode(emb, model), queries, codec=model,
+                     quantizer=StoredCells(model.centroids, nprobe=2),
+                     k=5, m=10, vectors=emb).collect())
     assert served == inmem and len(served) > 0
 
 

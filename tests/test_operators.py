@@ -13,8 +13,8 @@ from eirepolitic_data_pipeline_spark.operators import (
     exact_duplicate_groups,
     interval_overlap_counts,
     jaccard_similar_pairs,
-    knn_bruteforce,
-    knn_lsh,
+    SignLSH,
+    knn,
     minhash_lsh_candidates,
     simhash_near_pairs,
     temporal_integrity_report,
@@ -228,9 +228,9 @@ def test_knn_bruteforce_and_lsh_agree_on_obvious_neighbor(spark):
          (4, [0.0, 1.0, 0.0, 0.0])],
         "vec_id long, embedding array<float>")
     q = vecs.filter(F.col("vec_id") == 1)
-    bf = knn_bruteforce(vecs, q, k=1)
+    bf = knn(vecs, q, k=1)
     assert [(r["query_id"], r["neighbor_id"]) for r in bf.collect()] == [(1, 2)]
-    approx = knn_lsh(vecs, q, k=1, n_bits=4)
+    approx = knn(vecs, q, k=1, quantizer=SignLSH(n_bits=4))
     assert [(r["query_id"], r["neighbor_id"]) for r in approx.collect()] == [(1, 2)]
 
 
@@ -743,7 +743,7 @@ def test_cosine_zero_vector_scores_zero_not_nan(spark):
         [(1, [1.0, 0.0]), (2, [0.9, 0.1]), (3, [0.0, 0.0])],
         "vec_id long, embedding array<double>")
     q = vecs.filter(F.col("vec_id") == 1)
-    out = knn_bruteforce(vecs, q, k=2).collect()
+    out = knn(vecs, q, k=2).collect()
     assert [r["neighbor_id"] for r in out] == [2, 3]
     by_id = {r["neighbor_id"]: r["cosine"] for r in out}
     assert by_id[3] == 0.0
@@ -812,42 +812,18 @@ def test_exact_canonical_ids_matches_window_report(spark):
     assert lean == {1, 3, 5}
 
 
-def test_knn_pandas_zero_norm_guard(spark):
-    """The numpy kNN variant must honor cosine_col's zero-norm contract: a
-    zero vector scores 0.0 against everything — a NaN cosine would sort
-    ABOVE every real number in the descending top-k window and make the
-    zero vector the top neighbor of every query."""
-    import math
-
-    import pandas as pd
-
-    from eirepolitic_data_pipeline_spark.operators.similarity import (
-        knn_bruteforce_pandas)
-    vecs = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [0.9, 0.1]), (3, [0.0, 0.0])],
-        "vec_id long, embedding array<double>")
-    queries = pd.DataFrame({"vec_id": [1], "embedding": [[1.0, 0.0]]})
-    rows = knn_bruteforce_pandas(vecs, queries, k=2).collect()
-    by_rank = {r["rank"]: r for r in rows}
-    assert by_rank[1]["neighbor_id"] == 2          # real neighbor first
-    assert by_rank[2]["neighbor_id"] == 3
-    assert by_rank[2]["cosine"] == 0.0             # zero vector scores 0
-    assert not any(math.isnan(r["cosine"]) for r in rows)
-
-
 def test_knn_lsh_hot_bucket_cap(spark):
-    """knn_lsh's opt-in max_bucket guard drops a degenerate bucket's
+    """The quantizer's opt-in max_bucket guard drops a degenerate bucket's
     candidates (conservative recall loss) instead of funneling the whole
     bucket into one join task; default (None) keeps full recall."""
-    from eirepolitic_data_pipeline_spark.operators.similarity import knn_lsh
     # 50 vectors in one degenerate bucket (same signs) + 2 in another
     rows = ([(i, [1.0, float(i)]) for i in range(50)]
             + [(100, [-1.0, 5.0]), (101, [-1.0, 4.9])])
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     q = df.filter("vec_id in (0, 100)")
-    full = knn_lsh(df, q, k=3, n_bits=2)
+    full = knn(df, q, k=3, quantizer=SignLSH(n_bits=2))
     assert full.filter("query_id = 0").count() == 3
-    capped = knn_lsh(df, q, k=3, n_bits=2, max_bucket=10)
+    capped = knn(df, q, k=3, quantizer=SignLSH(n_bits=2, max_bucket=10))
     # the 50-vector bucket is skipped; the small bucket still answers
     assert capped.filter("query_id = 0").count() == 0
     assert capped.filter("query_id = 100").count() == 1

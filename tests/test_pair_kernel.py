@@ -12,7 +12,7 @@ import math
 from pyspark.sql import functions as F
 
 from eirepolitic_data_pipeline_spark.operators.similarity import (
-    _scored_pairs_kernel, cosine_col, knn_bruteforce, knn_lsh)
+    SignLSH, _scored_pairs_kernel, cosine_col, knn)
 
 
 def _pairs_frame(spark):
@@ -59,7 +59,7 @@ def test_kernel_matches_expression_bitwise(spark):
 
 
 def test_knn_bruteforce_kernel_results_pinned(spark):
-    """End-to-end: the kernel-scored knn_bruteforce over a clean corpus
+    """End-to-end: the kernel-scored exhaustive knn over a clean corpus
     must reproduce the expression recipe's exact top-k (values computed
     independently here with the same sequential fold)."""
     rows = [(i, [float((i * 7 + d * 3) % 11) - 5.0 for d in range(8)])
@@ -67,7 +67,7 @@ def test_knn_bruteforce_kernel_results_pinned(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     queries = df.filter(F.col("vec_id") < 3)
     got = {(r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine"])
-           for r in knn_bruteforce(df, queries, k=4).collect()}
+           for r in knn(df, queries, k=4).collect()}
 
     def cos(a, b):
         dot = na = nb = 0.0
@@ -99,7 +99,7 @@ def test_knn_lsh_kernel_handles_malformed_bucketed_rows(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     out = {(r["query_id"], r["neighbor_id"]): r["cosine"]
-           for r in knn_lsh(df, df, k=3, n_bits=3).collect()}
+           for r in knn(df, df, k=3, quantizer=SignLSH(n_bits=3)).collect()}
     assert out[(1, 2)] == 0.0
     assert out[(3, 2)] == 0.0
     assert out[(1, 3)] > 0.99

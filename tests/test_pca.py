@@ -194,18 +194,18 @@ def test_covariance_contract_failures(spark):
 def test_knn_pca_rerank_exact_at_full_m(spark):
     """m >= |corpus|-1 keeps every row in stage 1, so the reduced-space
     proxy ranking is irrelevant and the output must be EXACTLY
-    knn_bruteforce — same rows, same cosines, same ranks."""
+    the exhaustive knn — same rows, same cosines, same ranks."""
     from eirepolitic_data_pipeline_spark.operators.similarity import (
-        knn_bruteforce, knn_pca_rerank)
+        Projection, knn)
     from eirepolitic_data_pipeline_spark.operators.vectors import pca_fit
     emb = _emb(spark)
     queries = emb.orderBy("vec_id").limit(5)
     mean, comps, _ = pca_fit(emb, k=4)
     n = emb.count()
-    got = sorted(tuple(r) for r in knn_pca_rerank(
-        emb, queries, k=3, mean=mean, components=comps, m=n).collect())
-    want = sorted(tuple(r) for r in knn_bruteforce(
-        emb, queries, k=3).collect())
+    got = sorted(tuple(r) for r in knn(
+        emb, queries, k=3, codec=Projection(mean, comps), m=n,
+        vectors=emb).collect())
+    want = sorted(tuple(r) for r in knn(emb, queries, k=3).collect())
     assert got == want and len(got) == 15
 
 
@@ -217,14 +217,15 @@ def test_knn_pca_rerank_recall_at_default_m(spark):
     the same m — the m-vs-k' recall trade is real and data-dependent,
     which is exactly why ann_recall telemetry exists."""
     from eirepolitic_data_pipeline_spark.operators.similarity import (
-        knn_bruteforce, knn_pca_rerank)
+        Projection, knn)
     from eirepolitic_data_pipeline_spark.operators.vectors import pca_fit
     emb = _emb(spark)
     queries = emb.orderBy("vec_id").limit(10)
     mean, comps, _ = pca_fit(emb, k=32)
-    got = {(r["query_id"], r["neighbor_id"]) for r in knn_pca_rerank(
-        emb, queries, k=5, mean=mean, components=comps).collect()}
-    truth = {(r["query_id"], r["neighbor_id"]) for r in knn_bruteforce(
+    got = {(r["query_id"], r["neighbor_id"]) for r in knn(
+        emb, queries, k=5, codec=Projection(mean, comps),
+        vectors=emb).collect()}
+    truth = {(r["query_id"], r["neighbor_id"]) for r in knn(
         emb, queries, k=5).collect()}
     recall = len(got & truth) / len(truth)
     assert recall >= 0.85, recall

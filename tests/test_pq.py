@@ -5,8 +5,8 @@
   the drop-vs-NULL contract for unservable rows;
 - pq_decode reconstruction: full dimension, every subspace slice is a
   verbatim codeword of its codebook, NULL codes decode to NULL;
-- knn_pq_adc: exact at m = |corpus| (re-rank covers everything), recall
-  monotone in the candidate budget, guard rails.
+- knn with the PQ codec: exact at m = |corpus| (re-rank covers
+  everything), recall monotone in the candidate budget, guard rails.
 
 The persisted IVF-PQ index (write → serve, partition pruning) runs for
 both codecs in tests/test_index_maintenance.py.
@@ -104,7 +104,7 @@ def test_pq_decode_reconstruction(spark):
 
 def test_knn_pq_adc_exact_at_full_budget_and_monotone(spark):
     from eirepolitic_data_pipeline_spark.operators.similarity import (
-        knn_bruteforce, knn_pq_adc)
+        PQ, knn)
     from eirepolitic_data_pipeline_spark.operators.vectors import (
         pq_encode, pq_fit)
     emb = _emb(spark)
@@ -114,14 +114,14 @@ def test_knn_pq_adc_exact_at_full_budget_and_monotone(spark):
     queries = emb.filter(F.col("vec_id") < 8)
     k = 5
     exact = sorted((r["query_id"], r["neighbor_id"], r["rank"])
-                   for r in knn_bruteforce(emb, queries, k).collect())
+                   for r in knn(emb, queries, k).collect())
     truth = {(q, nb) for q, nb, _ in exact}
     with pytest.raises(ValueError, match="m"):
-        knn_pq_adc(codes, books, queries, k=5, m=3)
+        knn(codes, queries, k=5, codec=PQ(books), m=3)
     last = -1.0
     for m in (k, 4 * k, n):
-        got_rows = knn_pq_adc(codes, books, queries, k=k, m=m,
-                              vectors=emb).collect()
+        got_rows = knn(codes, queries, k=k, codec=PQ(books), m=m,
+                       vectors=emb).collect()
         got = {(r["query_id"], r["neighbor_id"]) for r in got_rows}
         recall = len(got & truth) / len(truth)
         assert recall >= last, (m, recall, last)
@@ -129,20 +129,20 @@ def test_knn_pq_adc_exact_at_full_budget_and_monotone(spark):
     assert last == 1.0
     # at m = |corpus| the full (id, rank) ordering matches brute force
     full = sorted((r["query_id"], r["neighbor_id"], r["rank"])
-                  for r in knn_pq_adc(codes, books, queries, k=k, m=n,
-                                      vectors=emb).collect())
+                  for r in knn(codes, queries, k=k, codec=PQ(books), m=n,
+                               vectors=emb).collect())
     assert full == exact
     # vectors=None returns the compressed ranking, rank <= k
-    approx = knn_pq_adc(codes, books, queries, k=3).collect()
+    approx = knn(codes, queries, k=3, codec=PQ(books)).collect()
     assert approx and all(r["rank"] <= 3 for r in approx)
 
 
 def test_knn_ivf_adc_all_probes_equals_knn_pq_adc(spark):
     """Probing every coarse cell degenerates the full IVFPQ composition
-    to the exhaustive PQ scan — the knn_ivf_pq/knn_quantized_rerank
-    relationship, held for the real-PQ codec."""
+    to the exhaustive PQ scan — the int8 IVF/exhaustive relationship,
+    held for the real-PQ codec."""
     from eirepolitic_data_pipeline_spark.operators.similarity import (
-        knn_ivf_adc, knn_pq_adc)
+        PQ, StoredCells, knn)
     from eirepolitic_data_pipeline_spark.operators.vectors import (
         IVFPQModel, ivf_pq_encode, kmeans_fit, pq_fit)
     emb = _emb(spark)
@@ -151,16 +151,20 @@ def test_knn_ivf_adc_all_probes_equals_knn_pq_adc(spark):
     codes = ivf_pq_encode(emb, model)
     queries = emb.filter(F.col("vec_id") < 5)
     got = sorted((r["query_id"], r["neighbor_id"], r["rank"])
-                 for r in knn_ivf_adc(codes, model, queries, k=5, m=10,
-                                      nprobe=4, vectors=emb).collect())
+                 for r in knn(codes, queries, k=5, codec=model,
+                              quantizer=StoredCells(model.centroids,
+                                                    nprobe=4),
+                              m=10, vectors=emb).collect())
     want = sorted((r["query_id"], r["neighbor_id"], r["rank"])
-                  for r in knn_pq_adc(codes, books, queries, k=5, m=10,
-                                      vectors=emb).collect())
+                  for r in knn(codes, queries, k=5, codec=PQ(books), m=10,
+                               vectors=emb).collect())
     assert got == want and len(got) > 0
     # the nprobe=1 cut returns at most k rows per query and m < k raises
     with pytest.raises(ValueError, match="m"):
-        knn_ivf_adc(codes, model, queries, k=5, m=3)
-    out = knn_ivf_adc(codes, model, queries, k=3, nprobe=1).collect()
+        knn(codes, queries, k=5, codec=model,
+            quantizer=StoredCells(model.centroids), m=3)
+    out = knn(codes, queries, k=3, codec=model,
+              quantizer=StoredCells(model.centroids, nprobe=1)).collect()
     per_q = {}
     for r in out:
         per_q.setdefault(r["query_id"], []).append(r["neighbor_id"])

@@ -7,7 +7,7 @@
   residual subtraction + subspace encoding into one kernel pass,
   parity-pinned to the literal composition (centroid_cells + zip_with
   subtract + pq_codes);
-- ``knn_ivf_adc`` over a residual model serves from (vec_id, codes,
+- ``knn`` with a residual model as codec serves from (vec_id, codes,
   cell) with reconstruction = centroid[cell] + decode(codes),
   degenerating to exact brute force at full probe/candidate budget;
 - the residual codebooks reconstruct strictly closer than the flat
@@ -113,7 +113,7 @@ def test_encode_kernel_matches_literal_composition(spark, models):
 
 def test_residual_serving_exact_at_full_budget(spark, models):
     from eirepolitic_data_pipeline_spark.operators.similarity import (
-        knn_bruteforce, knn_ivf_adc)
+        StoredCells, knn)
     from eirepolitic_data_pipeline_spark.operators.vectors import (
         ivf_pq_encode)
     emb, model = models
@@ -121,17 +121,21 @@ def test_residual_serving_exact_at_full_budget(spark, models):
     codes = ivf_pq_encode(emb, model)
     queries = emb.filter(F.col("vec_id") < 5)
     got = sorted((r["query_id"], r["neighbor_id"], r["rank"])
-                 for r in knn_ivf_adc(
-                     codes, model, queries, k=5, m=n,
-                     nprobe=len(model.centroids), vectors=emb).collect())
+                 for r in knn(
+                     codes, queries, k=5, codec=model,
+                     quantizer=StoredCells(model.centroids,
+                                           nprobe=len(model.centroids)),
+                     m=n, vectors=emb).collect())
     want = sorted((r["query_id"], r["neighbor_id"], r["rank"])
-                  for r in knn_bruteforce(emb, queries, 5).collect())
+                  for r in knn(emb, queries, 5).collect())
     assert got == want and len(got) > 0
     # guard rails shared with the family
     with pytest.raises(ValueError, match="m"):
-        knn_ivf_adc(codes, model, queries, k=5, m=3)
+        knn(codes, queries, k=5, codec=model,
+            quantizer=StoredCells(model.centroids), m=3)
     # single-stage compressed serving at nprobe=1
-    out = knn_ivf_adc(codes, model, queries, k=3, nprobe=1).collect()
+    out = knn(codes, queries, k=3, codec=model,
+              quantizer=StoredCells(model.centroids, nprobe=1)).collect()
     assert out and all(r["rank"] <= 3 for r in out)
 
 

@@ -7,14 +7,11 @@
    persist, so the build must leave the input frame's storage level
    exactly as it found it — pinned or not (these two tests pin the
    no-touch contract from both sides).
-2. ann_recall rejects frame_bucketer without a matching bucketer —
-   the corpus/query identical-keying contract becomes a loud
-   ValueError instead of silent recall 0 everywhere (r9 ADVICE).
-3. The PQ codec trio's model guard validates EVERY subspace: ragged
+2. The PQ codec trio's model guard validates EVERY subspace: ragged
    or degenerate models ([[[]]], differing codeword counts, differing
    codeword widths) raise instead of silently NULL-coding or dropping
    every row (r9 ADVICE).
-4. knn_ivf_pq_index coerces probe cells to the index's actual cell
+3. knn_ivf_pq_index coerces probe cells to the index's actual cell
    column dtype, so the partition filter stays a native typed
    predicate whether the partition column is read back as int
    (default inference) or string (inference disabled) — and both
@@ -84,20 +81,6 @@ def test_write_index_releases_its_own_pin(spark, tmp_path):
         "(the fused one-pass build takes no pin at all)")
 
 
-def test_ann_recall_frame_bucketer_requires_bucketer(spark):
-    from eirepolitic_data_pipeline_spark.operators.similarity import (
-        ann_recall, centroid_cells_frame)
-    from eirepolitic_data_pipeline_spark.operators.vectors import kmeans_fit
-    emb = _well_formed_emb(spark)
-    cents = kmeans_fit(emb, k=4, iters=1)
-    queries = emb.filter(F.col("vec_id") < 4)
-    with pytest.raises(ValueError, match="bucketer"):
-        ann_recall(emb, queries, k=3,
-                   frame_bucketer=lambda df, i, v, out:
-                       centroid_cells_frame(df, cents, id_col=i,
-                                            vec_col=v, cell_col=out))
-
-
 @pytest.mark.parametrize("bad, why", [
     ([[[]]], "empty codeword"),
     ([[[1.0, 2.0]], [[1.0, 2.0], [3.0, 4.0]]], "ragged codeword count"),
@@ -122,17 +105,20 @@ def test_index_probe_filter_matches_cell_dtype(spark, tmp_path):
     inference disabled — both serve the in-memory composition's exact
     rows and both keep the probe set in PartitionFilters."""
     from eirepolitic_data_pipeline_spark.operators.similarity import (
-        knn_ivf_adc, knn_ivf_pq_index, write_ivf_pq_index)
+        StoredCells, knn, knn_ivf_pq_index, write_ivf_pq_index)
     from eirepolitic_data_pipeline_spark.operators.vectors import (
         ivf_pq_encode)
     emb, model = _emb_and_model(spark)
     path = str(tmp_path / "idx_dtype")
     write_ivf_pq_index(emb, model, path)
     queries = emb.filter(F.col("vec_id") < 5)
-    kw = dict(k=5, m=10, nprobe=2, vectors=emb)
+    kw = dict(k=5, m=10, vectors=emb)
     want = sorted((r["query_id"], r["neighbor_id"], r["rank"])
-                  for r in knn_ivf_adc(ivf_pq_encode(emb, model), model,
-                                       queries, **kw).collect())
+                  for r in knn(ivf_pq_encode(emb, model), queries,
+                               codec=model,
+                               quantizer=StoredCells(model.centroids,
+                                                     nprobe=2),
+                               **kw).collect())
     conf = "spark.sql.sources.partitionColumnTypeInference.enabled"
     prev = spark.conf.get(conf, "true")
     try:
@@ -142,7 +128,7 @@ def test_index_probe_filter_matches_cell_dtype(spark, tmp_path):
             index = spark.read.parquet(path)
             assert (index.schema["cell"].dataType.simpleString()
                     == expected_type)
-            out = knn_ivf_pq_index(index, model, queries, **kw)
+            out = knn_ivf_pq_index(index, model, queries, nprobe=2, **kw)
             got = sorted((r["query_id"], r["neighbor_id"], r["rank"])
                          for r in out.collect())
             assert got == want and len(got) > 0, inference

@@ -33,7 +33,8 @@ def test_merge_writer_new_table_after_promote(spark, tmp_path):
     df = spark.createDataFrame([(1, "x")], "k long, v string")
     writer.write(df, "members", pol, batch_id="b1")
     catalog.promote("b1", ["members"])
-    merged = writer.write(df, "photos", pol, batch_id="b2")  # NEW table
+    writer.write(df, "photos", pol, batch_id="b2")  # NEW table
+    merged = catalog.read_table(spark, "photos", batch_id="b2")
     assert merged.count() == 1
     # b2 drops "members" from production — promote's shrink guard must be
     # explicitly overridden for this deliberate retirement

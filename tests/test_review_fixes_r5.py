@@ -46,8 +46,9 @@ def test_antijoin_fast_path_requires_history_provenance(spark, tmp_path):
     catalog.promote("b1", ["fact"])
 
     delta = spark.createDataFrame([(2, "c2"), (3, "d")], "k long, v string")
-    merged = writer.write(delta, "fact", upsert_pol, batch_id="b2",
-                          bucket_by=("k",), num_buckets=4)
+    writer.write(delta, "fact", upsert_pol, batch_id="b2",
+                 bucket_by=("k",), num_buckets=4)
+    merged = catalog.read_table(spark, "fact", batch_id="b2")
     rows = {tuple(r) for r in merged.collect()}
     # window form ran: the duplicate k=1 history rows collapsed to one
     assert sorted(k for k, _ in rows) == [1, 2, 3]
@@ -60,11 +61,10 @@ def test_antijoin_fast_path_requires_history_provenance(spark, tmp_path):
 def test_antijoin_fast_path_engages_with_provenance(spark, tmp_path):
     """Counterpart to the fallback test: history whose manifest records the
     matching merge_pk provenance DOES take the anti-join form — the gate
-    must not degrade every bucketed merge to the window shape. (The
-    returned frame is the committed re-read, so the join shape is read off
-    the writer's last_merge_form hook, not the result's plan; the
-    zero-Exchange plan property is asserted directly on
-    merge_upsert_antijoin in test_bucketing.)"""
+    must not degrade every bucketed merge to the window shape. (The join
+    shape is read off the writer's last_merge_form hook; the zero-Exchange
+    plan property is asserted directly on merge_upsert_antijoin in
+    test_bucketing.)"""
     catalog = BatchCatalog(root=str(tmp_path / "wh"))
     writer = MergeWriter(catalog=catalog, spark=spark)
     pol = WritePolicy(mode="upsert", primary_key=("k",))
@@ -76,8 +76,9 @@ def test_antijoin_fast_path_engages_with_provenance(spark, tmp_path):
     catalog.promote("b1", ["fact"])
 
     delta = spark.createDataFrame([(2, "b2")], "k long, v string")
-    merged = writer.write(delta, "fact", pol, batch_id="b2",
-                          bucket_by=("k",), num_buckets=4)
+    writer.write(delta, "fact", pol, batch_id="b2",
+                 bucket_by=("k",), num_buckets=4)
+    merged = catalog.read_table(spark, "fact", batch_id="b2")
     assert writer.last_merge_form == "antijoin"
     assert {tuple(r) for r in merged.collect()} == {(1, "a"), (2, "b2")}
 
@@ -143,14 +144,11 @@ def test_append_first_write_keeps_duplicates(spark):
 
 
 def test_string_ids_through_pandas_kernels(spark):
-    """The mapInPandas kernels must derive the id type from the input
-    frame — a hardcoded 'long' crashes Arrow conversion for string ids."""
-    import pandas as pd
-
+    """The Arrow kernels must derive the id type from the input frame — a
+    hardcoded 'long' crashes Arrow conversion for string ids."""
     from eirepolitic_data_pipeline_spark.operators.dedupe import (
         winnowed_fingerprint_frame)
-    from eirepolitic_data_pipeline_spark.operators.similarity import (
-        knn_bruteforce_pandas)
+    from eirepolitic_data_pipeline_spark.operators.similarity import knn
     docs = spark.createDataFrame(
         [("doc-a", "the quick brown fox jumps over the lazy dog")],
         "doc_id string, text string")
@@ -160,8 +158,8 @@ def test_string_ids_through_pandas_kernels(spark):
     vecs = spark.createDataFrame(
         [("v1", [1.0, 0.0]), ("v2", [0.8, 0.2])],
         "vec_id string, embedding array<double>")
-    queries = pd.DataFrame({"vec_id": ["v1"], "embedding": [[1.0, 0.0]]})
-    rows = knn_bruteforce_pandas(vecs, queries, k=1).collect()
+    queries = vecs.filter(F.col("vec_id") == "v1")
+    rows = knn(vecs, queries, k=1).collect()
     assert rows[0]["neighbor_id"] == "v2"
 
 
@@ -222,16 +220,15 @@ def test_min_label_components_raises_on_nonconvergence(spark):
 
 
 def test_knn_lsh_pluggable_bucketer(spark):
-    """hashed_projection_bucket must be usable through knn_lsh's bucketer
-    hook (multiprobe bit flips operate on its output too)."""
+    """hashed_projection_bucket must be usable as the SignLSH quantizer's
+    bucket (multiprobe bit flips operate on its output too)."""
     from eirepolitic_data_pipeline_spark.operators.similarity import (
-        hashed_projection_bucket, knn_lsh)
+        SignLSH, knn)
     rows = [(1, [1.0, 0.5]), (2, [0.9, 0.4]), (3, [-1.0, -0.5])]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     q = df.filter("vec_id = 1")
-    got = knn_lsh(df, q, k=2, n_bits=4, multiprobe=True,
-                  bucketer=lambda c, n: hashed_projection_bucket(
-                      c, dim=2, n_planes=n))
+    got = knn(df, q, k=2,
+              quantizer=SignLSH(n_bits=4, probe_flips=True, dim=2))
     assert got.filter("query_id = 1").count() >= 1
 
 
@@ -612,23 +609,19 @@ def test_curate_empty_partitioned_output_stays_readable(spark, tmp_path):
     assert "split" in back.columns and back.count() == 0
 
 
-def test_curate_corpus_persist_stages_opt_out(spark):
-    """persist_stages=False keeps the composition cache-free for callers
-    managing their own materialization (same rows out). Asserted on the
-    result's own plan — an InMemoryRelation can only appear there if a
-    stage boundary was cached (global persisted-RDD counts are perturbed
-    by min_label_components' internal persist/localCheckpoint and the
-    context cleaner, so they are not a stable signal)."""
+def test_curate_corpus_persists_stage_boundaries(spark):
+    """curate_corpus caches its stage boundaries and keeps every row.
+    Asserted on the result's own plan — an InMemoryRelation can only
+    appear there if a stage boundary was cached (global persisted-RDD
+    counts are perturbed by min_label_components' internal
+    persist/localCheckpoint and the context cleaner, so they are not a
+    stable signal)."""
     from eirepolitic_data_pipeline_spark.operators.curation import curate_corpus
     rows = [(i, f"alpha beta gamma delta epsilon doc{i}", "s")
             for i in range(6)]
     docs = spark.createDataFrame(
         rows, "doc_id long, text string, source string")
-    res = curate_corpus(docs, persist_stages=False)
-    plan = res._jdf.queryExecution().optimizedPlan().toString()
-    assert "InMemoryRelation" not in plan
-    assert {r["doc_id"] for r in res.collect()} == set(range(6))
-    cached = curate_corpus(docs, persist_stages=True)
+    cached = curate_corpus(docs)
     plan_cached = cached._jdf.queryExecution().optimizedPlan().toString()
     assert "InMemoryRelation" in plan_cached
     assert {r["doc_id"] for r in cached.collect()} == set(range(6))
@@ -760,8 +753,9 @@ def test_fast_path_falls_back_on_null_composite_pk(spark, tmp_path):
     catalog.promote("b1", ["t"])
     delta = spark.createDataFrame([(1, None, "new")],
                                   "a long, b string, v string")
-    got = writer.write(delta, "t", pol, batch_id="b2",
-                       bucket_by=("a", "b"), num_buckets=4)
+    writer.write(delta, "t", pol, batch_id="b2",
+                 bucket_by=("a", "b"), num_buckets=4)
+    got = catalog.read_table(spark, "t", batch_id="b2")
     rows = {(r["a"], r["b"]): r["v"] for r in got.collect()}
     assert rows == {(1, None): "new", (2, "x"): "old"}
 

@@ -109,7 +109,7 @@ def test_null_embedding_never_a_bucket_candidate(spark):
     outright. The bucket functions now map NULL vectors to NULL buckets,
     which every equi-join drops."""
     from eirepolitic_data_pipeline_spark.operators.similarity import (
-        hashed_projection_bucket, knn_lsh, sign_lsh_bucket)
+        SignLSH, hashed_projection_bucket, knn, sign_lsh_bucket)
     # query 0 is all-negative -> bucket '000...'; the only other row in
     # that bucket used to be the NULL vector
     emb = spark.createDataFrame(
@@ -117,7 +117,8 @@ def test_null_embedding_never_a_bucket_candidate(spark):
          (1, None),
          (2, [1.0, 1.0, 1.0, 1.0, 1.0, 1.0])],
         "vec_id long, embedding array<double>")
-    got = knn_lsh(emb, emb.filter("vec_id = 0"), k=3).collect()
+    got = knn(emb, emb.filter("vec_id = 0"), k=3,
+              quantizer=SignLSH()).collect()
     assert [r["neighbor_id"] for r in got] == []  # 990004-class row gone
     buckets = {r["vec_id"]: (r["b1"], r["b2"]) for r in emb.select(
         "vec_id",

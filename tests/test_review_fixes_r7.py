@@ -25,7 +25,6 @@
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 
@@ -85,12 +84,12 @@ def test_ann_recall_exact_on_split_bucket(spark):
     nearest neighbor from its query: recall must be BELOW 1.0 for exactly
     that query, and the brute-force/approx bookkeeping must be exact."""
     from eirepolitic_data_pipeline_spark.operators.similarity import (
-        ann_recall)
+        SignLSH, ann_recall)
 
     # q0 = (1, eps): true top-2 are id 1 (identical direction) and id 2.
     # id 1 sits in bucket '10' with q0; id 2 = (1, -eps) sits in '10'?
     # No: sign bits of (1, -0.1) -> '10' vs (1, 0.1) -> '11'. So id 2's
-    # bucket differs from q0's; single-probe misses it, multiprobe=False.
+    # bucket differs from q0's; single-probe misses it without bit flips.
     df = spark.createDataFrame(
         [(0, [1.0, 0.1]),
          (1, [0.9, 0.09]),    # same direction as q0 -> cosine ~1, bucket 11
@@ -99,12 +98,13 @@ def test_ann_recall_exact_on_split_bucket(spark):
          (4, [-1.0, 1.0])],   # far away, bucket 01
         "vec_id int, embedding array<double>")
     queries = df.filter(F.col("vec_id") == 0)
-    out = ann_recall(df, queries, k=2, n_bits=2, multiprobe=False)
+    out = ann_recall(df, queries, k=2, quantizer=SignLSH(n_bits=2))
     r = out.collect()[0]
     # true top-2 of q0: ids 1 and 2; bucket '11' holds only id 1
     assert r["n_true"] == 2 and r["n_hit"] == 1 and r["recall"] == 0.5
     # multiprobe flips one bit: bucket '10' (id 2) is now probed too
-    out2 = ann_recall(df, queries, k=2, n_bits=2, multiprobe=True)
+    out2 = ann_recall(df, queries, k=2,
+                      quantizer=SignLSH(n_bits=2, probe_flips=True))
     r2 = out2.collect()[0]
     assert r2["n_hit"] == 2 and r2["recall"] == 1.0
 
@@ -328,36 +328,23 @@ def test_ivf_nprobe_recall_dominates_single_cell(spark):
     shape) pointwise on the fixture."""
     from conftest import SF_SMOKE
     from eirepolitic_data_pipeline_spark.operators.similarity import (
-        ann_recall, ivf_grid_cells, ivf_probe_cells)
+        Grid, ann_recall)
     from eirepolitic_data_pipeline_spark.workload.registry import spread, t
 
     emb = (spread(t(spark, SF_SMOKE, "embeddings"))
            .filter(F.size("embedding") >= 2))
     queries = emb.filter(F.col("vec_id") < 10)
-    buck = lambda c, n: ivf_grid_cells(c, grid=4, dims=2)  # noqa: E731
     one = {r["query_id"]: r["recall"] for r in
-           ann_recall(emb, queries, k=5, multiprobe=False,
-                      bucketer=buck).collect()}
+           ann_recall(emb, queries, k=5,
+                      quantizer=Grid()).collect()}
     nine = {r["query_id"]: r["recall"] for r in
-            ann_recall(emb, queries, k=5, multiprobe=False, bucketer=buck,
-                       prober=lambda b: ivf_probe_cells(b, dims=2)
-                       ).collect()}
+            ann_recall(emb, queries, k=5,
+                       quantizer=Grid(ring=True)).collect()}
     assert set(one) == set(nine)
     assert all(nine[q] >= one[q] for q in one)
     # the ring must actually buy something on this fixture, else the
     # dominance check is vacuous
     assert sum(nine.values()) > sum(one.values())
-
-
-def test_knn_lsh_rejects_multiprobe_plus_prober(spark):
-    from eirepolitic_data_pipeline_spark.operators.similarity import (
-        ivf_probe_cells, knn_lsh)
-
-    df = spark.createDataFrame([(1, [0.5, 0.5])],
-                               "vec_id int, embedding array<double>")
-    with pytest.raises(ValueError, match="mutually exclusive"):
-        knn_lsh(df, df, k=1, multiprobe=True,
-                prober=lambda b: ivf_probe_cells(b))
 
 
 # ---------------------------------------------------------------------------
@@ -389,28 +376,6 @@ def test_ivf_probe_cells_null_on_arity_mismatch(spark):
     rows = df.select(ivf_probe_cells(F.col("cell"), dims=2).alias("p")) \
         .collect()
     assert rows[0]["p"] is None and rows[1]["p"] is None
-
-
-def test_ann_recall_prober_alone_implies_single_probe(spark):
-    """Passing prober without touching multiprobe must work (the default
-    resolves to single-probe); an explicit multiprobe=True still
-    raises."""
-    from eirepolitic_data_pipeline_spark.operators.similarity import (
-        ann_recall, ivf_grid_cells, ivf_probe_cells)
-
-    df = spark.createDataFrame(
-        [(0, [1.0, 0.1]), (1, [0.9, 0.09]), (2, [1.0, -0.1]),
-         (3, [-1.0, -1.0])],
-        "vec_id int, embedding array<double>")
-    queries = df.filter(F.col("vec_id") == 0)
-    out = ann_recall(df, queries, k=2,
-                     bucketer=lambda c, n: ivf_grid_cells(c, 4, 2),
-                     prober=lambda b: ivf_probe_cells(b, dims=2)).collect()
-    assert len(out) == 1 and out[0]["n_true"] == 2
-    with pytest.raises(ValueError, match="mutually exclusive"):
-        ann_recall(df, queries, k=2, multiprobe=True,
-                   bucketer=lambda c, n: ivf_grid_cells(c, 4, 2),
-                   prober=lambda b: ivf_probe_cells(b, dims=2)).collect()
 
 
 def test_kmeans_excludes_null_element_vectors(spark):

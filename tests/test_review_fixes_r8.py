@@ -3,8 +3,8 @@
 1. centroid_cells / centroid_probe_ranks: the trained-centroid IVF
    quantizer agrees with kmeans_assign on the same model, NULL-guards
    malformed vectors, and ranks probes home-first / pairwise-distinct.
-2. knn_lsh's vector_prober seam: mutual exclusion with the other probe
-   expansions, and end-to-end candidate generation through it.
+2. the Centroids quantizer's nprobe: end-to-end candidate generation
+   through ``knn``.
 3. ann_recall's universe contract (ADVICE r7): corpus rows the bucketer
    can't key are excluded from brute-force truth too, so recall is no
    longer silently depressed by structurally unreachable rows; NULL-bucket
@@ -115,28 +115,14 @@ def test_centroid_probe_ranks_home_first_distinct(spark):
 
 
 # ---------------------------------------------------------------------------
-# 2: vector_prober seam
+# 2: Centroids quantizer probes
 # ---------------------------------------------------------------------------
 
-def test_knn_lsh_probe_expansions_mutually_exclusive(spark):
-    from eirepolitic_data_pipeline_spark.operators.similarity import (
-        centroid_probe_ranks, ivf_probe_cells, knn_lsh)
-    df = spark.createDataFrame([(0, [0.1, 0.2]), (1, [0.3, 0.4])],
-                               "vec_id long, embedding array<double>")
-    vp = lambda qv: centroid_probe_ranks(qv, _toy_model(), 2)  # noqa: E731
-    pr = lambda b: ivf_probe_cells(b, dims=2)  # noqa: E731
-    for kwargs in ({"multiprobe": True, "vector_prober": vp},
-                   {"prober": pr, "vector_prober": vp},
-                   {"multiprobe": True, "prober": pr}):
-        with pytest.raises(ValueError, match="mutually exclusive"):
-            knn_lsh(df, df, k=1, **kwargs)
-
-
 def test_knn_lsh_vector_prober_end_to_end(spark):
-    """Through the trained quantizer + vector prober, a query in one
-    cluster reaches neighbors in its nprobe-nearest clusters only."""
+    """Through the trained quantizer and its nprobe ranking, a query in
+    one cluster reaches neighbors in its nprobe-nearest clusters only."""
     from eirepolitic_data_pipeline_spark.operators.similarity import (
-        centroid_cells, centroid_probe_ranks, knn_lsh)
+        Centroids, knn)
     model = [[0.0, 1.0], [1.0, 0.0], [-1.0, 0.0]]
     # corpus: two vectors per cluster direction
     rows = [(0, [0.1, 1.0]), (1, [0.2, 0.9]),
@@ -144,10 +130,7 @@ def test_knn_lsh_vector_prober_end_to_end(spark):
             (4, [-1.0, 0.1]), (5, [-0.9, 0.2])]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     queries = df.filter("vec_id = 0")
-    out = knn_lsh(
-        df, queries, k=5, multiprobe=False,
-        bucketer=lambda c, n: centroid_cells(c, model),
-        vector_prober=lambda qv: centroid_probe_ranks(qv, model, nprobe=2))
+    out = knn(df, queries, k=5, quantizer=Centroids(model, nprobe=2))
     got = {r["neighbor_id"] for r in out.collect()}
     # home cluster (0: vecs 0,1) + nearest other centroid (1: vecs 2,3);
     # cluster 2 ([-1,0]) is the farthest centroid and is never probed
@@ -165,20 +148,20 @@ def test_ann_recall_excludes_unservable_rows_from_truth(spark):
     dropped it, silently depressing recall. A NULL-bucket QUERY emits no
     row at all."""
     from eirepolitic_data_pipeline_spark.operators.similarity import (
-        ann_recall)
+        SignLSH, ann_recall)
     rows = [(0, [1.0, 0.9]), (1, [0.9, 1.0]), (2, [0.8, 0.95]),
             (3, [0.97])]  # vec 3: near-identical direction but 1-dim
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     queries = df.filter("vec_id = 0")
-    out = ann_recall(df, queries, k=2, n_bits=2, multiprobe=False)
+    out = ann_recall(df, queries, k=2, quantizer=SignLSH(n_bits=2))
     rec = {r["query_id"]: r for r in out.collect()}
     # all well-formed rows share bucket '11', so the index returns the
     # exact truth set {1, 2}; row 3 must NOT occupy a truth slot
     assert rec[0]["n_true"] == 2 and rec[0]["n_hit"] == 2
     assert rec[0]["recall"] == 1.0
     # an unservable query (NULL bucket) emits no row rather than 0/0
-    out2 = ann_recall(df, df.filter("vec_id = 3"), k=2, n_bits=2,
-                      multiprobe=False)
+    out2 = ann_recall(df, df.filter("vec_id = 3"), k=2,
+                      quantizer=SignLSH(n_bits=2))
     assert out2.count() == 0
 
 
@@ -324,9 +307,9 @@ def test_knn_quantized_rerank_full_m_equals_bruteforce(spark):
     """With m = |corpus| the two-stage quantized path degenerates to the
     exact brute force: stage 1 keeps everything, stage 2 re-ranks all of
     it at full precision — so (query_id, neighbor_id, rank) must be
-    row-identical to knn_bruteforce."""
+    row-identical to the exhaustive knn."""
     from eirepolitic_data_pipeline_spark.operators.similarity import (
-        knn_bruteforce, knn_quantized_rerank)
+        Int8, knn)
     from eirepolitic_data_pipeline_spark.operators.vectors import (
         quantize_int8)
     emb = (spark.read.parquet(os.path.join(SF_SMOKE, "embeddings.parquet"))
@@ -337,10 +320,10 @@ def test_knn_quantized_rerank_full_m_equals_bruteforce(spark):
     queries = emb.filter(F.col("vec_id") < 5)
     quantized = quantize_int8(emb).select("vec_id", "scale", "qvec")
     got = sorted((r["query_id"], r["neighbor_id"], r["rank"])
-                 for r in knn_quantized_rerank(
-                     quantized, queries, k=5, m=n, vectors=emb).collect())
+                 for r in knn(quantized, queries, k=5, codec=Int8(), m=n,
+                              vectors=emb).collect())
     want = sorted((r["query_id"], r["neighbor_id"], r["rank"])
-                  for r in knn_bruteforce(emb, queries, 5).collect())
+                  for r in knn(emb, queries, 5).collect())
     assert got == want and len(got) > 0
 
 
@@ -349,7 +332,7 @@ def test_knn_quantized_rerank_guards_and_approx_path(spark):
     ranking (top-k of the dequantized scores), never more than k rows per
     query; zero-scale vectors score 0.0, not NaN."""
     from eirepolitic_data_pipeline_spark.operators.similarity import (
-        knn_quantized_rerank)
+        Int8, knn)
     from eirepolitic_data_pipeline_spark.operators.vectors import (
         quantize_int8)
     rows = [(0, [1.0, 0.0]), (1, [0.9, 0.1]), (2, [0.0, 1.0]),
@@ -358,12 +341,12 @@ def test_knn_quantized_rerank_guards_and_approx_path(spark):
     quantized = quantize_int8(emb).select("vec_id", "scale", "qvec")
     queries = emb.filter(F.col("vec_id") == 0)
     with pytest.raises(ValueError, match="m"):
-        knn_quantized_rerank(quantized, queries, k=5, m=3)
-    out = knn_quantized_rerank(quantized, queries, k=2).collect()
+        knn(quantized, queries, k=5, codec=Int8(), m=3)
+    out = knn(quantized, queries, k=2, codec=Int8()).collect()
     assert len(out) == 2
     assert [r["neighbor_id"] for r in sorted(out, key=lambda r: r["rank"])] \
         == [1, 2]
-    all3 = knn_quantized_rerank(quantized, queries, k=3, m=3).collect()
+    all3 = knn(quantized, queries, k=3, codec=Int8(), m=3).collect()
     zero = [r for r in all3 if r["neighbor_id"] == 3][0]
     assert zero["cosine"] == 0.0
 
@@ -387,10 +370,10 @@ def test_min_label_components_drops_null_endpoint_edges(spark):
 def test_knn_ivf_pq_all_probes_equals_quantized_rerank(spark):
     """Probing every centroid cell degenerates the IVF-PQ composition to
     the exhaustive compressed scan: with nprobe = k_centroids and the
-    same m, (query_id, neighbor_id, rank) must match knn_quantized_rerank
-    row-for-row."""
+    same m, (query_id, neighbor_id, rank) must match the exhaustive int8
+    knn row-for-row."""
     from eirepolitic_data_pipeline_spark.operators.similarity import (
-        knn_ivf_pq, knn_quantized_rerank)
+        Centroids, Int8, knn)
     from eirepolitic_data_pipeline_spark.operators.vectors import (
         kmeans_fit, quantize_int8)
     emb = (spark.read.parquet(os.path.join(SF_SMOKE, "embeddings.parquet"))
@@ -401,13 +384,12 @@ def test_knn_ivf_pq_all_probes_equals_quantized_rerank(spark):
     quantized = quantize_int8(emb).select("vec_id", "scale", "qvec")
     queries = emb.filter(F.col("vec_id") < 5)
     got = sorted((r["query_id"], r["neighbor_id"], r["rank"])
-                 for r in knn_ivf_pq(quantized, queries, k=5, m=10,
-                                     centroids=cents, nprobe=4,
-                                     vectors=emb).collect())
+                 for r in knn(quantized, queries, k=5, codec=Int8(),
+                              quantizer=Centroids(cents, nprobe=4), m=10,
+                              vectors=emb).collect())
     want = sorted((r["query_id"], r["neighbor_id"], r["rank"])
-                  for r in knn_quantized_rerank(
-                      quantized, queries, k=5, m=10,
-                      vectors=emb).collect())
+                  for r in knn(quantized, queries, k=5, codec=Int8(),
+                               m=10, vectors=emb).collect())
     assert got == want and len(got) > 0
 
 
@@ -416,7 +398,7 @@ def test_knn_ivf_pq_probe_cut_and_guards(spark):
     more than k rows per query, all from probed cells); m < k raises;
     vectors=None returns the compressed ranking."""
     from eirepolitic_data_pipeline_spark.operators.similarity import (
-        centroid_cells, knn_ivf_pq)
+        Centroids, Int8, centroid_cells, knn)
     from eirepolitic_data_pipeline_spark.operators.vectors import (
         kmeans_fit, quantize_int8)
     emb = (spark.read.parquet(os.path.join(SF_SMOKE, "embeddings.parquet"))
@@ -427,9 +409,10 @@ def test_knn_ivf_pq_probe_cut_and_guards(spark):
     quantized = quantize_int8(emb).select("vec_id", "scale", "qvec")
     queries = emb.filter(F.col("vec_id") < 5)
     with pytest.raises(ValueError, match="m"):
-        knn_ivf_pq(quantized, queries, k=5, m=3, centroids=cents)
-    out = knn_ivf_pq(quantized, queries, k=3, centroids=cents,
-                     nprobe=1).collect()
+        knn(quantized, queries, k=5, codec=Int8(),
+            quantizer=Centroids(cents), m=3)
+    out = knn(quantized, queries, k=3, codec=Int8(),
+              quantizer=Centroids(cents, nprobe=1)).collect()
     per_q = {}
     for r in out:
         per_q.setdefault(r["query_id"], []).append(r["neighbor_id"])

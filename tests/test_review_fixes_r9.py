@@ -3,21 +3,21 @@
 1. centroid_cells_frame (the Arrow-kernel frame bucketer) is
    row-identical to the centroid_cells literal expression on servable
    rows, and DROPS the rows the expression NULL-cells — the keying
-   contract ann_recall's frame_bucketer seam and knn_ivf_pq's index
-   build both rely on.
-2. ann_recall produces identical rows with and without the
-   frame_bucketer seam (q82's perf path changes no answer).
+   contract the Centroids quantizer's corpus keying relies on.
+2. ann_recall produces identical rows whether the corpus is keyed by
+   the kernel or the literal expression (q82's perf path changes no
+   answer).
 3. The kernel's ragged-dimension contract error carries the unique
    sentinel _fit matches on (ADVICE r8: matching the bare word "ragged"
    would re-classify unrelated worker failures).
-4. knn_quantized_rerank m-monotonicity: recall against brute-force
+4. int8-codec knn m-monotonicity: recall against brute-force
    truth is non-decreasing in m, and m = |corpus| recovers the exact
    top-k (the stress suite samples this at 200k; this pins it at
    fixture scale).
 5. Empty centroid models raise instead of fabricating cell '-1'
    through the flat-literal distance tree (r9 review).
-6. The whole compressed-serving family shares one k/m guard — the
-   hand-copies had drifted (knn_ivf_pq lost its k check; r9 review).
+6. Every codec and quantizer shares one k/m guard — the hand-copies
+   had drifted (the int8 IVF serve lost its k check; r9 review).
 """
 
 from __future__ import annotations
@@ -78,24 +78,28 @@ def test_centroid_cells_frame_matches_literal_expression(spark):
 
 def test_ann_recall_frame_bucketer_identical_rows(spark):
     """q82's kernel-bucketed corpus path is an answer-preserving swap."""
+    from dataclasses import dataclass
+
     from eirepolitic_data_pipeline_spark.operators.similarity import (
-        ann_recall, centroid_cells, centroid_cells_frame,
-        centroid_probe_ranks)
+        Centroids, ann_recall)
     from eirepolitic_data_pipeline_spark.operators.vectors import kmeans_fit
+
+    @dataclass(frozen=True)
+    class LiteralCentroids(Centroids):
+        """Keys the corpus with the literal centroid_cells expression."""
+
+        def key_corpus(self, frame, id_col, vec_col):
+            return frame, self.key(vec_col)
+
     emb = _well_formed_emb(spark)
     cents = kmeans_fit(emb, k=4, iters=1)
     queries = emb.filter(F.col("vec_id") < 8)
-    kw = dict(multiprobe=False,
-              bucketer=lambda c, n: centroid_cells(c, cents),
-              vector_prober=lambda qv: centroid_probe_ranks(
-                  qv, cents, nprobe=2))
-    base = sorted(map(tuple, ann_recall(emb, queries, k=5, **kw)
-                      .collect()))
+    base = sorted(map(tuple, ann_recall(
+        emb, queries, k=5, quantizer=LiteralCentroids(cents, nprobe=2))
+        .collect()))
     kernel = sorted(map(tuple, ann_recall(
-        emb, queries, k=5,
-        frame_bucketer=lambda df, i, v, out: centroid_cells_frame(
-            df, cents, id_col=i, vec_col=v, cell_col=out),
-        **kw).collect()))
+        emb, queries, k=5, quantizer=Centroids(cents, nprobe=2))
+        .collect()))
     assert kernel == base and len(base) > 0
 
 
@@ -121,7 +125,7 @@ def test_knn_quantized_rerank_recall_monotone_in_m(spark):
     larger m keeps a superset of candidates, and the exact re-rank can
     only improve with more candidates); m = |corpus| is exact."""
     from eirepolitic_data_pipeline_spark.operators.similarity import (
-        knn_bruteforce, knn_quantized_rerank)
+        Int8, knn)
     from eirepolitic_data_pipeline_spark.operators.vectors import (
         quantize_int8)
     emb = _well_formed_emb(spark)
@@ -130,13 +134,13 @@ def test_knn_quantized_rerank_recall_monotone_in_m(spark):
     queries = emb.filter(F.col("vec_id") < 8)
     k = 5
     truth = {(r["query_id"], r["neighbor_id"])
-             for r in knn_bruteforce(emb, queries, k).collect()}
+             for r in knn(emb, queries, k).collect()}
     assert truth
     last = -1.0
     for m in (k, 2 * k, 4 * k, n):
         got = {(r["query_id"], r["neighbor_id"])
-               for r in knn_quantized_rerank(quantized, queries, k=k, m=m,
-                                             vectors=emb).collect()}
+               for r in knn(quantized, queries, k=k, codec=Int8(), m=m,
+                            vectors=emb).collect()}
         recall = len(got & truth) / len(truth)
         assert recall >= last, (m, recall, last)
         last = recall
@@ -162,12 +166,12 @@ def test_empty_centroid_model_raises_not_fabricates(spark):
 
 
 def test_serving_family_shares_k_guard(spark):
-    """r9 review: knn_ivf_pq's hand-copied guard had lost the k >= 1
-    check (k=0 silently returned empty). The shared _resolve_m now
-    guards every member of the compressed-serving family."""
+    """r9 review: the int8 IVF serve's hand-copied guard had lost the
+    k >= 1 check (k=0 silently returned empty). The shared _resolve_m
+    now guards knn under every codec and quantizer, and the persisted
+    serve."""
     from eirepolitic_data_pipeline_spark.operators.similarity import (
-        knn_ivf_adc, knn_ivf_pq, knn_ivf_pq_index, knn_pq_adc,
-        knn_quantized_rerank)
+        PQ, Centroids, Int8, StoredCells, knn, knn_ivf_pq_index)
     from eirepolitic_data_pipeline_spark.operators.vectors import (
         IVFPQModel)
     df = spark.createDataFrame([(1, [0.1, 0.2])],
@@ -178,10 +182,12 @@ def test_serving_family_shares_k_guard(spark):
     books = [[[0.0], [1.0]], [[0.0], [1.0]]]
     model = IVFPQModel(cents, books)
     for call in (
-            lambda: knn_quantized_rerank(qz, df, k=0),
-            lambda: knn_pq_adc(qz, books, df, k=0),
-            lambda: knn_ivf_pq(qz, df, k=0, centroids=cents),
-            lambda: knn_ivf_adc(qz, model, df, k=0),
+            lambda: knn(qz, df, k=0, codec=Int8()),
+            lambda: knn(qz, df, k=0, codec=PQ(books)),
+            lambda: knn(qz, df, k=0, codec=Int8(),
+                        quantizer=Centroids(cents)),
+            lambda: knn(qz, df, k=0, codec=model,
+                        quantizer=StoredCells(cents)),
             lambda: knn_ivf_pq_index(qz, model, df, k=0)):
         with pytest.raises(ValueError, match="k must be >= 1"):
             call()

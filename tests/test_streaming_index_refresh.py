@@ -59,7 +59,7 @@ def _stream_dir(emb, tmp_path, name, splits=((100, 250), (250, 400))):
 
 def test_streamed_refresh_matches_full_rebuild(spark, models, tmp_path):
     from eirepolitic_data_pipeline_spark.operators.similarity import (
-        knn_ivf_adc, knn_ivf_pq_index, write_ivf_pq_index)
+        StoredCells, knn, knn_ivf_pq_index, write_ivf_pq_index)
     from eirepolitic_data_pipeline_spark.operators.vectors import (
         ivf_pq_encode)
     from eirepolitic_data_pipeline_spark.streaming.jobs import (
@@ -96,9 +96,12 @@ def test_streamed_refresh_matches_full_rebuild(spark, models, tmp_path):
     served = sorted((r["query_id"], r["neighbor_id"], r["rank"])
                     for r in out.collect())
     inmem = sorted((r["query_id"], r["neighbor_id"], r["rank"])
-                   for r in knn_ivf_adc(ivf_pq_encode(streamed_universe,
-                                                      model), model,
-                                        queries, **kw).collect())
+                   for r in knn(ivf_pq_encode(streamed_universe, model),
+                                queries, codec=model,
+                                quantizer=StoredCells(model.centroids,
+                                                      nprobe=2),
+                                k=5, m=10,
+                                vectors=streamed_universe).collect())
     assert served == inmem and len(served) > 0
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert any("PartitionFilters" in ln and "cell" in ln

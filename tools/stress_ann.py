@@ -74,8 +74,9 @@ What it checks:
     covariance; its eigenvalue sum must match an INDEPENDENT Catalyst
     per-coordinate variance aggregate (the trace); the projection
     kernel covers the corpus; and the PCA-reduced two-stage serving
-    path (``knn_pca_rerank``) holds its recall-vs-m envelope on the
-    rerank slice against the same exact set as the codec rows.
+    path (``knn`` with the ``Projection`` codec) holds its recall-vs-m
+    envelope on the rerank slice against the same exact set as the
+    codec rows.
 
 Rewrites only its own section of STRESS.md (``--out``); exits non-zero on
 any violated bound. Standalone; not part of the per-round bench.
@@ -98,9 +99,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from eirepolitic_data_pipeline_spark.operators.similarity import (  # noqa: E402
-    ann_recall, centroid_cells, centroid_cells_frame,
-    centroid_probe_ranks, hashed_projection_bucket, ivf_grid_cells,
-    knn_ivf_pq, knn_lsh, knn_quantized_rerank)
+    Centroids, Grid, Int8, SignLSH, ann_recall, centroid_cells_frame,
+    centroid_probe_ranks, knn)
 from eirepolitic_data_pipeline_spark.operators.vectors import (  # noqa: E402
     kmeans_fit, quantize_int8)
 from eirepolitic_data_pipeline_spark.session import get_spark  # noqa: E402
@@ -163,22 +163,19 @@ def main():
         # buckets land ~15% of the corpus per query while the hashed
         # planes stay in-bound — the stress pins the hashed-plane shape
         # a correlated production embedding space would serve with.
-        def bucketer(c, n):
-            return hashed_projection_bucket(c, dim=64, n_planes=n)
+        lsh = SignLSH(n_bits=N_BITS, probe_flips=True, dim=64)
 
         t0 = time.perf_counter()
         hist = (corpus
-                .select(bucketer(F.col("embedding"), N_BITS)
-                        .alias("bucket"))
+                .select(lsh.key(F.col("embedding")).alias("bucket"))
                 .groupBy("bucket").count().collect())
         sizes = {r["bucket"]: r["count"] for r in hist}
-        topk = knn_lsh(corpus, queries, K, n_bits=N_BITS, multiprobe=True,
-                       bucketer=bucketer)
+        topk = knn(corpus, queries, K, quantizer=lsh)
         per_query = (topk.groupBy("query_id")
                      .agg(F.count(F.lit(1)).alias("n")).collect())
         t_lsh = round(time.perf_counter() - t0, 1)
         qrows = {r["bucket"]: r["count"] for r in (
-            queries.select(bucketer(F.col("embedding"), N_BITS)
+            queries.select(lsh.key(F.col("embedding"))
                            .alias("bucket")).groupBy("bucket").count()
             .collect())}
 
@@ -233,19 +230,14 @@ def main():
         t0 = time.perf_counter()
         slc = kmeans_fit(sl, k=16, iters=1)
 
-        def mean_recall(**kw) -> float:
-            return (ann_recall(sl, qs, K, **kw)
+        def mean_recall(quantizer) -> float:
+            return (ann_recall(sl, qs, K, quantizer=quantizer)
                     .agg(F.avg("recall")).first()[0])
 
-        r_tr = mean_recall(multiprobe=False,
-                           bucketer=lambda c, n: centroid_cells(c, slc),
-                           vector_prober=lambda qv: centroid_probe_ranks(
-                               qv, slc, nprobe=3))
-        r_grid = mean_recall(multiprobe=False,
-                             bucketer=lambda c, n: ivf_grid_cells(
-                                 c, grid=4, dims=2))
-        r_multi = mean_recall(n_bits=8, multiprobe=True)
-        r_single = mean_recall(n_bits=8, multiprobe=False)
+        r_tr = mean_recall(Centroids(slc, nprobe=3))
+        r_grid = mean_recall(Grid())
+        r_multi = mean_recall(SignLSH(n_bits=8, probe_flips=True))
+        r_single = mean_recall(SignLSH(n_bits=8))
         t_rec = round(time.perf_counter() - t0, 1)
         rec_ok = r_tr >= r_grid and r_multi >= r_single
         if not rec_ok:
@@ -265,15 +257,13 @@ def main():
         t0 = time.perf_counter()
         quantized = quantize_int8(rl).select("vec_id", "scale", "qvec")
 
-        from eirepolitic_data_pipeline_spark.operators.similarity import (
-            knn_bruteforce)
         exact = {(r["query_id"], r["neighbor_id"])
-                 for r in knn_bruteforce(rl, rq, K).collect()}
+                 for r in knn(rl, rq, K).collect()}
 
         def rr_recall(m: int) -> float:
             got = {(r["query_id"], r["neighbor_id"])
-                   for r in knn_quantized_rerank(
-                       quantized, rq, K, m=m, vectors=rl).collect()}
+                   for r in knn(quantized, rq, K, codec=Int8(), m=m,
+                                vectors=rl).collect()}
             return len(got & exact) / len(exact)
 
         rec10 = rr_recall(10)
@@ -297,8 +287,9 @@ def main():
         t0 = time.perf_counter()
         rcents = kmeans_fit(rl, k=16, iters=1)
         got = {(r["query_id"], r["neighbor_id"])
-               for r in knn_ivf_pq(quantized, rq, K, centroids=rcents,
-                                   nprobe=2, m=40, vectors=rl).collect()}
+               for r in knn(quantized, rq, K, codec=Int8(),
+                            quantizer=Centroids(rcents, nprobe=2), m=40,
+                            vectors=rl).collect()}
         pq_recall = len(got & exact) / len(exact)
         # histogram via the Arrow assignment kernel (parity-pinned to the
         # centroid_cells expression, which is interpreted and ~100 s at
@@ -340,8 +331,7 @@ def main():
         # corpus while k=256 reconstructs to ~5% residual energy; the
         # capacity trade is a corpus property, which is exactly why the
         # codebooks are trained, not fixed.
-        from eirepolitic_data_pipeline_spark.operators.similarity import (
-            knn_pq_adc)
+        from eirepolitic_data_pipeline_spark.operators.similarity import PQ
         from eirepolitic_data_pipeline_spark.operators.vectors import (
             pq_encode, pq_fit)
         t0 = time.perf_counter()
@@ -350,8 +340,8 @@ def main():
 
         def pq_rr_recall(m: int) -> float:
             got = {(r["query_id"], r["neighbor_id"])
-                   for r in knn_pq_adc(codes, books, rq, K, m=m,
-                                       vectors=rl).collect()}
+                   for r in knn(codes, rq, K, codec=PQ(books), m=m,
+                                vectors=rl).collect()}
             return len(got & exact) / len(exact)
 
         pq10 = pq_rr_recall(10)
@@ -483,7 +473,7 @@ def main():
         # structure, so the codebooks spend their codewords on a
         # tighter cell of space).
         from eirepolitic_data_pipeline_spark.operators.similarity import (
-            knn_ivf_adc)
+            StoredCells)
         from eirepolitic_data_pipeline_spark.operators.vectors import (
             _residual_frame, _well_formed_vectors, ivf_pq_encode)
         t0 = time.perf_counter()
@@ -495,9 +485,10 @@ def main():
 
         def rpq_recall(m: int) -> float:
             got = {(r["query_id"], r["neighbor_id"])
-                   for r in knn_ivf_adc(
-                       codes_r, model_r, rq, K, nprobe=len(cents), m=m,
-                       vectors=rl).collect()}
+                   for r in knn(
+                       codes_r, rq, K, codec=model_r,
+                       quantizer=StoredCells(cents, nprobe=len(cents)),
+                       m=m, vectors=rl).collect()}
             return len(got & exact) / len(exact)
 
         rq10 = rpq_recall(10)
@@ -673,7 +664,7 @@ def main():
         # the variance, the regime where reduced-space cosine is
         # weakest).
         from eirepolitic_data_pipeline_spark.operators.similarity import (
-            knn_pca_rerank)
+            Projection)
         from eirepolitic_data_pipeline_spark.operators.vectors import (
             pca_fit, pca_project)
         t0 = time.perf_counter()
@@ -696,9 +687,9 @@ def main():
 
         def pca_recall(m: int) -> float:
             got = {(r["query_id"], r["neighbor_id"])
-                   for r in knn_pca_rerank(
-                       rl, rq, K, mean=p_mean, components=comps48,
-                       m=m).collect()}
+                   for r in knn(
+                       rl, rq, K, codec=Projection(p_mean, comps48), m=m,
+                       vectors=rl).collect()}
             return len(got & exact) / len(exact)
 
         t0 = time.perf_counter()
